@@ -1,73 +1,172 @@
 package graft.cluster
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Distributed connected components via the alternating
   * large-star / small-star algorithm [EXT] (north rule; the
   * Catalyst-planned-self-join formulation — Kiveris et al.,
-  * "Connected Components in MapReduce and Beyond", SoCC'14).
+  * "Connected Components in MapReduce and Beyond", SoCC'14), with a
+  * size-gated driver-side finisher.
   *
   * Node ids are STRINGS (urls): 64-bit surrogate ids would collide at
   * 10^12 nodes (birthday bound), so ordering is lexicographic and the
   * component id is the minimum member — which also mirrors the
   * reference CLI's alphabetical-min canonical rule (CLI.pm:282).
+  * "Minimum" is Spark's string order: unsigned UTF-8 bytes, not
+  * `String.compareTo`'s UTF-16 units.
   *
   * Each iteration is two shuffled group-by/join rounds over the
   * (shrinking, star-ifying) edge list; `localCheckpoint` cuts lineage
   * so the loop's plan doesn't grow (SURVEY §4.2).
+  *
+  * Size gate: whether to distribute follows the measured edge count
+  * ("To Partition, or Not to Partition", SIGMOD'21). The job that
+  * materializes an edge frame also counts it: at entry the oriented,
+  * loop- and null-free rows (duplicates included), after each
+  * iteration the star edges. A frame of at most `localBelow` rows
+  * comes back with that same job and is finished on the driver with
+  * union-find, so small graphs pay no star rounds and large ones skip
+  * their tail rounds. At most `localBelow` rows ever reach the driver,
+  * the bound a broadcast build side already has (SCALE.md invariant
+  * 4); the distributed rounds stay the scale path.
   */
 object ConnectedComponents {
 
+  /** Default gate: 2^16 edges (at most 2^17 ids) is tens of MB of
+    * driver heap, the order of a broadcast build side.
+    */
+  val LocalBelow: Int = 1 << 16
+
   /** edges: DataFrame(src, dst) string columns, undirected.
     * Returns (id, component) covering every endpoint; callers union
-    * isolated nodes themselves (component = own id).
+    * isolated nodes themselves (component = own id). Self-loops and
+    * null endpoints are dropped. `localBelow = 0` forces the purely
+    * distributed path. Throws `IllegalStateException` when the rounds
+    * do not converge within `maxIter` iterations.
     */
-  def run(edges: DataFrame, maxIter: Int = 25): DataFrame = {
-    var e = edges.select(col("src"), col("dst"))
+  def run(edges: DataFrame, maxIter: Int = 25, localBelow: Int = LocalBelow): DataFrame = {
+    // lazy localCheckpoint: the entry probe is the one job that
+    // materializes it (before iteration 1's two union branches could
+    // race to compute the uncached partitions). Not deduplicated here:
+    // the finisher is indifferent to duplicates, and smallStar's
+    // terminal distinct dedups iteration 1's output.
+    val canonical = edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst"))
       // canonical orientation matches the star outputs (src = greater,
       // dst = smaller) so the fixpoint compare sees stable sets
       .select(greatest(col("src"), col("dst")).as("src"),
         least(col("src"), col("dst")).as("dst"))
-      .distinct()
-      // EAGER deliberately (r6 A/B): lazy was measured worse — both
-      // union branches of iteration 1's sym race to compute the
-      // uncached partitions, doubling the edge-prep work
-      .localCheckpoint()
-
-    // convergence check: (count, order-independent xor-of-hashes)
-    // signature of the canonical edge set — one cheap aggregate per
-    // iteration instead of two full exceptAll shuffles
-    def signature(df: DataFrame): (Long, Long) = {
-      val r = df.agg(
-        count(lit(1)),
-        coalesce(expr("bit_xor(xxhash64(src, dst))"), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
+      .localCheckpoint(false)
+    val entry = probe(canonical, localBelow)
+    def log(path: String, atGate: Long, iter: Int): Unit =
+      if (sys.env.contains("SPARK_GRAFT_CC_LOG"))
+        System.err.println(s"[cc] path=$path edges_in=${entry.count} " +
+          s"edges_at_gate=$atGate local_below=$localBelow iterations=$iter")
+    if (entry.count <= localBelow) {
+      log("local", entry.count, 0)
+      return localLabels(canonical, entry)
     }
-    // lazy localCheckpoint: the signature aggregate materializes the
-    // iteration's edges — ONE job per iteration, not two. Iteration 1
-    // always changes (orientation/star-ification), so its convergence
-    // probe is skipped outright.
+    // each iteration's probe materializes its lazy checkpoint — ONE
+    // job per iteration — and its (count, xor) is both the convergence
+    // signature and the gate. Iteration 1 is never compared: the entry
+    // probe counted the rows before deduplication.
+    var e = canonical
     var sig = (-1L, 0L)
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
-      val ls = largeStar(e)
-      val ss = smallStar(ls).localCheckpoint(false)
-      val s2 = signature(ss)
-      converged = iter > 0 && s2 == sig
-      sig = s2
-      e = ss
+      e = smallStar(largeStar(e)).localCheckpoint(false)
+      val p = probe(e, localBelow)
+      converged = iter > 0 && (p.count, p.xor) == sig
+      sig = (p.count, p.xor)
       iter += 1
+      if (!converged && p.count <= localBelow) {
+        log(s"handoff@$iter", p.count, iter)
+        return localLabels(e, p)
+      }
     }
-    if (sys.env.contains("SPARK_GRAFT_CC_LOG"))
-      System.err.println(s"[cc] converged=$converged iterations=$iter")
+    if (!converged)
+      throw new IllegalStateException(s"ConnectedComponents did not converge in " +
+        s"$iter iterations: ${sig._1} of ${entry.count} canonical edges left")
+    log("distributed", sig._1, iter)
     // stars: dst is the root; every node maps to its root, roots to themselves
     val members = e.select(col("src").as("id"), col("dst").as("component"))
     val roots = e.select(col("dst").as("id"), col("dst").as("component")).distinct()
     members.unionByName(roots)
       .groupBy("id").agg(min(col("component")).as("component"))
+  }
+
+  /** One probe job over a canonical edge frame: its row count, the
+    * order-independent xor of its row hashes, and — when the count is
+    * within the gate — its rows as raw UTF-8 bytes (`pairs`). Each
+    * partition ships its rows only while within its share of the gate,
+    * so at most `localBelow` rows reach the driver; `pairs` is None
+    * when the count is over the gate or a skewed partition held its
+    * rows back.
+    */
+  private final case class Probe(count: Long, xor: Long, pairs: Option[Seq[(Array[Byte], Array[Byte])]])
+
+  private def probe(df: DataFrame, localBelow: Int): Probe = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val parts = df
+      .select(xxhash64(col("src"), col("dst")), col("src").cast("binary"), col("dst").cast("binary"))
+      .as[(Long, Array[Byte], Array[Byte])]
+      .mapPartitions { rows =>
+        val share = localBelow / TaskContext.get().numPartitions()
+        val kept = scala.collection.mutable.ArrayBuffer.empty[(Array[Byte], Array[Byte])]
+        var n = 0L
+        var x = 0L
+        rows.foreach { case (h, a, b) =>
+          n += 1
+          x ^= h
+          if (n <= share) kept += ((a, b))
+        }
+        Iterator.single((n, x, if (n <= share) Some(kept.toSeq) else None))
+      }
+      .collect()
+    val count = parts.map(_._1).sum
+    Probe(count, parts.map(_._2).foldLeft(0L)(_ ^ _),
+      if (count <= localBelow && parts.forall(_._3.isDefined)) Some(parts.flatMap(_._3.get).toSeq)
+      else None)
+  }
+
+  /** Driver-side finisher over at most `localBelow` edges (`p.pairs`,
+    * or one more collect of `e` when a skewed partition held its rows
+    * back): rank the ids in Spark's string order and union-find with
+    * the smaller rank always the root, so each root is its component's
+    * minimum member. Same (id, component) frame as the distributed
+    * extraction.
+    */
+  private def localLabels(e: DataFrame, p: Probe): DataFrame = {
+    val bytes = p.pairs.getOrElse(
+      e.select(col("src").cast("binary"), col("dst").cast("binary")).collect().toSeq
+        .map(r => (r.getAs[Array[Byte]](0), r.getAs[Array[Byte]](1))))
+    val pairs = bytes.map { case (a, b) => (UTF8String.fromBytes(a), UTF8String.fromBytes(b)) }
+    val ids = pairs.flatMap { case (a, b) => Seq(a, b) }.distinct.toArray
+      .sortWith(_.binaryCompare(_) < 0)
+    val rank = new java.util.HashMap[UTF8String, Integer](ids.length * 2)
+    ids.indices.foreach(i => rank.put(ids(i), i))
+    val parent = Array.range(0, ids.length)
+    def find(i: Int): Int = {
+      var r = i
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    pairs.foreach { case (a, b) =>
+      val ra = find(rank.get(a))
+      val rb = find(rank.get(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    val rows = java.util.Arrays.asList(
+      ids.indices.map(i => Row(ids(i).getBytes, ids(find(i)).getBytes)): _*)
+    val schema = StructType(Seq(StructField("id", BinaryType), StructField("component", BinaryType)))
+    e.sparkSession.createDataFrame(rows, schema)
+      .select(col("id").cast("string"), col("component").cast("string"))
   }
 
   /** Attach m(src) = min(dst) per src. SKEW-SAFE: a partial-aggregating

@@ -168,7 +168,6 @@ object DedupEngine {
   }
 
   private def keyCols(n: Int): Seq[Column] = (0 until n).map(i => col(s"__k$i"))
-  private def keyNames(n: Int): Seq[String] = (0 until n).map(i => s"__k$i")
 
   private def runEager(withId: DataFrame, cascade: Seq[DigestSpec]): DedupResult = {
     val n = cascade.length

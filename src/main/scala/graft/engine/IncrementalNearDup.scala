@@ -57,8 +57,13 @@ object IncrementalNearDup {
     // lazy checkpoint (r6): both snapshot views (band rows, shingle
     // sets) derive from one signature pass — unmaterialized, the
     // probe scan and the keeper-shingle fetch each re-shingled the
-    // prior corpus. In production the snapshot IS a persisted table;
-    // materializing here models that contract.
+    // prior corpus. Nothing is materialized here: the first job that
+    // reads either view computes and caches the signatures. With the
+    // default broadcastBatch, dedupAgainstSignatures' keeper-shingle
+    // fetch waits for the band probe's broadcast output, so the views
+    // are not computed concurrently; with broadcastBatch = false both
+    // join sides may start together and shingle the prior corpus
+    // twice. In production the snapshot IS a persisted table.
     val sigs = MinHashLSH.signatures(prior, cfg, textCol, idCol)
       .localCheckpoint(false)
     Snapshot(bandRows(sigs, cfg), sigs.select(col("id"), col("shingles")))

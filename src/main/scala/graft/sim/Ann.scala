@@ -264,16 +264,6 @@ object Ann {
     out.toDF("src", "dst", "skipped")
   }
 
-  /** Distinct candidate pairs (pairs-only view of
-    * [[candidatePairsAndSkips]]).
-    */
-  def candidatePairs(corpus: DataFrame, bits: Int, tables: Int, seed: Long,
-      idCol: String, vecCol: String, maxBucket: Int, salts: Int = 1): DataFrame =
-    candidatePairsAndSkips(corpus, bits, tables, seed, idCol, vecCol, maxBucket, salts)
-      .filter(col("src").isNotNull)
-      .select("src", "dst")
-      .distinct()
-
   /** Rows in over-capacity hyperplane buckets (skip metric — capped
     * AND surfaced, SCALE.md invariant 3). A view over
     * [[candidatePairsAndSkips]]'s skip rows, no separate code scan.

@@ -43,29 +43,82 @@ class CCSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSet == Set(1L, 3L))
   }
 
-  test("chain collapses to one component rooted at the min") {
-    val e = Seq(("b", "a"), ("c", "b"), ("d", "c"), ("e", "d")).toDF("src", "dst")
-    val cc = ConnectedComponents.run(e).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(cc == Map("a" -> "a", "b" -> "a", "c" -> "a", "d" -> "a", "e" -> "a"))
+  // each small case runs on the driver-side finisher (default gate)
+  // and on the purely distributed star rounds (gate 0); the default-
+  // gate names are the historical ones
+  for ((suffix, gate) <- Seq("" -> ConnectedComponents.LocalBelow,
+      " [distributed, localBelow = 0]" -> 0)) {
+    test("chain collapses to one component rooted at the min" + suffix) {
+      val e = Seq(("b", "a"), ("c", "b"), ("d", "c"), ("e", "d")).toDF("src", "dst")
+      val cc = ConnectedComponents.run(e, localBelow = gate).collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(cc == Map("a" -> "a", "b" -> "a", "c" -> "a", "d" -> "a", "e" -> "a"))
+    }
+
+    test("multiple components stay separate" + suffix) {
+      val e = Seq(("b", "a"), ("d", "c"), ("e", "d"), ("g", "f")).toDF("src", "dst")
+      val cc = ConnectedComponents.run(e, localBelow = gate).collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(cc("a") == "a" && cc("b") == "a")
+      assert(cc("c") == "c" && cc("d") == "c" && cc("e") == "c")
+      assert(cc("f") == "f" && cc("g") == "f")
+    }
+
+    test("cycle + duplicate + self-loop edges converge" + suffix) {
+      val e = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("a", "b"), ("a", "a")).toDF("src", "dst")
+      val cc = ConnectedComponents.run(e, localBelow = gate).collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(cc.values.toSet == Set("a") && cc.keySet == Set("a", "b", "c"))
+    }
+
+    test("star graph is already converged" + suffix) {
+      val e = Seq(("z1", "a"), ("z2", "a"), ("z3", "a")).toDF("src", "dst")
+      val cc = ConnectedComponents.run(e, localBelow = gate).collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(cc.values.toSet == Set("a") && cc.size == 4)
+    }
+
+    test("component label is the min under Spark's UTF-8 byte order" + suffix) {
+      // U+FFFD (EF BF BD) sorts before U+10000 (F0 90 80 80) in UTF-8
+      // bytes, but after it in UTF-16 units (FFFD vs D800 DC00)
+      val hi = "\uD800\uDC00"
+      val e = Seq(("\uFFFD", hi), (hi, "\uFFFDx")).toDF("src", "dst")
+      val cc = ConnectedComponents.run(e, localBelow = gate).collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(cc == Map("\uFFFD" -> "\uFFFD", hi -> "\uFFFD", "\uFFFDx" -> "\uFFFD"))
+    }
+
+    test("null endpoints are dropped, every other endpoint is labelled" + suffix) {
+      val e = Seq((Option("b"), Option("a")), (None, Option("c")), (Option("d"), None),
+        (Option("e"), Option("e"))).toDF("src", "dst")
+      val cc = ConnectedComponents.run(e, localBelow = gate).collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(cc == Map("a" -> "a", "b" -> "a"))
+    }
   }
 
-  test("multiple components stay separate") {
-    val e = Seq(("b", "a"), ("d", "c"), ("e", "d"), ("g", "f")).toDF("src", "dst")
-    val cc = ConnectedComponents.run(e).collect()
+  test("a skewed edge frame within the gate is still finished on the driver") {
+    // 10 edges at gate 10 over two input partitions of 8 and 2 rows:
+    // the 8-row partition is over its share (10 / 2) and holds its rows
+    // back, so the finisher collects the checkpointed frame once more
+    val chain = Seq("b", "c", "d", "e", "f", "g", "h", "i").zip(Seq("a", "b", "c", "d", "e", "f", "g", "h"))
+    val e = spark.sparkContext.parallelize(Seq(chain, Seq(("x", "y"), ("y", "z"))), 2)
+      .flatMap(identity).toDF("src", "dst")
+    assert(e.rdd.glom().map(_.length).collect().toSeq == Seq(8, 2))
+    val cc = ConnectedComponents.run(e, localBelow = 10).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(cc("a") == "a" && cc("b") == "a")
-    assert(cc("c") == "c" && cc("d") == "c" && cc("e") == "c")
-    assert(cc("f") == "f" && cc("g") == "f")
+    assert(cc == ("abcdefghi".map(c => c.toString -> "a") ++ "xyz".map(c => c.toString -> "x")).toMap)
   }
 
-  test("cycle + duplicate + self-loop edges converge") {
-    val e = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("a", "b"), ("a", "a")).toDF("src", "dst")
-    val cc = ConnectedComponents.run(e).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(cc.values.toSet == Set("a") && cc.keySet == Set("a", "b", "c"))
+  test("non-convergence within maxIter throws instead of returning partial labels") {
+    val e = (1 until 64).map(i => (f"c$i%02d", f"c${i - 1}%02d")).toDF("src", "dst")
+    val err = intercept[IllegalStateException] {
+      ConnectedComponents.run(e, maxIter = 1, localBelow = 0)
+    }
+    assert(err.getMessage.contains("1 iterations") && err.getMessage.contains("of 63"))
   }
 
+  // 100k edges is above the default gate: the distributed rounds run
   test("100k-member hub star converges without window skew (de-skewed min aggregate)") {
     import org.apache.spark.sql.functions._
     // one giant hub: every edge shares src "hub" — the shape that
@@ -76,13 +129,6 @@ class CCSpec extends SparkSpec {
     assert(cc.count() == 100001L)
     assert(cc.select("component").distinct().count() == 1L)
     assert(cc.select(min(col("component"))).head().getString(0) == "hub")
-  }
-
-  test("star graph is already converged") {
-    val e = Seq(("z1", "a"), ("z2", "a"), ("z3", "a")).toDF("src", "dst")
-    val cc = ConnectedComponents.run(e).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(cc.values.toSet == Set("a") && cc.size == 4)
   }
 
   // --- IncrementalCC: patch a standing assignment with a delta ---
