@@ -3,7 +3,7 @@ package graft.cluster
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Distributed connected components via the alternating
@@ -29,10 +29,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * loop- and null-free rows (duplicates included), after each
   * iteration the star edges. A frame of at most `localBelow` rows
   * comes back with that same job and is finished on the driver with
-  * union-find, so small graphs pay no star rounds and large ones skip
-  * their tail rounds. At most `localBelow` rows ever reach the driver,
-  * the bound a broadcast build side already has (SCALE.md invariant
-  * 4); the distributed rounds stay the scale path.
+  * union-find. Small graphs pay no star rounds; a large graph whose
+  * star edges (nodes minus components) fit under the gate hands off
+  * after the round that gets them there; one whose star edges stay
+  * above it (a huge hub, long chains) runs every round. At most
+  * `localBelow` rows ever reach the driver, the bound a broadcast
+  * build side already has (SCALE.md invariant 4); the distributed
+  * rounds stay the scale path.
   */
 object ConnectedComponents {
 
@@ -50,10 +53,11 @@ object ConnectedComponents {
     */
   def run(edges: DataFrame, maxIter: Int = 25, localBelow: Int = LocalBelow): DataFrame = {
     // lazy localCheckpoint: the entry probe is the one job that
-    // materializes it (before iteration 1's two union branches could
-    // race to compute the uncached partitions). Not deduplicated here:
-    // the finisher is indifferent to duplicates, and smallStar's
-    // terminal distinct dedups iteration 1's output.
+    // materializes it, so the upstream is evaluated once whichever
+    // path follows, and iteration 1's two union branches read
+    // materialized blocks instead of racing to compute them.
+    // Deduplicated only on the distributed path: the finisher is
+    // indifferent to duplicates
     val canonical = edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst"))
       // canonical orientation matches the star outputs (src = greater,
@@ -70,11 +74,13 @@ object ConnectedComponents {
       log("local", entry.count, 0)
       return localLabels(canonical, entry)
     }
-    // each iteration's probe materializes its lazy checkpoint — ONE
-    // job per iteration — and its (count, xor) is both the convergence
-    // signature and the gate. Iteration 1 is never compared: the entry
-    // probe counted the rows before deduplication.
-    var e = canonical
+    // the distinct is lazy: iteration 1's two union branches share its
+    // one exchange (exchange reuse). Each iteration's probe
+    // materializes its lazy checkpoint — ONE job per iteration — and
+    // its (count, xor) is both the convergence signature and the gate.
+    // Iteration 1 always changes (star-ification), so it is never
+    // compared.
+    var e = canonical.distinct()
     var sig = (-1L, 0L)
     var converged = false
     var iter = 0
@@ -100,31 +106,34 @@ object ConnectedComponents {
       .groupBy("id").agg(min(col("component")).as("component"))
   }
 
+  private type Pairs = Seq[(UTF8String, UTF8String)]
+
   /** One probe job over a canonical edge frame: its row count, the
     * order-independent xor of its row hashes, and — when the count is
-    * within the gate — its rows as raw UTF-8 bytes (`pairs`). Each
-    * partition ships its rows only while within its share of the gate,
-    * so at most `localBelow` rows reach the driver; `pairs` is None
-    * when the count is over the gate or a skewed partition held its
-    * rows back.
+    * within the gate — its rows (`pairs`). It reads the plan's
+    * internal rows, so a row costs one long read and its strings are
+    * copied only while its partition is within its share of the gate
+    * (`localBelow / numPartitions`): at most `localBelow` rows reach
+    * the driver. `pairs` is None when the count is over the gate (the
+    * rows shipped by partitions under their share are then dropped: a
+    * bounded waste, nonzero only when partition sizes are skewed) or
+    * when a skewed partition held its rows back.
     */
-  private final case class Probe(count: Long, xor: Long, pairs: Option[Seq[(Array[Byte], Array[Byte])]])
+  private final case class Probe(count: Long, xor: Long, pairs: Option[Pairs])
 
   private def probe(df: DataFrame, localBelow: Int): Probe = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val parts = df
-      .select(xxhash64(col("src"), col("dst")), col("src").cast("binary"), col("dst").cast("binary"))
-      .as[(Long, Array[Byte], Array[Byte])]
+    val parts = df.select(xxhash64(col("src"), col("dst")), col("src"), col("dst"))
+      .queryExecution.toRdd
       .mapPartitions { rows =>
         val share = localBelow / TaskContext.get().numPartitions()
-        val kept = scala.collection.mutable.ArrayBuffer.empty[(Array[Byte], Array[Byte])]
+        val kept = scala.collection.mutable.ArrayBuffer.empty[(UTF8String, UTF8String)]
         var n = 0L
         var x = 0L
-        rows.foreach { case (h, a, b) =>
+        rows.foreach { r =>
           n += 1
-          x ^= h
-          if (n <= share) kept += ((a, b))
+          x ^= r.getLong(0)
+          // clone: the row's buffer is reused for the next row
+          if (n <= share) kept += ((r.getUTF8String(1).clone(), r.getUTF8String(2).clone()))
         }
         Iterator.single((n, x, if (n <= share) Some(kept.toSeq) else None))
       }
@@ -143,10 +152,8 @@ object ConnectedComponents {
     * extraction.
     */
   private def localLabels(e: DataFrame, p: Probe): DataFrame = {
-    val bytes = p.pairs.getOrElse(
-      e.select(col("src").cast("binary"), col("dst").cast("binary")).collect().toSeq
-        .map(r => (r.getAs[Array[Byte]](0), r.getAs[Array[Byte]](1))))
-    val pairs = bytes.map { case (a, b) => (UTF8String.fromBytes(a), UTF8String.fromBytes(b)) }
+    val pairs: Pairs = p.pairs.getOrElse(e.queryExecution.toRdd
+      .map(r => (r.getUTF8String(0).clone(), r.getUTF8String(1).clone())).collect().toSeq)
     val ids = pairs.flatMap { case (a, b) => Seq(a, b) }.distinct.toArray
       .sortWith(_.binaryCompare(_) < 0)
     val rank = new java.util.HashMap[UTF8String, Integer](ids.length * 2)
@@ -163,10 +170,9 @@ object ConnectedComponents {
       if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
     }
     val rows = java.util.Arrays.asList(
-      ids.indices.map(i => Row(ids(i).getBytes, ids(find(i)).getBytes)): _*)
-    val schema = StructType(Seq(StructField("id", BinaryType), StructField("component", BinaryType)))
+      ids.indices.map(i => Row(ids(i).toString, ids(find(i)).toString)): _*)
+    val schema = StructType(Seq(StructField("id", StringType), StructField("component", StringType)))
     e.sparkSession.createDataFrame(rows, schema)
-      .select(col("id").cast("string"), col("component").cast("string"))
   }
 
   /** Attach m(src) = min(dst) per src. SKEW-SAFE: a partial-aggregating
