@@ -563,7 +563,9 @@ object Main {
     if (!hasParquet(assignPath) &&
         fs.exists(new org.apache.hadoop.fs.Path(s"$dir/assign_next/_SUCCESS")))
       fs.rename(nextP0, new org.apache.hadoop.fs.Path(assignPath))
-    val prior = if (hasParquet(assignPath)) spark.read.parquet(assignPath)
+    // read with the schema it was written with: no inference job
+    val prior = if (hasParquet(assignPath))
+        spark.read.schema(graft.cluster.IncrementalCC.assignSchema).parquet(assignPath)
       else Seq.empty[(String, String)].toDF("id", "component")
     val edges = verdicts.filter(col(dupCol).isNotNull)
       .select(col("url").as("src"), col(dupCol).as("dst"))
@@ -669,23 +671,24 @@ object Main {
     val snap =
       if (hasTable("bands") && hasTable("sigs"))
         IncrementalNearDup.Snapshot(
-          spark.read.parquet(s"$dir/bands"), spark.read.parquet(s"$dir/sigs"))
+          spark.read.schema(IncrementalNearDup.Snapshot.bandsSchema).parquet(s"$dir/bands"),
+          spark.read.schema(IncrementalNearDup.Snapshot.sigsSchema).parquet(s"$dir/sigs"))
       else IncrementalNearDup.bootstrap(docs.limit(0), cfg)
     // the batch is shingled + minhashed ONCE, shared by the probe and
     // the snapshot delta (shingling is the dominant map-side cost of
     // this stack — paying it twice per crawl doubled the bill)
     val batchSigs = graft.near.MinHashLSH.signatures(docs, cfg).persist()
     val skippedAcc = spark.sparkContext.longAccumulator("near_snapshot_skipped")
+    // eagerly checkpointed by dedupAgainstSignatures
     val verdicts = IncrementalNearDup
       .dedupAgainstSignatures(batchSigs, snap, cfg, skippedAcc = Some(skippedAcc))
-      .localCheckpoint(true)
     // over-cap skip surfacing (capped AND surfaced — a saturated prior
-    // band bucket silently degrading recall is the one failure an
-    // operator of a standing snapshot must see)
+    // or batch band bucket silently degrading recall is the one failure
+    // an operator of a standing snapshot must see)
     if (skippedAcc.value > 0)
       System.err.println(
         s"near-snapshot: ${skippedAcc.value} over-cap candidate rows skipped " +
-          "(hot snapshot band bucket; raise maxBucket or salt the band)")
+          "(hot band bucket; raise maxBucket)")
     sink(verdicts)
     val delta = IncrementalNearDup.snapshotDeltaFromSignatures(batchSigs, verdicts, cfg)
     delta.bands.write.mode("append").parquet(s"$dir/bands")

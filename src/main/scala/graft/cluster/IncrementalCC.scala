@@ -2,6 +2,7 @@ package graft.cluster
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Incremental connected-components maintenance: fold a new crawl
   * batch's edges into a PERSISTED prior cluster assignment without
@@ -35,6 +36,13 @@ object IncrementalCC {
     * delta endpoints absent from the prior assignment (the batch).
     */
   case class Merged(relabel: DataFrame, newAssign: DataFrame)
+
+  /** The schema a persisted (id, component) assignment is written
+    * with. Reading it back with this skips parquet schema inference,
+    * which is one Spark job per read.
+    */
+  val assignSchema: StructType = StructType(Seq(
+    StructField("id", StringType), StructField("component", StringType)))
 
   /** priorAssign: (id, component) string columns, min-member labels
     * (every prior id has a row; roots map to themselves — exactly

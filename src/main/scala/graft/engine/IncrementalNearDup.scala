@@ -1,7 +1,8 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.near.MinHashLSH
 
 /** Incremental (delta) NEAR-dup: check a new crawl batch against the
@@ -26,13 +27,23 @@ import graft.near.MinHashLSH
   * over originals — near-dup is not transitive, so no fixpoint chase.
   *
   * Scale shape: the snapshot is the 10^12-row side, the batch is
-  * small. The snapshot is NEVER shuffled — `bands` is probed in ONE
-  * map-side scan against the BROADCAST distinct band keys of the
-  * batch; `sigs` in one map-side scan against the broadcast candidate
-  * keeper ids (output ≤ |candidates|). Hot snapshot band buckets are
-  * capped at `cfg.maxBucket` members and surfaced as skip rows, never
-  * silently exploded (SCALE.md invariant 3). For batches whose band
-  * key set outgrows a broadcast, the [[IncrementalDedup
+  * small. Both verdict tiers come from ONE bucket pass and ONE verify:
+  *   - `bands` is probed in ONE map-side `left_semi` scan against the
+  *     BROADCAST batch band keys;
+  *   - the hits (tier 0) and the batch's own band rows (tier 1) are
+  *     grouped per (band_id, band_hash) bucket once, prior members
+  *     first; the drain holds at most `cfg.maxBucket` + 1 members per
+  *     tier and streams each batch member past the held prior members;
+  *   - `sigs` is scanned once map-side against the broadcast candidate
+  *     keeper ids, and one exact-Jaccard join over both tiers' shingles
+  *     feeds one per-id `min(struct(tier, partner, j))`.
+  * The caps apply per tier: a bucket with more than `cfg.maxBucket`
+  * prior members, or more than `cfg.maxBucket` batch members, yields
+  * skip rows for that tier instead of pairs — capped and surfaced,
+  * never silently exploded (SCALE.md invariant 3). `cfg.salts` is not
+  * used: one hot bucket streams through one task, as in the
+  * single-round [[MinHashLSH.candidatesAndSkips]]. For batches whose
+  * band key set outgrows a broadcast, the [[IncrementalDedup
   * .dedupAgainstBloom]] Bloom middle path applies unchanged to the
   * (band_id, band_hash) key.
   */
@@ -40,6 +51,17 @@ object IncrementalNearDup {
 
   /** The two snapshot frames (see object doc). */
   case class Snapshot(bands: DataFrame, sigs: DataFrame)
+
+  object Snapshot {
+    /** The schemas the snapshot tables are written with. Reading the
+      * tables back with them skips parquet schema inference, which is
+      * one Spark job per read.
+      */
+    val bandsSchema: StructType = StructType(Seq(StructField("band_id", IntegerType),
+      StructField("band_hash", LongType), StructField("id", StringType)))
+    val sigsSchema: StructType = StructType(Seq(StructField("id", StringType),
+      StructField("shingles", ArrayType(LongType))))
+  }
 
   /** Band rows (band_id, band_hash, id) of a signature frame. */
   private def bandRows(sigs: DataFrame, cfg: MinHashLSH.Config): DataFrame =
@@ -69,45 +91,83 @@ object IncrementalNearDup {
     Snapshot(bandRows(sigs, cfg), sigs.select(col("id"), col("shingles")))
   }
 
-  /** Candidate (id, keeper) pairs from probing the snapshot bands with
-    * the batch's band keys, plus over-cap skip rows (null id/keeper,
-    * skipped = bucket row count). The snapshot side never shuffles:
-    * ONE map-side scan of `snapshot.bands` against the broadcast
-    * batch band-key set; the (small) hit set is then grouped per
-    * bucket through the bounded drain.
+  /** Tier tags of the candidate frame: a prior snapshot keeper (tier
+    * 0) wins over an earlier batch doc (tier 1).
     */
-  def probeCandidatesAndSkips(batchSigs: DataFrame, snapshot: Snapshot,
-      cfg: MinHashLSH.Config = MinHashLSH.Config(),
-      broadcastBatch: Boolean = true): DataFrame = {
+  private val Prior = 0
+  private val Batch = 1
+
+  /** One bucket's candidate rows (id, partner, tier, skipped) from its
+    * members (id, tier), prior members first. At most cap+1 members of
+    * each tier are held. Each batch member streams past the held prior
+    * members: one (id, keeper, 0, 0) per prior member, or one
+    * (id, null, 0, nPrior) skip row when the prior side is over cap.
+    * After the stream, the held batch members pair up as
+    * (later, earlier, 1, 0), or one (null, null, 1, nBatch) skip row
+    * when the batch side is over cap. Pairs are lazy.
+    */
+  private def bucketRows(members: Iterator[(String, Int)],
+      cap: Int): Iterator[(String, String, Int, Long)] = {
+    val (priorIt, batchIt) = members.span(_._2 == Prior)
+    val (nPrior, prior) = graft.functions.CappedGroups.drain(priorIt.map(_._1), cap)
+    val held = new scala.collection.mutable.ArrayBuffer[String]()
+    var nBatch = 0L
+    batchIt.flatMap { case (id, _) =>
+      if (nBatch <= cap) held += id
+      nBatch += 1
+      if (nPrior > cap) Iterator.single((id, null: String, Prior, nPrior))
+      else prior.iterator.map(p => (id, p, Prior, 0L))
+    } ++ {
+      if (nBatch > cap) Iterator.single((null: String, null: String, Batch, nBatch))
+      else {
+        val ids = held.sorted
+        for {
+          j <- ids.indices.iterator
+          i <- (0 until j).iterator
+        } yield (ids(j), ids(i), Batch, 0L)
+      }
+    }
+  }
+
+  /** Both tiers' candidates in ONE bucket pass: (id, partner, tier,
+    * skipped), skip rows with a null partner. The snapshot side never
+    * shuffles its full size: ONE map-side `left_semi` scan of
+    * `snapshot.bands` against the broadcast batch band keys keeps only
+    * the hit rows, which are grouped per bucket together with the
+    * batch's own band rows, prior members sorted first.
+    */
+  private def candidates(batchSigs: DataFrame, snapshot: Snapshot,
+      cfg: MinHashLSH.Config, broadcastBatch: Boolean): DataFrame = {
     val spark = batchSigs.sparkSession
     import spark.implicits._
     val cap = cfg.maxBucket
     val bb = bandRows(batchSigs, cfg)
-    val keys = bb.select("band_id", "band_hash").distinct()
-    val probe = if (broadcastBatch) broadcast(keys) else keys
-    // ONE snapshot scan, map-side semi-probe, small output
-    val hits = snapshot.bands.join(probe, Seq("band_id", "band_hash"))
-      .select(col("band_id"), col("band_hash"), col("id").as("keeper"))
-    // cap prior members per bucket (hot boilerplate band in the prior
-    // corpus), then attach the batch ids of the same bucket
-    val capped = hits
-      .as[(Int, Long, String)]
+    val keys = bb.select("band_id", "band_hash")
+    snapshot.bands
+      .join(if (broadcastBatch) broadcast(keys) else keys, Seq("band_id", "band_hash"),
+        "left_semi")
+      .select(col("band_id"), col("band_hash"), col("id"), lit(Prior).as("tier"))
+      .unionByName(bb.withColumn("tier", lit(Batch)))
+      .as[(Int, Long, String, Int)]
       .groupByKey(r => (r._1, r._2))
-      .flatMapGroups { (key, rows) =>
-        val (n, ms) = graft.functions.CappedGroups.drain(rows.map(_._3), cap)
-        if (n > cap) Iterator.single((key._1, key._2, null: String, n))
-        else ms.iterator.map(m => (key._1, key._2, m, 0L))
-      }
-      .toDF("band_id", "band_hash", "keeper", "skipped")
-    val cappedB = if (broadcastBatch) broadcast(capped) else capped
-    bb.join(cappedB, Seq("band_id", "band_hash"))
-      .select(col("id"), col("keeper"), col("skipped"))
-      .groupBy("id", "keeper")
-      .agg(sum(col("skipped")).as("skipped"))
-    // keeper null = skip row, one per batch id whose candidate set was
-    // truncated (summed over that id's saturated buckets); real pairs
-    // carry skipped = 0
+      .flatMapSortedGroups(col("tier"))((_, rows) =>
+        bucketRows(rows.map(r => (r._3, r._4)), cap))
+      .toDF("id", "partner", "tier", "skipped")
   }
+
+  /** Candidate (id, keeper) pairs from probing the snapshot bands with
+    * the batch's band keys, plus over-cap skip rows (keeper null,
+    * skipped = summed prior bucket sizes of that batch id's saturated
+    * buckets): the prior tier of the same bucket pass
+    * [[dedupAgainstSignatures]] runs.
+    */
+  def probeCandidatesAndSkips(batchSigs: DataFrame, snapshot: Snapshot,
+      cfg: MinHashLSH.Config = MinHashLSH.Config(),
+      broadcastBatch: Boolean = true): DataFrame =
+    candidates(batchSigs, snapshot, cfg, broadcastBatch)
+      .filter(col("tier") === Prior)
+      .groupBy(col("id"), col("partner").as("keeper"))
+      .agg(sum(col("skipped")).as("skipped"))
 
   /** Per-batch-row verdicts: (idCol, near_dup_of, jaccard, is_novel).
     * See object doc for the policy. `jaccard` is the verified exact
@@ -133,12 +193,13 @@ object IncrementalNearDup {
 
   /** [[dedupAgainst]] over precomputed `MinHashLSH.signatures` rows
     * (persist them across this call and [[snapshotDeltaFromSignatures]]
-    * so the batch is shingled ONCE per crawl). When `skippedAcc` is
-    * given, the summed over-cap skip count (batch docs × saturated
-    * snapshot buckets whose candidates were truncated — the signal
-    * that recall is degrading on a hot boilerplate band) is added to
-    * it: capped AND surfaced, the SCALE.md invariant-3 contract the
-    * batch pipeline already honors.
+    * so the batch is shingled ONCE per crawl). The result is eagerly
+    * checkpointed. When `skippedAcc` is given, the summed over-cap
+    * skip count of both tiers is added to it: per saturated prior
+    * bucket, its size times the batch docs in it; per saturated batch
+    * bucket, its size (the [[MinHashLSH.candidatesAndSkips]] count).
+    * It is the signal that recall is degrading on a hot boilerplate
+    * band: capped AND surfaced, SCALE.md invariant 3.
     */
   def dedupAgainstSignatures(batchSigs: DataFrame, snapshot: Snapshot,
       cfg: MinHashLSH.Config = MinHashLSH.Config(),
@@ -147,54 +208,48 @@ object IncrementalNearDup {
       skippedAcc: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
     val spark = batchSigs.sparkSession
     import spark.implicits._
+    def bc(df: DataFrame): DataFrame = if (broadcastBatch) broadcast(df) else df
     val jaccardUdf = udf((x: Seq[Long], y: Seq[Long]) =>
       graft.near.Hashing.jaccard(
         if (x == null) null else x.toArray, if (y == null) null else y.toArray))
 
-    // --- prior-corpus tier: probe the snapshot ---
-    // persisted so the skip-row aggregate below re-reads this SMALL
-    // frame instead of re-scanning the 10^12-row snapshot a third time
-    val candAll = probeCandidatesAndSkips(batchSigs, snapshot, cfg, broadcastBatch)
-      .persist()
-    val cand = candAll
-      .filter(col("keeper").isNotNull)
-      .select(col("id"), col("keeper"))
-    val keeperIds = cand.select(col("keeper").as("id")).distinct()
-    val keeperProbe = if (broadcastBatch) broadcast(keeperIds) else keeperIds
+    // persisted so the skip aggregate below re-reads this SMALL frame
+    // instead of re-running the bucket pass
+    val cand = candidates(batchSigs, snapshot, cfg, broadcastBatch).persist()
+    // one pair per (id, partner, tier), partitioned by id so the per-id
+    // minimum below needs no second exchange
+    val pairs = cand.filter(col("partner").isNotNull)
+      .select(col("id"), col("partner"), col("tier"))
+      .repartition(col("id"))
+      .distinct()
     // second (and last) snapshot scan: fetch ONLY candidate keepers'
-    // shingles map-side
-    val keeperSh = snapshot.sigs.join(keeperProbe, "id")
-      .select(col("id").as("keeper"), col("shingles").as("sh_k"))
-    val keeperShB = if (broadcastBatch) broadcast(keeperSh) else keeperSh
+    // shingles map-side; the batch's own shingles are tier 1
+    val keeperIds = pairs.filter(col("tier") === Prior).select(col("partner").as("id"))
+    val partnerSh = snapshot.sigs.join(bc(keeperIds), Seq("id"), "left_semi")
+      .select(col("id").as("partner"), lit(Prior).as("tier"), col("shingles").as("sh_p"))
+      .unionByName(batchSigs.select(col("id").as("partner"), lit(Batch).as("tier"),
+        col("shingles").as("sh_p")))
     val batchSh = batchSigs.select(col("id"), col("shingles").as("sh_b"))
-    val priorBest = cand
-      .join(keeperShB, Seq("keeper"))
-      .join(batchSh, Seq("id"))
-      .withColumn("j", jaccardUdf(col("sh_b"), col("sh_k")))
+    val best = pairs
+      .join(bc(partnerSh), Seq("partner", "tier"))
+      .join(bc(batchSh), Seq("id"))
+      .withColumn("j", jaccardUdf(col("sh_b"), col("sh_p")))
       .filter(col("j") >= cfg.jaccardThreshold)
       .groupBy("id")
-      .agg(min(struct(col("keeper"), col("j"))).as("m"))
-      .select(col("id"), col("m.keeper").as("prior_of"), col("m.j").as("prior_j"))
-
-    // --- intra-batch tier: standard LSH edges (src < dst, verified) ---
-    val batchBest = MinHashLSH.edgesFromSignatures(batchSigs, cfg)
-      .groupBy(col("dst").as("id"))
-      .agg(min(struct(col("src"), col("jaccard"))).as("m"))
-      .select(col("id"), col("m.src").as("batch_of"), col("m.jaccard").as("batch_j"))
+      .agg(min(struct(col("tier"), col("partner"), col("j"))).as("m"))
+      .select(col("id"), col("m.partner").as("near_dup_of"), col("m.j").as("jaccard"))
 
     val out = batchSigs.select(col("id"))
-      .join(if (broadcastBatch) broadcast(priorBest) else priorBest, Seq("id"), "left")
-      .join(if (broadcastBatch) broadcast(batchBest) else batchBest, Seq("id"), "left")
-      .select(col("id").as(idCol),
-        coalesce(col("prior_of"), col("batch_of")).as("near_dup_of"),
-        when(col("prior_of").isNotNull, col("prior_j"))
-          .otherwise(when(col("batch_of").isNotNull, col("batch_j"))).as("jaccard"))
+      .join(bc(best), Seq("id"), "left")
+      .select(col("id").as(idCol), col("near_dup_of"), col("jaccard"))
       .withColumn("is_novel", col("near_dup_of").isNull)
-      .localCheckpoint() // eager: candAll is materialized by here
+      .localCheckpoint() // eager: cand is materialized by here
+    // one job over the cached frame: a fold, where a global aggregate
+    // would add a shuffle stage
     skippedAcc.foreach(_.add(
-      candAll.filter(col("keeper").isNull)
-        .agg(coalesce(sum(col("skipped")), lit(0L))).head().getLong(0)))
-    candAll.unpersist()
+      cand.filter(col("partner").isNull).select(col("skipped")).as[Long]
+        .rdd.fold(0L)(_ + _)))
+    cand.unpersist()
     out
   }
 

@@ -472,14 +472,6 @@ object MinHashLSH {
     out
   }
 
-  /** Edges from a precomputed (and ideally persisted) signatures
-    * frame — lets the pipeline share ONE shingling/signature pass
-    * between candidate generation, verification, SimHash fingerprints
-    * and the skipped-bucket metric, and own the persist lifecycle.
-    */
-  def edgesFromSignatures(sigs: DataFrame, cfg: Config = Config()): DataFrame =
-    verifyCandidates(candidates(sigs, cfg), sigs, cfg)
-
   /** Exact-Jaccard verification of (src, dst) candidate pairs against
     * the shingle sets in `sigs`.
     */

@@ -231,6 +231,22 @@ class DedupEngineSpec extends SparkSpec {
       s"over-cap skips must reach the accumulator (got ${acc.value})")
   }
 
+  test("incremental NEAR-dup: over-cap buckets of the batch itself reach the skip count") {
+    import graft.engine.IncrementalNearDup._
+    import graft.near.MinHashLSH
+    val text = (0 until 40).map(i => s"t$i").mkString(" ")
+    // empty snapshot, 30 identical batch docs: every one of the 32 band
+    // buckets holds 30 batch members, all over the cap of 10
+    val cfg = MinHashLSH.Config(jaccardThreshold = 0.5, maxBucket = 10)
+    val snap = bootstrap(Seq.empty[(String, String)].toDF("url", "text"), cfg)
+    val batch = (0 until 30).map(i => (f"X$i%02d", text)).toDF("url", "text")
+    val acc = spark.sparkContext.longAccumulator("t_batch_skips")
+    val v = dedupAgainst(batch, snap, cfg, skippedAcc = Some(acc)).collect()
+    assert(v.length == 30 && v.forall(_.getBoolean(3)))
+    assert(acc.value == 30L * cfg.bands,
+      s"each saturated batch bucket counts its 30 rows (got ${acc.value})")
+  }
+
   test("incremental NEAR-dup: delta-from-signatures equals the re-shingling delta (r5 review)") {
     import graft.engine.IncrementalNearDup._
     import graft.near.MinHashLSH
