@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import scala.collection.mutable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.cluster.ConnectedComponents
@@ -7,6 +8,7 @@ import graft.engine.{DedupEngine, DedupResult}
 import graft.functions.Digests
 import graft.near.{MinHashLSH, SimHash}
 import graft.report.{Report, Urls}
+import graft.substring.SubstringDedup
 
 /** The flagship end-to-end pipeline (north rule): exact content-hash
   * grouping (reference semantics, stage 1) + MinHash/LSH and SimHash
@@ -19,8 +21,13 @@ import graft.report.{Report, Urls}
   *   docs ─ quarantine(F4) ─ identity pre-pass(F3) ─┬─ exact cascade (A1) ─ star edges
   *                                                  ├─ MinHash/LSH [EXT] ─ verified edges
   *                                                  ├─ SimHash [EXT] ───── verified edges
-  *                                                  └─ substring windows [EXT, opt-in]
+  *                                                  ├─ substring windows [EXT, opt-in]
+  *                                                  └─ long runs [EXT, opt-in]
   *   all edges ∪ alias edges → connected components → (url, cluster_id)
+  *
+  * The edge DAG is written once (`EdgeDag`): `run` materializes its
+  * rows with a `localCheckpoint`; `runCheckpointed` is `run`'s stages
+  * wrapped in `Catalog.stage` (edges, clusters, deduped corpus).
   */
 object DedupPipeline {
 
@@ -105,137 +112,162 @@ object DedupPipeline {
         Seq("cluster_id"), col("__q"), "url")
   }
 
-  def run(docsRaw: DataFrame, cfg: Config = Config()): Result = {
-    // F4 quarantine: undecodable rows (text null) are counted and routed
-    // out, never silently dropped (Files.pm:229-233, Files.t:290-299)
-    val quarantined = docsRaw.filter(col("text").isNull)
-    val valid0 = docsRaw.filter(col("text").isNotNull)
-    val valid = if (cfg.ignoreEmpty) valid0.filter(octet_length(col("html")) > 0) else valid0
-
-    // F3 identity pre-pass: one canonical row per normalized url;
-    // alias edges keep the dropped members clustered with the canonical.
-    // r6: the identity pass runs ONCE — aliasEdges (the small
-    // loser→canonical set) is materialized via localCheckpoint, and
-    // canon is a broadcast anti-join of the source scan against its
-    // src column. Previously every canon consumer (digest cascade,
-    // shingling, final cluster join) re-executed the full
-    // groupBy+join identity subtree; page bytes are still never
-    // cached (only alias urls are). groupBy+join min, not a window
-    // (de-skew: a hot identity would sort its whole alias group in
-    // one window task).
-    val aliasEdges = valid
-      .select(Urls.normalize(col("url")).as("identity"), col("url"))
-      .join(valid
-        .select(Urls.normalize(col("url")).as("identity"), col("url"))
-        .groupBy(col("identity")).agg(min(col("url")).as("canonical")),
+  /** F3 identity pre-pass: one canonical row per normalized url (the
+    * alphabetical min, the reference's resolve_hardlinks rule); alias
+    * edges keep the dropped members clustered with their canonical.
+    * Returns (alias edges (src, dst, kind), canonical docs).
+    *
+    * The pass runs ONCE: the (small) loser→canonical set is a lazy
+    * localCheckpoint, cached on first use inside the first consuming
+    * job (the broadcast build of the canonical anti-join), and the
+    * canonical docs are a broadcast anti-join of the source scan
+    * against its src column. Page bytes are never cached, only alias
+    * urls. groupBy+join min, not a window (de-skew: a hot identity
+    * would sort its whole alias group in one window task).
+    */
+  private[graft] def identityPass(valid: DataFrame): (DataFrame, DataFrame) = {
+    val keyed = valid.select(Urls.normalize(col("url")).as("identity"), col("url"))
+    val aliasEdges = keyed
+      .join(keyed.groupBy(col("identity")).agg(min(col("url")).as("canonical")),
         Seq("identity"))
       .filter(col("url") =!= col("canonical"))
       .select(col("url").as("src"), col("canonical").as("dst"), lit("alias").as("kind"))
-      // lazy (r6): cached on first use inside the first consuming job
-      // (the broadcast build for canon's anti-join) instead of a
-      // dedicated blocking job on the serial path
       .localCheckpoint(false)
-    val canon = valid.join(
-      aliasEdges.select(col("src").as("url")), Seq("url"), "left_anti")
+    (aliasEdges, valid.join(aliasEdges.select(col("src").as("url")), Seq("url"), "left_anti"))
+  }
 
+  /** The edge DAG that `run` and `runCheckpointed` share. Nothing runs
+    * until `rows` is materialized: a resumed `runCheckpointed` never
+    * builds the near-dup stages, and `exact` costs only what its
+    * consumers force.
+    */
+  private final class EdgeDag(docsRaw: DataFrame, cfg: Config) {
+    // F4 quarantine: undecodable rows (text null) are counted and routed
+    // out, never silently dropped (Files.pm:229-233, Files.t:290-299)
+    val quarantined: DataFrame = docsRaw.filter(col("text").isNull)
+    val valid: DataFrame = {
+      val v = docsRaw.filter(col("text").isNotNull)
+      if (cfg.ignoreEmpty) v.filter(octet_length(col("html")) > 0) else v
+    }
+    private lazy val (aliasEdges, canon) = identityPass(valid)
     // stage 1: exact content-hash cascade (reference semantics)
-    val exact = DedupEngine.run(canon, "url", Digests.cascade(col("html"), cfg.algs))
-    val exactEdges = exact.assignments
-      .filter(col("id") =!= col("block_id"))
-      .select(col("id").as("src"), col("block_id").as("dst"), lit("exact").as("kind"))
+    lazy val exact: DedupResult =
+      DedupEngine.run(canon, "url", Digests.cascade(col("html"), cfg.algs))
 
-    // [EXT] near-dup stages over non-empty canonical text. ONE
-    // shingling/signature pass feeds MinHash banding, verification,
-    // SimHash fingerprints AND the skip metrics (tokenize+hash is the
-    // dominant map-side cost); SimHash shares MinHash's shingles only
-    // when both stages use the same shingleK — a differing
-    // cfg.simhash.shingleK gets its own pass instead of silently
-    // inheriting the wrong feature universe.
-    val textDocs = canon.filter(trim(col("text")) =!= "")
-    val sameK = cfg.simhash.shingleK == cfg.minhash.shingleK
-    val sigsMh: Option[DataFrame] =
-      if (cfg.useMinHash || (cfg.useSimHash && sameK))
-        Some(MinHashLSH.signatures(textDocs, cfg.minhash).persist())
-      else None
-    val sigsSh: Option[DataFrame] =
-      if (!cfg.useSimHash) None
-      else if (sameK) sigsMh
-      else Some(MinHashLSH.signatures(textDocs,
-        cfg.minhash.copy(shingleK = cfg.simhash.shingleK)).persist())
+    private val persisted = mutable.ArrayBuffer.empty[DataFrame]
+    private def held(df: DataFrame): DataFrame = { val p = df.persist(); persisted += p; p }
 
-    // candidate pairs + over-cap skip rows, one streamed pass each;
-    // the (small) outputs are persisted so the skip sums don't re-run
-    // the shuffle
-    val mhOut = if (cfg.useMinHash)
-      Some(MinHashLSH.candidatesAndSkips(sigsMh.get, cfg.minhash).persist()) else None
-    val shOut = sigsSh.map(sg => SimHash.edgesAndSkips(
-      SimHash.fingerprintsFromShingles(sg, cfg.simhash), cfg.simhash).persist())
+    /** Unpersist every frame `rows` persisted; callers run it in a
+      * `finally`, so no cached frame outlives the call, on error paths
+      * too.
+      */
+    def release(): Unit = persisted.foreach(_.unpersist())
 
-    val mh = mhOut.map(o => MinHashLSH.verifyCandidates(
-        o.filter(col("src").isNotNull).select("src", "dst").distinct(),
-        sigsMh.get, cfg.minhash)
-      .withColumn("kind", lit("minhash")).drop("jaccard"))
-    val sh = shOut.map(_.filter(col("src").isNotNull).select("src", "dst").distinct()
-      .withColumn("kind", lit("simhash")))
-    // [EXT] optional substring stage: duplicated-window edges link docs
-    // with long shared runs that whole-doc similarity misses; over-cap
-    // windows surface as skip rows of the same pass (invariant 3)
-    val subOut = if (cfg.useSubstring)
-      Some(graft.substring.SubstringDedup.edgesAndSkips(textDocs,
-          cfg.substring.w, cfg.substring.stride, cfg.substring.minShared,
-          maxDocsPerWindow = cfg.substring.maxDocsPerWindow,
-          salts = cfg.substring.salts).persist())
-    else None
-    val sub = subOut.map(_.filter(col("src").isNotNull).select("src", "dst")
-      .withColumn("kind", lit("substring")))
-    // [EXT] optional long-run stage (Lee et al. policy): one exact
-    // shared run ≥ minLen chars links the pair, verified by LCS
-    val lrOut = if (cfg.useLongRun)
-      Some(graft.substring.SubstringDedup.longRunEdgesAndSkips(textDocs,
-        cfg.longRun.minLen, maxDocsPerGram = cfg.longRun.maxDocsPerGram,
-        salts = cfg.longRun.salts).persist())
-    else None
-    val lr = lrOut.map(_.filter(col("src").isNotNull).select("src", "dst")
-      .withColumn("kind", lit("longrun")))
+    /** All edges (src, dst, kind, skipped = 0) — alias, exact, then the
+      * near-dup stages — plus one row per enabled near-dup stage with
+      * kind = 'skip:<stage>', null src/dst and its over-cap bucket rows
+      * in `skipped`. The skip metric is part of the materialized output,
+      * so a RESUME reads it back instead of re-shingling the corpus.
+      */
+    lazy val rows: DataFrame = {
+      val exactEdges = exact.assignments
+        .filter(col("id") =!= col("block_id"))
+        .select(col("id").as("src"), col("block_id").as("dst"), lit("exact").as("kind"))
 
-    // ONE materialization of the whole edge dag (alias + exact +
-    // near-dup); everything cached above is released right after —
-    // no persisted frame outlives the call (r2 VERDICT #2)
-    val allEdges = (Seq(Option(aliasEdges), Option(exactEdges), mh, sh, sub, lr).flatten
-      .map(_.select("src", "dst", "kind")).reduce(_ unionByName _))
-      .localCheckpoint()
-    // ONE driver action for all stages' skip sums (r6): the per-stage
-    // .head() jobs each paid a job-scheduling round trip on the serial
-    // path; the union of the (tiny, persisted-input) aggregates is one
-    // collect. Same Map, stage keys unchanged.
-    val skipFrames =
-      mhOut.map(o => ("minhash", o)).toSeq ++ shOut.map(o => ("simhash", o)) ++
-        subOut.map(o => ("substring", o)) ++ lrOut.map(o => ("longrun", o))
-    val skippedCounts = skipFrames
-      .map { case (k, o) => o.filter(col("src").isNull)
+      // [EXT] near-dup stages over non-empty canonical text. ONE
+      // shingling/signature pass feeds MinHash banding, verification,
+      // SimHash fingerprints AND the skip metrics (tokenize+hash is the
+      // dominant map-side cost); SimHash shares MinHash's shingles only
+      // when both stages use the same shingleK — a differing
+      // cfg.simhash.shingleK gets its own pass instead of silently
+      // inheriting the wrong feature universe.
+      val textDocs = canon.filter(trim(col("text")) =!= "")
+      val sameK = cfg.simhash.shingleK == cfg.minhash.shingleK
+      val sigsMh =
+        if (cfg.useMinHash || (cfg.useSimHash && sameK))
+          Some(held(MinHashLSH.signatures(textDocs, cfg.minhash)))
+        else None
+      val sigsSh =
+        if (!cfg.useSimHash) None
+        else if (sameK) sigsMh
+        else Some(held(MinHashLSH.signatures(textDocs,
+          cfg.minhash.copy(shingleK = cfg.simhash.shingleK))))
+
+      // per stage: candidate pairs + over-cap skip rows (src null) from
+      // one streamed pass, held so its edges and its skip row share it,
+      // and the step from (src, dst) candidates to edges. [EXT] opt-in
+      // substring stage: duplicated-window edges link docs with long
+      // shared runs that whole-doc similarity misses. [EXT] opt-in
+      // long-run stage (Lee et al. policy): one exact shared run
+      // ≥ minLen chars links the pair, verified by LCS.
+      val stages: Seq[(String, DataFrame, DataFrame => DataFrame)] = Seq(
+        Option.when(cfg.useMinHash)(("minhash",
+          MinHashLSH.candidatesAndSkips(sigsMh.get, cfg.minhash),
+          (c: DataFrame) =>
+            MinHashLSH.verifyCandidates(c.distinct(), sigsMh.get, cfg.minhash).drop("jaccard"))),
+        sigsSh.map(sg => ("simhash",
+          SimHash.edgesAndSkips(SimHash.fingerprintsFromShingles(sg, cfg.simhash), cfg.simhash),
+          (c: DataFrame) => c.distinct())),
+        Option.when(cfg.useSubstring)(("substring",
+          SubstringDedup.edgesAndSkips(textDocs, cfg.substring.w, cfg.substring.stride,
+            cfg.substring.minShared, maxDocsPerWindow = cfg.substring.maxDocsPerWindow,
+            salts = cfg.substring.salts),
+          (c: DataFrame) => c)),
+        Option.when(cfg.useLongRun)(("longrun",
+          SubstringDedup.longRunEdgesAndSkips(textDocs, cfg.longRun.minLen,
+            maxDocsPerGram = cfg.longRun.maxDocsPerGram, salts = cfg.longRun.salts),
+          (c: DataFrame) => c))
+      ).flatten.map { case (k, out, toEdges) => (k, held(out), toEdges) }
+
+      val edgeRows = (Seq(aliasEdges, exactEdges) ++ stages.map { case (k, out, toEdges) =>
+          toEdges(out.filter(col("src").isNotNull).select("src", "dst"))
+            .withColumn("kind", lit(k)) })
+        .map(_.select("src", "dst", "kind").withColumn("skipped", lit(0L)))
+        .reduce(_ unionByName _)
+      val skipRows = stages.map { case (k, out, _) => out
+        .filter(col("src").isNull)
         .agg(coalesce(sum(col("skipped")), lit(0L)).as("skipped"))
-        .select(lit(k).as("stage"), col("skipped")) }
-      .reduceOption(_ unionByName _)
-      .map(_.collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
-      .getOrElse(Map.empty[String, Long])
-    (sigsMh.toSeq ++ sigsSh.toSeq).distinct.foreach(_.unpersist())
-    (mhOut.toSeq ++ shOut.toSeq ++ subOut.toSeq ++ lrOut.toSeq).foreach(_.unpersist())
+        .select(lit(null).cast("string").as("src"), lit(null).cast("string").as("dst"),
+          lit(s"skip:$k").as("kind"), col("skipped")) }
+      (edgeRows +: skipRows).reduce(_ unionByName _)
+    }
+  }
 
-    // [EXT] connected components; singletons keep their own id
-    val cc = ConnectedComponents.run(allEdges.select("src", "dst"))
-    val clusters = valid.select(col("url"))
+  /** Materialized edge rows → (edges (src, dst, kind), skippedBucketRows
+    * by stage); one collect of the skip rows.
+    */
+  private def splitSkips(staged: DataFrame): (DataFrame, Map[String, Long]) = {
+    val skip = col("kind").startsWith("skip:")
+    (staged.filter(!skip).drop("skipped"),
+      staged.filter(skip).select(col("kind"), col("skipped")).collect()
+        .map(r => r.getString(0).stripPrefix("skip:") -> r.getLong(1)).toMap)
+  }
+
+  /** (url, cluster_id) for every valid url; singletons keep their own id. */
+  private def clustersOf(valid: DataFrame, cc: DataFrame): DataFrame =
+    valid.select(col("url"))
       .join(cc, valid("url") === cc("id"), "left")
       .select(col("url"), coalesce(col("component"), col("url")).as("cluster_id"))
 
-    new Result(clusters, exact, allEdges, quarantined, () => docsRaw.count(), skippedCounts)
+  def run(docsRaw: DataFrame, cfg: Config = Config()): Result = {
+    val dag = new EdgeDag(docsRaw, cfg)
+    // ONE materialization of the whole edge dag (r2 VERDICT #2); the
+    // skip sums are read back from it
+    val staged = try dag.rows.localCheckpoint() finally dag.release()
+    val (edges, skipped) = splitSkips(staged)
+    // [EXT] connected components
+    val cc = ConnectedComponents.run(edges.select("src", "dst"))
+    new Result(clustersOf(dag.valid, cc), dag.exact, edges, dag.quarantined,
+      () => docsRaw.count(), skipped)
   }
 
   /** Checkpointed variant (north rule: every stage materializes with
-    * lineage so the pipeline resumes mid-run without recompute). The
-    * edge set and the final clusters are staged through the Catalog;
-    * a re-run with the same config + input lineage reads the tables
-    * back instead of recomputing, and per-stage row/partition metrics
-    * land in the catalog's metrics table (S5/S6).
+    * lineage so the pipeline resumes mid-run without recompute): `run`'s
+    * stages wrapped in `Catalog.stage` — the edge rows, the clusters
+    * and the deduped corpus. A re-run with the same config + input
+    * lineage reads the tables back instead of recomputing, and
+    * per-stage row/partition metrics land in the catalog's metrics
+    * table (S5/S6).
     */
   def runCheckpointed(docsRaw: DataFrame, catalog: graft.checkpoint.Catalog,
       cfg: Config = Config(), inputLineage: String = ""): Result = {
@@ -243,99 +275,14 @@ object DedupPipeline {
       s"|mh=${cfg.useMinHash}:${cfg.minhash}|sh=${cfg.useSimHash}:${cfg.simhash}" +
       s"|sub=${cfg.useSubstring}:${cfg.substring}" +
       s"|lr=${cfg.useLongRun}:${cfg.longRun}"
-
-    val quarantined = docsRaw.filter(col("text").isNull)
-    val valid0 = docsRaw.filter(col("text").isNotNull)
-    val valid = if (cfg.ignoreEmpty) valid0.filter(octet_length(col("html")) > 0) else valid0
-    // identity pass ONCE (r6 — see run()): lazy localCheckpoint so a
-    // RESUMED run that never touches canon pays no identity job
-    lazy val aliasEdges = valid
-      .select(Urls.normalize(col("url")).as("identity"), col("url"))
-      .join(valid
-        .select(Urls.normalize(col("url")).as("identity"), col("url"))
-        .groupBy(col("identity")).agg(min(col("url")).as("canonical")),
-        Seq("identity"))
-      .filter(col("url") =!= col("canonical"))
-      .select(col("url").as("src"), col("canonical").as("dst"), lit("alias").as("kind"))
-      .localCheckpoint(false)
-    lazy val canon = valid.join(
-      aliasEdges.select(col("src").as("url")), Seq("url"), "left_anti")
-    lazy val exact = DedupEngine.run(canon, "url", Digests.cascade(col("html"), cfg.algs))
-
-    // stage 1: the full edge set (alias + exact + near-dup edges) PLUS
-    // one aggregated skip row per near-dup stage (kind = 'skip:<stage>',
-    // src/dst null) — the over-cap metric is part of the stage's
-    // materialized output, so a RESUME reads it back instead of
-    // re-shingling the corpus (r2 VERDICT #3). Resume skips
-    // digesting/shingling entirely.
-    var toRelease = Seq.empty[DataFrame]
-    val staged = catalog.stage("edges", base) {
-      val exactEdges = exact.assignments
-        .filter(col("id") =!= col("block_id"))
-        .select(col("id").as("src"), col("block_id").as("dst"), lit("exact").as("kind"))
-      val textDocs = canon.filter(trim(col("text")) =!= "")
-      val sameK = cfg.simhash.shingleK == cfg.minhash.shingleK
-      val sigsMh: Option[DataFrame] =
-        if (cfg.useMinHash || (cfg.useSimHash && sameK))
-          Some(MinHashLSH.signatures(textDocs, cfg.minhash).persist())
-        else None
-      val sigsSh: Option[DataFrame] =
-        if (!cfg.useSimHash) None
-        else if (sameK) sigsMh
-        else Some(MinHashLSH.signatures(textDocs,
-          cfg.minhash.copy(shingleK = cfg.simhash.shingleK)).persist())
-      val mhOut = if (cfg.useMinHash)
-        Some(MinHashLSH.candidatesAndSkips(sigsMh.get, cfg.minhash).persist()) else None
-      val shOut = sigsSh.map(sg => SimHash.edgesAndSkips(
-        SimHash.fingerprintsFromShingles(sg, cfg.simhash), cfg.simhash).persist())
-      val subOut = if (cfg.useSubstring)
-        Some(graft.substring.SubstringDedup.edgesAndSkips(textDocs,
-            cfg.substring.w, cfg.substring.stride, cfg.substring.minShared,
-            maxDocsPerWindow = cfg.substring.maxDocsPerWindow,
-            salts = cfg.substring.salts).persist())
-      else None
-      val lrOut = if (cfg.useLongRun)
-        Some(graft.substring.SubstringDedup.longRunEdgesAndSkips(textDocs,
-          cfg.longRun.minLen, maxDocsPerGram = cfg.longRun.maxDocsPerGram,
-          salts = cfg.longRun.salts).persist())
-      else None
-      toRelease = (sigsMh.toSeq ++ sigsSh.toSeq).distinct ++ mhOut.toSeq ++
-        shOut.toSeq ++ subOut.toSeq ++ lrOut.toSeq
-      val mh = mhOut.map(o => MinHashLSH.verifyCandidates(
-          o.filter(col("src").isNotNull).select("src", "dst").distinct(),
-          sigsMh.get, cfg.minhash)
-        .withColumn("kind", lit("minhash")).drop("jaccard"))
-      val sh = shOut.map(_.filter(col("src").isNotNull).select("src", "dst").distinct()
-        .withColumn("kind", lit("simhash")))
-      val sub = subOut.map(_.filter(col("src").isNotNull).select("src", "dst")
-        .withColumn("kind", lit("substring")))
-      val lr = lrOut.map(_.filter(col("src").isNotNull).select("src", "dst")
-        .withColumn("kind", lit("longrun")))
-      def skipRow(o: DataFrame, kind: String): DataFrame = o
-        .filter(col("src").isNull)
-        .agg(coalesce(sum(col("skipped")), lit(0L)).as("skipped"))
-        .select(lit(null).cast("string").as("src"), lit(null).cast("string").as("dst"),
-          lit(s"skip:$kind").as("kind"), col("skipped"))
-      val edgeRows = (Seq(Some(aliasEdges), Some(exactEdges), mh, sh, sub, lr).flatten
-        .map(_.select("src", "dst", "kind").withColumn("skipped", lit(0L))))
-        .reduce(_ unionByName _)
-      (edgeRows +: (mhOut.map(skipRow(_, "minhash")).toSeq ++
-        shOut.map(skipRow(_, "simhash")).toSeq ++
-        subOut.map(skipRow(_, "substring")).toSeq ++
-        lrOut.map(skipRow(_, "longrun")).toSeq)).reduce(_ unionByName _)
-    }
-    toRelease.foreach(_.unpersist())
-    val edges = staged.filter(!col("kind").startsWith("skip:")).drop("skipped")
-    val skippedCounts = staged.filter(col("kind").startsWith("skip:"))
-      .select(col("kind"), col("skipped")).collect()
-      .map(r => r.getString(0).stripPrefix("skip:") -> r.getLong(1)).toMap
-
+    val dag = new EdgeDag(docsRaw, cfg)
+    // stage 1: the edge rows with their skip rows (resume skips
+    // digesting/shingling entirely)
+    val staged = try catalog.stage("edges", base)(dag.rows) finally dag.release()
+    val (edges, skipped) = splitSkips(staged)
     // stage 2: connected components over the staged edges
     val clusters = catalog.stage("clusters", base + "|edges") {
-      val cc = ConnectedComponents.run(edges.select("src", "dst"))
-      valid.select(col("url"))
-        .join(cc, valid("url") === cc("id"), "left")
-        .select(col("url"), coalesce(col("component"), col("url")).as("cluster_id"))
+      clustersOf(dag.valid, ConnectedComponents.run(edges.select("src", "dst")))
     }
     // stage 3: the deduped corpus itself (one row per cluster
     // canonical), laid out by the north rule's (days(warc_ts), lang)
@@ -343,15 +290,15 @@ object DedupPipeline {
     // downstream reads without a full scan
     val deduped = catalog.stage("deduped_docs", base + "|clusters",
       Seq("warc_day", "lang")) {
-      valid
+      dag.valid
         .join(clusters.filter(col("url") === col("cluster_id")).select("url"), "url")
         .withColumn("warc_day", to_date(col("warc_ts")))
     }
     catalog.recordMetrics("clusters", Map(
       "clusters" -> clusters.select(col("cluster_id")).distinct().count(),
       "edges" -> edges.count()) ++
-      skippedCounts.map { case (k, v) => s"skipped_bucket_rows_$k" -> v })
-    new Result(clusters, exact, edges, quarantined, () => docsRaw.count(),
-      skippedCounts, Some(deduped))
+      skipped.map { case (k, v) => s"skipped_bucket_rows_$k" -> v })
+    new Result(clusters, dag.exact, edges, dag.quarantined, () => docsRaw.count(),
+      skipped, Some(deduped))
   }
 }

@@ -29,31 +29,6 @@ object Report {
     docs.groupBy(Urls.normalize(col(idCol)).as("identity"))
       .agg(sort_array(collect_list(col(idCol))).as("aliases"))
 
-  /** Identity pre-pass (F3): keep one canonical row per normalized
-    * url — canonical = alphabetical min, the reference CLI's
-    * resolve_hardlinks rule (CLI.pm:282). Pure recompute, no mutation
-    * (vs Files.pm:309-315).
-    *
-    * Scale shape: the window runs over a NARROW (identity, url)
-    * projection only, producing the (rare) alias losers; full rows are
-    * then anti-joined against that small set — AQE turns it into a
-    * broadcast anti-join, so page bytes never enter a shuffle.
-    */
-  def dedupIdentity(docs: DataFrame, idCol: String = "url"): DataFrame = {
-    // groupBy+join min, not a window (r6 de-skew: a hot identity —
-    // one url with millions of alias fetches — would sort its whole
-    // group in ONE window task; the aggregate partial-combines
-    // map-side and AQE splits the join)
-    val keyed = docs
-      .select(col(idCol), Urls.normalize(col(idCol)).as("__identity"))
-    val mins = keyed.groupBy(col("__identity"))
-      .agg(min(col(idCol)).as("__min"))
-    val losers = keyed.join(mins, Seq("__identity"))
-      .filter(col(idCol) =!= col("__min"))
-      .select(col(idCol))
-    docs.join(losers, Seq(idCol), "left_anti")
-  }
-
   /** The reference report (P2, CLI.pm:296-310): duplicate groups only,
     * members tab-joined, sorted within the line and across lines —
     * golden fixture CLI.t:74-78. Input: blocks with a `members`

@@ -39,9 +39,16 @@ class ReportSpec extends SparkSpec {
     assert(g.count() == 2)
     val big = g.filter(size(col("aliases")) === 3).head().getSeq[String](1)
     assert(big.head == "https://a.example/p/1") // alphabetical min first
-    val canon = Report.dedupIdentity(docs)
+    // the pipeline's identity pre-pass: the min url is the canonical,
+    // the two other spellings become alias edges to it
+    val (aliasEdges, canon) = graft.pipeline.DedupPipeline.identityPass(docs)
     assert(canon.count() == 2)
     assert(canon.filter(col("url") === "https://a.example/p/1").count() == 1)
+    val aliases = aliasEdges.collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
+    assert(aliases.toSet == Set(
+      ("https://a.example/p/1/", "https://a.example/p/1", "alias"),
+      ("https://a.example/p/1?utm_source=feed", "https://a.example/p/1", "alias")))
+    assert(aliases.length == 2)
   }
 
   test("humanBytes formatting (CLI.pm:42-67)") {
