@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.checkpoint.Catalog
 import graft.pipeline.DedupPipeline
 import graft.report.Report
 
@@ -131,10 +132,12 @@ import graft.report.Report
   *                           fold into the persisted assignment at
   *                           DIR/assign via IncrementalCC — CC runs
   *                           over only the touched subgraph, the
-  *                           standing table is rewritten through a
-  *                           staged two-phase swap (on Iceberg: a
-  *                           MERGE touching relabeled rows only)
+  *                           standing table is rewritten through the
+  *                           Catalog commit (on Iceberg: a MERGE
+  *                           touching relabeled rows only)
   *   --checkpoint DIR        materialize + resume stages via Catalog
+  *                           (a stage resumes on the same config and
+  *                           input files, or the same synth:N spec)
   *   --byte-verify           append a full byte-compare level to the
   *                           cascade (Theory.pod:113-118 — closes the
   *                           hash-collision caveat; off by default)
@@ -374,19 +377,12 @@ object Main {
     // batch is judged against the accumulated digest snapshot only.
     // The sink (emit + stats) runs BEFORE the snapshot append, so a
     // failed emit never poisons the snapshot (a retry stays correct).
-    conf.snapshot.foreach { dir =>
-      val verdicts = runIncremental(spark, docs, dir,
-        incrementalSink(spark, conf, "incremental"))
-      conf.clustersSnapshot.foreach(cdir =>
-        maintainClusters(spark, cdir, verdicts, "dup_of", conf.verbose))
-      spark.stop()
-      return
-    }
-    conf.nearSnapshot.foreach { dir =>
-      val verdicts = runIncrementalNear(spark, docs, dir,
-        incrementalSink(spark, conf, "incremental_near"), minhashConfigOf(conf))
-      conf.clustersSnapshot.foreach(cdir =>
-        maintainClusters(spark, cdir, verdicts, "near_dup_of", conf.verbose))
+    val incremental = conf.snapshot.map(dir => (runIncremental(spark, docs, dir,
+        incrementalSink(spark, conf, "incremental")), "dup_of"))
+      .orElse(conf.nearSnapshot.map(dir => (runIncrementalNear(spark, docs, dir,
+        incrementalSink(spark, conf, "incremental_near"), minhashConfigOf(conf)), "near_dup_of")))
+    incremental.foreach { case (verdicts, dupCol) =>
+      conf.clustersSnapshot.foreach(maintainClusters(spark, _, verdicts, dupCol, conf.verbose))
       spark.stop()
       return
     }
@@ -413,9 +409,12 @@ object Main {
     // audit formats never force it
     val auditOnly =
       Set("overlap", "lm", "ccnet", "mirrors", "hitters").contains(conf.format)
-    lazy val result = conf.checkpoint match {
-      case Some(dir) =>
-        DedupPipeline.runCheckpointed(docs, new graft.checkpoint.Catalog(dir, spark), cfg)
+    val catalog = conf.checkpoint.map(new Catalog(_, spark))
+    lazy val result = catalog match {
+      case Some(cat) =>
+        // a synth:N input scans no file: its spec is its lineage
+        DedupPipeline.runCheckpointed(docs, cat, cfg,
+          inputLineage = conf.inputs.distinct.filter(_.startsWith("synth:")).mkString(","))
       case None => DedupPipeline.run(docs, cfg)
     }
 
@@ -436,8 +435,7 @@ object Main {
 
     // observed progress metrics land in the checkpoint catalog's
     // metrics table (S5: metrics stream → metrics sink)
-    if (conf.progress) conf.checkpoint.foreach { dir =>
-      val cat = new graft.checkpoint.Catalog(dir, spark)
+    if (conf.progress) catalog.foreach { cat =>
       listener.observations.foreach { o =>
         cat.recordMetrics(s"observe:${o.name}",
           o.metrics.collect { case (k, v: Long) => k -> v })
@@ -448,9 +446,7 @@ object Main {
     // a quality-selected keeper, and how many differ from the min-url
     // canonical the default policy would have kept
     keepers.foreach { k =>
-      conf.checkpoint.foreach { dir =>
-        recordKeepPolicyMetrics(k, new graft.checkpoint.Catalog(dir, spark))
-      }
+      catalog.foreach(recordKeepPolicyMetrics(k, _))
       k.unpersist()
     }
 
@@ -514,16 +510,12 @@ object Main {
   private[graft] def runIncremental(spark: SparkSession, docs: DataFrame,
       dir: String, sink: DataFrame => Unit = _ => ()): DataFrame = {
     import graft.engine.IncrementalDedup._
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val exists = fs.exists(path) && fs.listStatus(path).exists(
-      s => s.getPath.getName.endsWith(".parquet"))
-    val snap = if (exists) spark.read.parquet(dir) else emptySnapshot(docs)
+    val (cat, name) = Catalog.ofTable(dir, spark)
+    val snap = if (cat.exists(name)) cat.read(name) else emptySnapshot(docs)
     val verdicts = dedupAgainst(docs, snap).localCheckpoint(true)
     sink(verdicts)
-    verdicts.filter(col("is_novel"))
-      .select(col("digest"), col("url").as("keeper"))
-      .write.mode("append").parquet(dir)
+    cat.append(name, verdicts.filter(col("is_novel"))
+      .select(col("digest"), col("url").as("keeper")))
     verdicts
   }
 
@@ -531,41 +523,21 @@ object Main {
     * batch's dup edges (url -> dup_of / near_dup_of) into the standing
     * (id, component) assignment at `dir`/assign via
     * [[graft.cluster.IncrementalCC]] — CC over the touched subgraph
-    * only; the prior table is scanned once map-side. The rewrite is a
-    * staged two-phase swap (write assign_next, demote assign to
-    * assign_prev, promote) so a crash mid-update always leaves a
-    * complete table on disk — and a crash BETWEEN the two renames
-    * (no assign/ present) is recovered on the next run by promoting
-    * the committed assign_next instead of silently bootstrapping an
-    * empty prior; on an Iceberg catalog this whole step is
-    * a MERGE INTO touching relabeled rows. Ids are assumed unique
-    * across crawls (url + warc_ts at production scale) — a re-crawled
-    * url is the SNAPSHOT's identity question, not this table's.
+    * only; the prior table is scanned once map-side. The rewrite is
+    * the [[Catalog]] commit of table `assign`: a crash never leaves a
+    * partial table, and an interrupted swap is finished by the next
+    * run; on Iceberg this step is a MERGE INTO touching relabeled
+    * rows. Ids are assumed unique across crawls (url + warc_ts at
+    * production scale) — a re-crawled url is the SNAPSHOT's identity
+    * question, not this table's.
     */
   private[graft] def maintainClusters(spark: SparkSession, dir: String,
       verdicts: DataFrame, dupCol: String, verbose: Boolean = false): Unit = {
     import spark.implicits._
-    val assignPath = s"$dir/assign"
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def hasParquet(p: String): Boolean = {
-      val pp = new org.apache.hadoop.fs.Path(p)
-      fs.exists(pp) && fs.listStatus(pp).exists(_.getPath.getName.endsWith(".parquet"))
-    }
-    // complete an interrupted swap before reading: a crash between the
-    // demote (assign -> assign_prev) and promote (assign_next -> assign)
-    // renames leaves no assign/ — bootstrapping EMPTY there would
-    // silently abandon every prior crawl's components. assign_next is
-    // only ever a fully committed write, gated on _SUCCESS so a crash
-    // MID-write (possible only on the very first bootstrap, when no
-    // assign exists yet either) is not promoted.
-    val nextP0 = new org.apache.hadoop.fs.Path(s"$dir/assign_next")
-    if (!hasParquet(assignPath) &&
-        fs.exists(new org.apache.hadoop.fs.Path(s"$dir/assign_next/_SUCCESS")))
-      fs.rename(nextP0, new org.apache.hadoop.fs.Path(assignPath))
+    val cat = new Catalog(dir, spark)
     // read with the schema it was written with: no inference job
-    val prior = if (hasParquet(assignPath))
-        spark.read.schema(graft.cluster.IncrementalCC.assignSchema).parquet(assignPath)
+    val prior = if (cat.exists("assign"))
+        cat.read("assign", graft.cluster.IncrementalCC.assignSchema)
       else Seq.empty[(String, String)].toDF("id", "component")
     val edges = verdicts.filter(col(dupCol).isNotNull)
       .select(col("url").as("src"), col(dupCol).as("dst"))
@@ -579,20 +551,14 @@ object Main {
       .join(endpoints, Seq("id"), "left_anti")
     val next = graft.cluster.IncrementalCC.patch(prior, merged)
       .unionByName(isolated)
-    val tmpP = new org.apache.hadoop.fs.Path(s"$dir/assign_next")
-    val curP = new org.apache.hadoop.fs.Path(assignPath)
-    val prevP = new org.apache.hadoop.fs.Path(s"$dir/assign_prev")
-    next.write.mode("overwrite").parquet(tmpP.toString)
+    // counted before the commit replaces the prior files they read
     if (verbose) {
       val nRelabel = merged.relabel.count()
       val nNew = merged.newAssign.count()
       System.err.println(s"clusters: $nRelabel components relabeled, " +
         s"$nNew ids joined existing/new merged components")
     }
-    if (fs.exists(prevP)) fs.delete(prevP, true)
-    if (fs.exists(curP)) fs.rename(curP, prevP)
-    fs.rename(tmpP, curP)
-    fs.delete(prevP, true)
+    cat.commit("assign", next)
   }
 
   /** The shared incremental-mode sink: emit verdicts (progress-tapped,
@@ -617,7 +583,7 @@ object Main {
       if (conf.verbose)
         System.err.println(s"novel: $novel of $total batch docs")
       conf.checkpoint.foreach { cdir =>
-        new graft.checkpoint.Catalog(cdir, spark).recordMetrics(stage,
+        new Catalog(cdir, spark).recordMetrics(stage,
           Map("batch_docs" -> total, "novel" -> novel,
             "duplicates" -> (total - novel)))
       }
@@ -632,47 +598,30 @@ object Main {
     * never poisons the snapshot — the --snapshot crash-safety
     * contract), then append the band+sig delta for retained docs.
     *
-    * The banding is PINNED at bootstrap: a snapshot's band hashes are
-    * only comparable under the (shingleK, numPerms, bands) they were
-    * computed with, so the config is written to `dir`/config.json on
-    * the first run and later runs must present the same one (a
-    * mismatched --jaccard fails fast instead of silently probing
-    * incomparable buckets).
+    * The banding is PINNED at bootstrap in `dir`/config.json: band
+    * hashes are only comparable under the (shingleK, numPerms, bands)
+    * they were computed with, so a mismatched --jaccard fails fast
+    * instead of silently probing incomparable buckets.
     */
   private[graft] def runIncrementalNear(spark: SparkSession, docs: DataFrame,
       dir: String, sink: DataFrame => Unit = _ => (),
       cfg0: graft.near.MinHashLSH.Config = graft.near.MinHashLSH.Config()): DataFrame = {
     import graft.engine.IncrementalNearDup
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def hasTable(name: String): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$name")
-      fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet"))
-    }
-    def pinOf(c: graft.near.MinHashLSH.Config): String =
-      s"""{"shingleK":${c.shingleK},"numPerms":${c.numPerms},"bands":${c.bands},""" +
-        s""""seed":${c.seed},"jaccardThreshold":${c.jaccardThreshold}}"""
-    val pinPath = new org.apache.hadoop.fs.Path(s"$dir/config.json")
-    val cfg =
-      if (fs.exists(pinPath)) {
-        val in = fs.open(pinPath)
-        val pinned = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-        require(pinned == pinOf(cfg0),
-          s"near-snapshot $dir was bootstrapped with banding $pinned; " +
-            s"this run requests ${pinOf(cfg0)} — band hashes are not comparable " +
-            "across bandings (re-bootstrap a fresh snapshot dir to change --jaccard)")
-        cfg0
-      } else {
-        val out = fs.create(pinPath, true)
-        try out.write(pinOf(cfg0).getBytes("UTF-8")) finally out.close()
-        cfg0
-      }
+    val cat = new Catalog(dir, spark)
+    val cfg = cfg0
+    val pin =
+      s"""{"shingleK":${cfg.shingleK},"numPerms":${cfg.numPerms},"bands":${cfg.bands},""" +
+        s""""seed":${cfg.seed},"jaccardThreshold":${cfg.jaccardThreshold}}"""
+    val pinned = cat.pin("config.json", pin)
+    require(pinned == pin,
+      s"near-snapshot $dir was bootstrapped with banding $pinned; " +
+        s"this run requests $pin — band hashes are not comparable " +
+        "across bandings (re-bootstrap a fresh snapshot dir to change --jaccard)")
     val snap =
-      if (hasTable("bands") && hasTable("sigs"))
+      if (cat.exists("bands") && cat.exists("sigs"))
         IncrementalNearDup.Snapshot(
-          spark.read.schema(IncrementalNearDup.Snapshot.bandsSchema).parquet(s"$dir/bands"),
-          spark.read.schema(IncrementalNearDup.Snapshot.sigsSchema).parquet(s"$dir/sigs"))
+          cat.read("bands", IncrementalNearDup.Snapshot.bandsSchema),
+          cat.read("sigs", IncrementalNearDup.Snapshot.sigsSchema))
       else IncrementalNearDup.bootstrap(docs.limit(0), cfg)
     // the batch is shingled + minhashed ONCE, shared by the probe and
     // the snapshot delta (shingling is the dominant map-side cost of
@@ -691,8 +640,8 @@ object Main {
           "(hot band bucket; raise maxBucket)")
     sink(verdicts)
     val delta = IncrementalNearDup.snapshotDeltaFromSignatures(batchSigs, verdicts, cfg)
-    delta.bands.write.mode("append").parquet(s"$dir/bands")
-    delta.sigs.write.mode("append").parquet(s"$dir/sigs")
+    cat.append("bands", delta.bands)
+    cat.append("sigs", delta.sigs)
     batchSigs.unpersist()
     verdicts
   }
@@ -936,7 +885,7 @@ object Main {
     * canonical the default policy would have kept.
     */
   private[graft] def recordKeepPolicyMetrics(keepers: DataFrame,
-      cat: graft.checkpoint.Catalog): Unit = {
+      cat: Catalog): Unit = {
     val m = keepers.agg(count(lit(1)),
       coalesce(sum(when(col("keep_id") =!= col("cluster_id"), 1L).otherwise(0L)),
         lit(0L))).head()

@@ -77,15 +77,10 @@ object IncrementalNearDup {
   def bootstrap(prior: DataFrame, cfg: MinHashLSH.Config = MinHashLSH.Config(),
       idCol: String = "url", textCol: String = "text"): Snapshot = {
     // lazy checkpoint (r6): both snapshot views (band rows, shingle
-    // sets) derive from one signature pass — unmaterialized, the
-    // probe scan and the keeper-shingle fetch each re-shingled the
-    // prior corpus. Nothing is materialized here: the first job that
-    // reads either view computes and caches the signatures. With the
-    // default broadcastBatch, dedupAgainstSignatures' keeper-shingle
-    // fetch waits for the band probe's broadcast output, so the views
-    // are not computed concurrently; with broadcastBatch = false both
-    // join sides may start together and shingle the prior corpus
-    // twice. In production the snapshot IS a persisted table.
+    // sets) derive from one signature pass, computed and cached by the
+    // first job that reads either; the keeper-shingle fetch waits for
+    // the band probe's broadcast output, so the views are never
+    // computed concurrently. In production the snapshot IS a table.
     val sigs = MinHashLSH.signatures(prior, cfg, textCol, idCol)
       .localCheckpoint(false)
     Snapshot(bandRows(sigs, cfg), sigs.select(col("id"), col("shingles")))
@@ -137,15 +132,14 @@ object IncrementalNearDup {
     * batch's own band rows, prior members sorted first.
     */
   private def candidates(batchSigs: DataFrame, snapshot: Snapshot,
-      cfg: MinHashLSH.Config, broadcastBatch: Boolean): DataFrame = {
+      cfg: MinHashLSH.Config): DataFrame = {
     val spark = batchSigs.sparkSession
     import spark.implicits._
     val cap = cfg.maxBucket
     val bb = bandRows(batchSigs, cfg)
     val keys = bb.select("band_id", "band_hash")
     snapshot.bands
-      .join(if (broadcastBatch) broadcast(keys) else keys, Seq("band_id", "band_hash"),
-        "left_semi")
+      .join(broadcast(keys), Seq("band_id", "band_hash"), "left_semi")
       .select(col("band_id"), col("band_hash"), col("id"), lit(Prior).as("tier"))
       .unionByName(bb.withColumn("tier", lit(Batch)))
       .as[(Int, Long, String, Int)]
@@ -162,9 +156,8 @@ object IncrementalNearDup {
     * [[dedupAgainstSignatures]] runs.
     */
   def probeCandidatesAndSkips(batchSigs: DataFrame, snapshot: Snapshot,
-      cfg: MinHashLSH.Config = MinHashLSH.Config(),
-      broadcastBatch: Boolean = true): DataFrame =
-    candidates(batchSigs, snapshot, cfg, broadcastBatch)
+      cfg: MinHashLSH.Config = MinHashLSH.Config()): DataFrame =
+    candidates(batchSigs, snapshot, cfg)
       .filter(col("tier") === Prior)
       .groupBy(col("id"), col("partner").as("keeper"))
       .agg(sum(col("skipped")).as("skipped"))
@@ -182,11 +175,9 @@ object IncrementalNearDup {
   def dedupAgainst(batch: DataFrame, snapshot: Snapshot,
       cfg: MinHashLSH.Config = MinHashLSH.Config(),
       idCol: String = "url", textCol: String = "text",
-      broadcastBatch: Boolean = true,
       skippedAcc: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
     val batchSigs = MinHashLSH.signatures(batch, cfg, textCol, idCol).persist()
-    val out = dedupAgainstSignatures(batchSigs, snapshot, cfg, idCol,
-      broadcastBatch, skippedAcc)
+    val out = dedupAgainstSignatures(batchSigs, snapshot, cfg, idCol, skippedAcc)
     batchSigs.unpersist()
     out
   }
@@ -204,18 +195,16 @@ object IncrementalNearDup {
   def dedupAgainstSignatures(batchSigs: DataFrame, snapshot: Snapshot,
       cfg: MinHashLSH.Config = MinHashLSH.Config(),
       idCol: String = "url",
-      broadcastBatch: Boolean = true,
       skippedAcc: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
     val spark = batchSigs.sparkSession
     import spark.implicits._
-    def bc(df: DataFrame): DataFrame = if (broadcastBatch) broadcast(df) else df
     val jaccardUdf = udf((x: Seq[Long], y: Seq[Long]) =>
       graft.near.Hashing.jaccard(
         if (x == null) null else x.toArray, if (y == null) null else y.toArray))
 
     // persisted so the skip aggregate below re-reads this SMALL frame
     // instead of re-running the bucket pass
-    val cand = candidates(batchSigs, snapshot, cfg, broadcastBatch).persist()
+    val cand = candidates(batchSigs, snapshot, cfg).persist()
     // one pair per (id, partner, tier), partitioned by id so the per-id
     // minimum below needs no second exchange
     val pairs = cand.filter(col("partner").isNotNull)
@@ -225,14 +214,14 @@ object IncrementalNearDup {
     // second (and last) snapshot scan: fetch ONLY candidate keepers'
     // shingles map-side; the batch's own shingles are tier 1
     val keeperIds = pairs.filter(col("tier") === Prior).select(col("partner").as("id"))
-    val partnerSh = snapshot.sigs.join(bc(keeperIds), Seq("id"), "left_semi")
+    val partnerSh = snapshot.sigs.join(broadcast(keeperIds), Seq("id"), "left_semi")
       .select(col("id").as("partner"), lit(Prior).as("tier"), col("shingles").as("sh_p"))
       .unionByName(batchSigs.select(col("id").as("partner"), lit(Batch).as("tier"),
         col("shingles").as("sh_p")))
     val batchSh = batchSigs.select(col("id"), col("shingles").as("sh_b"))
     val best = pairs
-      .join(bc(partnerSh), Seq("partner", "tier"))
-      .join(bc(batchSh), Seq("id"))
+      .join(broadcast(partnerSh), Seq("partner", "tier"))
+      .join(broadcast(batchSh), Seq("id"))
       .withColumn("j", jaccardUdf(col("sh_b"), col("sh_p")))
       .filter(col("j") >= cfg.jaccardThreshold)
       .groupBy("id")
@@ -240,7 +229,7 @@ object IncrementalNearDup {
       .select(col("id"), col("m.partner").as("near_dup_of"), col("m.j").as("jaccard"))
 
     val out = batchSigs.select(col("id"))
-      .join(bc(best), Seq("id"), "left")
+      .join(broadcast(best), Seq("id"), "left")
       .select(col("id").as(idCol), col("near_dup_of"), col("jaccard"))
       .withColumn("is_novel", col("near_dup_of").isNull)
       .localCheckpoint() // eager: cand is materialized by here

@@ -3,6 +3,7 @@ package graft.pipeline
 import scala.collection.mutable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.checkpoint.Catalog
 import graft.cluster.ConnectedComponents
 import graft.engine.{DedupEngine, DedupResult}
 import graft.functions.Digests
@@ -264,14 +265,16 @@ object DedupPipeline {
   /** Checkpointed variant (north rule: every stage materializes with
     * lineage so the pipeline resumes mid-run without recompute): `run`'s
     * stages wrapped in `Catalog.stage` — the edge rows, the clusters
-    * and the deduped corpus. A re-run with the same config + input
-    * lineage reads the tables back instead of recomputing, and
-    * per-stage row/partition metrics land in the catalog's metrics
-    * table (S5/S6).
+    * and the deduped corpus. The input lineage is `inputLineage` plus
+    * the files `docsRaw` scans; with neither, every stage recomputes.
+    * The run that computes the clusters records their metrics in the
+    * catalog's metrics table (S5/S6).
     */
-  def runCheckpointed(docsRaw: DataFrame, catalog: graft.checkpoint.Catalog,
+  def runCheckpointed(docsRaw: DataFrame, catalog: Catalog,
       cfg: Config = Config(), inputLineage: String = ""): Result = {
-    val base = s"$inputLineage|algs=${cfg.algs.mkString(",")}|ie=${cfg.ignoreEmpty}" +
+    val input = Seq(inputLineage, Catalog.inputFiles(docsRaw)).filter(_.nonEmpty).mkString("|")
+    val base = (if (input.isEmpty) s"unknown:${java.util.UUID.randomUUID}" else input) +
+      s"|algs=${cfg.algs.mkString(",")}|ie=${cfg.ignoreEmpty}" +
       s"|mh=${cfg.useMinHash}:${cfg.minhash}|sh=${cfg.useSimHash}:${cfg.simhash}" +
       s"|sub=${cfg.useSubstring}:${cfg.substring}" +
       s"|lr=${cfg.useLongRun}:${cfg.longRun}"
@@ -281,7 +284,9 @@ object DedupPipeline {
     val staged = try catalog.stage("edges", base)(dag.rows) finally dag.release()
     val (edges, skipped) = splitSkips(staged)
     // stage 2: connected components over the staged edges
+    var computed = false
     val clusters = catalog.stage("clusters", base + "|edges") {
+      computed = true
       clustersOf(dag.valid, ConnectedComponents.run(edges.select("src", "dst")))
     }
     // stage 3: the deduped corpus itself (one row per cluster
@@ -294,7 +299,8 @@ object DedupPipeline {
         .join(clusters.filter(col("url") === col("cluster_id")).select("url"), "url")
         .withColumn("warc_day", to_date(col("warc_ts")))
     }
-    catalog.recordMetrics("clusters", Map(
+    // a resume appends no duplicate rows and runs no bookkeeping job
+    if (computed) catalog.recordMetrics("clusters", Map(
       "clusters" -> clusters.select(col("cluster_id")).distinct().count(),
       "edges" -> edges.count()) ++
       skipped.map { case (k, v) => s"skipped_bucket_rows_$k" -> v })

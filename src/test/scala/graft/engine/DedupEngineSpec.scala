@@ -187,10 +187,8 @@ class DedupEngineSpec extends SparkSpec {
       ("E", mk(60, "e")),
       ("F", mk(58, "e") + " kk1 kk2"),
       ("G", mk(58, "q") + " yy1 yy2")).toDF("url", "text")
-    def verdicts(broadcastBatch: Boolean) =
-      dedupAgainst(b2, snap, cfg, broadcastBatch = broadcastBatch).collect()
-        .map(r => r.getString(0) -> ((Option(r.get(1)), r.getBoolean(3)))).toMap
-    val v = verdicts(broadcastBatch = true)
+    val v = dedupAgainst(b2, snap, cfg).collect()
+      .map(r => r.getString(0) -> ((Option(r.get(1)), r.getBoolean(3)))).toMap
     assert(v == Map("D" -> ((Some("A"), false)), "E" -> ((None, true)),
       "F" -> ((Some("E"), false)), "G" -> ((Some("B"), false))))
     // jaccard column carries the verified exact value of the chosen pair
@@ -203,8 +201,6 @@ class DedupEngineSpec extends SparkSpec {
     assert(delta.sigs.select("id").collect().map(_.getString(0)).toSet == Set("E"))
     assert(delta.bands.select("id").distinct().collect().map(_.getString(0)).toSet == Set("E"))
     assert(delta.bands.count() == cfg.bands)
-    // shuffle-join fallback (batch too big to broadcast) is result-equal
-    assert(verdicts(broadcastBatch = false) == v)
   }
 
   test("incremental NEAR-dup: hot snapshot band buckets are capped AND surfaced") {

@@ -15,8 +15,7 @@ import org.scalacheck.{Gen, rng}
   * reference bands with `MinHashLSH.bandHashesLocal`, applies the
   * per-tier caps, verifies with `Hashing.jaccard`, and picks the prior
   * keeper first, else the smallest earlier batch doc.
-  * Verdicts and the skip total must match, with and without the
-  * broadcast probe.
+  * Verdicts and the skip total must match.
   */
 class IncrementalNearDupPropertySpec extends SparkSpec {
   import spark.implicits._
@@ -105,7 +104,7 @@ class IncrementalNearDupPropertySpec extends SparkSpec {
     (verdicts, skipped)
   }
 
-  test("dedupAgainst equals the driver-side reference, broadcast and shuffled probes") {
+  test("dedupAgainst equals the driver-side reference") {
     for ((c, i) <- samples.zipWithIndex) {
       val (expect, expectSkipped) = reference(c)
       assert(expect.values.exists(_._1.exists(_.startsWith("p"))) &&
@@ -113,17 +112,15 @@ class IncrementalNearDupPropertySpec extends SparkSpec {
         s"crawl $i exercises both tiers and the caps")
       val snap = IncrementalNearDup.bootstrap(c.prior.toDF("url", "text"), cfg)
       val batch = c.batch.toDF("url", "text").repartition(3)
-      for (broadcastBatch <- Seq(true, false)) {
-        val acc = spark.sparkContext.longAccumulator(s"t_prop_skips_$i")
-        val got = IncrementalNearDup.dedupAgainst(batch, snap, cfg,
-            broadcastBatch = broadcastBatch, skippedAcc = Some(acc)).collect()
-        val gotMap = got.map(r => r.getString(0) ->
-          ((Option(r.getString(1)), Option(r.get(2)).map(_.asInstanceOf[Double])))).toMap
-        assert(got.length == c.batch.size, s"crawl $i: one verdict per batch doc")
-        assert(got.forall(r => r.getBoolean(3) == r.isNullAt(1)))
-        assert(gotMap == expect, s"crawl $i broadcastBatch=$broadcastBatch")
-        assert(acc.value == expectSkipped, s"crawl $i broadcastBatch=$broadcastBatch skips")
-      }
+      val acc = spark.sparkContext.longAccumulator(s"t_prop_skips_$i")
+      val got = IncrementalNearDup.dedupAgainst(batch, snap, cfg, skippedAcc = Some(acc))
+        .collect()
+      val gotMap = got.map(r => r.getString(0) ->
+        ((Option(r.getString(1)), Option(r.get(2)).map(_.asInstanceOf[Double])))).toMap
+      assert(got.length == c.batch.size, s"crawl $i: one verdict per batch doc")
+      assert(got.forall(r => r.getBoolean(3) == r.isNullAt(1)))
+      assert(gotMap == expect, s"crawl $i")
+      assert(acc.value == expectSkipped, s"crawl $i skips")
     }
   }
 }
