@@ -339,39 +339,7 @@ object Main {
     val listener = new graft.progress.Progress.ProgressListener(echo = !conf.quiet)
     if (conf.progress) spark.listenerManager.register(listener)
 
-    // repeated-input skip (F6, CLI.pm:179-183) + accumulation across
-    // inputs (Files.pm:36-44): union of source reads
-    val docs0 = conf.inputs.distinct.map(load(spark, _)).reduce(_ unionByName _)
-    // release-hygiene pre-filter: blocked domains never enter the
-    // pipeline (map-side codegen'd filter — pushes to the scan)
-    val docs1d =
-      if (conf.blockDomains.isEmpty) docs0
-      else graft.text.UrlNorm.dropBlockedDomains(docs0, conf.blockDomains)
-    // word-blocklist page gate (C4 §2.2) — same map-side scan
-    val docs1 =
-      if (conf.badWords.isEmpty) docs1d
-      else graft.text.C4Clean.dropBadWordPages(docs1d, conf.badWords)
-    // crawl-policy compliance re-filter (the --robots pass): disallowed
-    // urls never enter the pipeline — the rule table is domain-grain
-    val docs1r = conf.robots match {
-      case Some(path) =>
-        val agent = conf.agent.getOrElse(throw new IllegalArgumentException(
-          "--robots requires --agent"))
-        robotsSurvivors(docs1, loadRobots(spark, path), agent)
-      case None =>
-        require(conf.agent.isEmpty, "--agent requires --robots")
-        docs1
-    }
-    // quality gate BEFORE dedup (the webtext pipeline order): docs
-    // failing the Gopher rule battery never enter the pipeline —
-    // map-side, same scan as the hygiene filter above
-    val docs2 = conf.prefilter match {
-      case Some("gopher") => gopherSurvivors(docs1r)
-      case _ => docs1r
-    }
-    val docs =
-      if (conf.progress) graft.progress.Progress.tap(docs2, "scan_docs", Some("html"))
-      else docs2
+    val docs = inputDocs(spark, conf)
 
     // incremental mode short-circuits the clustering pipeline: the
     // batch is judged against the accumulated digest snapshot only.
@@ -389,19 +357,6 @@ object Main {
     require(conf.clustersSnapshot.isEmpty,
       "--clusters-snapshot requires --snapshot or --near-snapshot")
 
-    val cfg = DedupPipeline.Config(
-      algs = if (conf.byteVerify) conf.algs :+ "bytes" else conf.algs,
-      ignoreEmpty = conf.ignoreEmpty,
-      useMinHash = !conf.exactOnly,
-      useSimHash = !conf.exactOnly,
-      minhash = minhashConfigOf(conf),
-      useSubstring = conf.substring.isDefined,
-      substring = conf.substring.map(m =>
-        DedupPipeline.SubstringConfig(minShared = m))
-        .getOrElse(DedupPipeline.SubstringConfig()),
-      useLongRun = conf.longrun.isDefined,
-      longRun = conf.longrun.map(l => DedupPipeline.LongRunConfig(minLen = l))
-        .getOrElse(DedupPipeline.LongRunConfig()))
     // the dataset-audit formats (overlap/lm/ccnet) read only the INPUT
     // corpus — running the dedup DAG (shingles, MinHash-128, banded
     // pairing, CC iterations) to then never read its result would cost
@@ -410,13 +365,7 @@ object Main {
     val auditOnly =
       Set("overlap", "lm", "ccnet", "mirrors", "hitters").contains(conf.format)
     val catalog = conf.checkpoint.map(new Catalog(_, spark))
-    lazy val result = catalog match {
-      case Some(cat) =>
-        // a synth:N input scans no file: its spec is its lineage
-        DedupPipeline.runCheckpointed(docs, cat, cfg,
-          inputLineage = conf.inputs.distinct.filter(_.startsWith("synth:")).mkString(","))
-      case None => DedupPipeline.run(docs, cfg)
-    }
+    lazy val result = runPipeline(docs, conf, catalog)
 
     // quality keep-policy (r4 VERDICT #5): the cluster survivor is the
     // argmax-quality member instead of the min-url canonical. Keepers
@@ -463,6 +412,86 @@ object Main {
       }
     }
     spark.stop()
+  }
+
+  /** The docs a run reads: the union of its inputs through the
+    * pre-filters (`--block-domains`, `--badwords`, `--robots`/`--agent`,
+    * `--prefilter`), all map-side over one scan.
+    */
+  private[graft] def inputDocs(spark: SparkSession, conf: Conf): DataFrame = {
+    // repeated-input skip (F6, CLI.pm:179-183) + accumulation across
+    // inputs (Files.pm:36-44): union of source reads
+    val docs0 = conf.inputs.distinct.map(load(spark, _)).reduce(_ unionByName _)
+    // release-hygiene pre-filter: blocked domains never enter the
+    // pipeline (map-side codegen'd filter — pushes to the scan)
+    val docs1d =
+      if (conf.blockDomains.isEmpty) docs0
+      else graft.text.UrlNorm.dropBlockedDomains(docs0, conf.blockDomains)
+    // word-blocklist page gate (C4 §2.2) — same map-side scan
+    val docs1 =
+      if (conf.badWords.isEmpty) docs1d
+      else graft.text.C4Clean.dropBadWordPages(docs1d, conf.badWords)
+    // crawl-policy compliance re-filter (the --robots pass): disallowed
+    // urls never enter the pipeline — the rule table is domain-grain
+    val docs1r = conf.robots match {
+      case Some(path) =>
+        val agent = conf.agent.getOrElse(throw new IllegalArgumentException(
+          "--robots requires --agent"))
+        robotsSurvivors(docs1, loadRobots(spark, path), agent)
+      case None =>
+        require(conf.agent.isEmpty, "--agent requires --robots")
+        docs1
+    }
+    // quality gate BEFORE dedup (the webtext pipeline order): docs
+    // failing the Gopher rule battery never enter the pipeline —
+    // map-side, same scan as the hygiene filter above
+    val docs2 = conf.prefilter match {
+      case Some("gopher") => gopherSurvivors(docs1r)
+      case _ => docs1r
+    }
+    if (conf.progress) graft.progress.Progress.tap(docs2, "scan_docs", Some("html"))
+    else docs2
+  }
+
+  /** The clustering pipeline over `docs`, staged in `catalog` when
+    * `--checkpoint` is set.
+    */
+  private[graft] def runPipeline(docs: DataFrame, conf: Conf,
+      catalog: Option[Catalog]): DedupPipeline.Result = {
+    val cfg = DedupPipeline.Config(
+      algs = if (conf.byteVerify) conf.algs :+ "bytes" else conf.algs,
+      ignoreEmpty = conf.ignoreEmpty,
+      useMinHash = !conf.exactOnly,
+      useSimHash = !conf.exactOnly,
+      minhash = minhashConfigOf(conf),
+      useSubstring = conf.substring.isDefined,
+      substring = conf.substring.map(m =>
+        DedupPipeline.SubstringConfig(minShared = m))
+        .getOrElse(DedupPipeline.SubstringConfig()),
+      useLongRun = conf.longrun.isDefined,
+      longRun = conf.longrun.map(l => DedupPipeline.LongRunConfig(minLen = l))
+        .getOrElse(DedupPipeline.LongRunConfig()))
+    catalog match {
+      case Some(cat) => DedupPipeline.runCheckpointed(docs, cat, cfg, checkpointLineage(conf))
+      case None => DedupPipeline.run(docs, cfg)
+    }
+  }
+
+  /** The input lineage of a checkpointed run that the plan's file
+    * listing (`Catalog.inputFiles`) cannot show: the `synth:N` specs,
+    * which scan no file, and the pre-filters, which change the docs
+    * without changing the files (the `--robots` table's own files are
+    * in the plan). Empty when every input is a WARC/WET file, read
+    * outside the plan, so such a run still recomputes every stage.
+    */
+  private[graft] def checkpointLineage(conf: Conf): String = {
+    val inputs = conf.inputs.distinct
+    if (inputs.forall(i => Seq(".warc", ".warc.gz", ".wet", ".wet.gz").exists(i.endsWith))) ""
+    else (inputs.filter(_.startsWith("synth:")) ++ Seq(
+        "block" -> conf.blockDomains.mkString(","), "badwords" -> conf.badWords.mkString(","),
+        "robots" -> conf.robots.getOrElse(""), "agent" -> conf.agent.getOrElse(""),
+        "prefilter" -> conf.prefilter.getOrElse(""))
+      .collect { case (k, v) if v.nonEmpty => s"$k=$v" }).mkString(",")
   }
 
   /** Tab output to stdout or a csv path. Stdout streams

@@ -245,19 +245,8 @@ object IncrementalNearDup {
   /** Append-only snapshot update: band + sig rows for the batch docs
     * RETAINED by `verdicts` (is_novel = true). Union these onto the
     * snapshot tables — near-dups never enter the snapshot, so it stays
-    * one row per retained doc per band. Prefer
-    * [[snapshotDeltaFromSignatures]] when the batch signatures are
-    * already on hand (this overload re-shingles the batch).
-    */
-  def snapshotDelta(batch: DataFrame, verdicts: DataFrame,
-      cfg: MinHashLSH.Config = MinHashLSH.Config(),
-      idCol: String = "url", textCol: String = "text"): Snapshot =
-    snapshotDeltaFromSignatures(
-      MinHashLSH.signatures(batch, cfg, textCol, idCol), verdicts, cfg, idCol)
-
-  /** [[snapshotDelta]] over precomputed batch signatures — zero
-    * re-shingling: the delta is a filter of rows already computed for
-    * the probe.
+    * one row per retained doc per band. Zero re-shingling: the delta is
+    * a filter of the batch signatures already computed for the probe.
     */
   def snapshotDeltaFromSignatures(batchSigs: DataFrame, verdicts: DataFrame,
       cfg: MinHashLSH.Config = MinHashLSH.Config(),

@@ -2,30 +2,26 @@ package graft.functions
 
 import org.apache.spark.sql.{Dataset, Encoder}
 
-/** Bounded group draining for streamed bucket aggregation (SCALE.md
-  * invariant 3, round-3 rev).
+/** The capped bucket drain behind every pairing stage (SCALE.md
+  * invariant 3, "capped AND surfaced"): MinHash bands, SimHash probe
+  * tables, substring windows, winnowing grams, hyperplane buckets and
+  * embedding cells all go through [[drainGroups]].
   *
-  * Round-2 capped the hot-bucket blowup with a typed `Aggregator`
-  * (udaf) holding ≤ cap+1 members. MEASURED this round: any
-  * TypedImperativeAggregate runs under `ObjectHashAggregateExec`,
-  * which falls back to SORT-based aggregation after 128 distinct keys
-  * per partition (`spark.sql.objectHashAggregate.sortBased.
-  * fallbackThreshold`) — and in sort-based mode every partial buffer
-  * is Encoder-serialized between runs. On the 20k-doc pipeline bench
-  * the fallback cost 41% of wall time (22.0s → 13.0s with the
-  * threshold raised). The library-level fix is to stop aggregating
-  * into object buffers at all: shuffle the banded rows once and STREAM
-  * each bucket through `groupByKey(...).flatMapGroups`, draining into
-  * a bounded buffer — the same shuffle+sort the fallback was paying,
-  * minus the per-row buffer ser/de and the doomed hash-map phase.
+  * Why a streamed drain and not an aggregate: any
+  * TypedImperativeAggregate runs under `ObjectHashAggregateExec`, which
+  * falls back to SORT-based aggregation after 128 distinct keys per
+  * partition and then Encoder-serializes every partial buffer between
+  * runs (measured 41% of the 20k-doc pipeline's wall time). Shuffling
+  * the keyed rows once and STREAMING each bucket through
+  * `groupByKey(...).flatMapGroups` into a buffer of at most cap+1
+  * members pays the same shuffle+sort without the per-row buffer
+  * ser/de.
   *
-  * Skew note: unlike the udaf, flatMapGroups has no map-side combine,
-  * so one over-cap bucket's rows all land in one task. The drain is
-  * O(rows) streaming with O(cap) memory — a 10M-row boilerplate band
-  * is a few seconds of one-task scan, surfaced by its skip row, never
-  * an OOM. (If a corpus is dominated by one pathological key, a
-  * salted two-round drain splits it; not needed at the measured
-  * scales.)
+  * Skew: flatMapGroups has no map-side combine, so one over-cap
+  * bucket's rows all land in one task — O(rows) streaming with O(cap)
+  * memory, surfaced by its skip row, never an OOM. `salts > 1` splits
+  * such a key over two rounds (the two-level repartition of a hot key
+  * in Hyper Dimension Shuffle, VLDB'19).
   */
 object CappedGroups {
 
@@ -41,63 +37,72 @@ object CappedGroups {
     (n, buf)
   }
 
-  /** Two-round SALTED capped drain — the generalization of the r4
-    * MinHash-band mechanism to every pairing stage (r4 VERDICT #4).
+  /** Drain every `key` bucket of `rows` and hand (row count, ≤ cap+1
+    * `value`s) to `emit`. Rows stay flat (the key is a function, not a
+    * column), so the shuffle carries no nested key struct.
     *
-    * The single-round `groupByKey(...).flatMapGroups(drain)` streams a
-    * whole bucket through ONE task. That is O(cap) memory and surfaced
-    * by its skip row, but a corpus dominated by a single pathological
-    * key (every doc sharing one boilerplate band/gram/code) serializes
-    * on that one task's O(rows) scan. Here round 1 groups by
-    * (key, salt(member) mod salts) — the hot key's rows spread over
-    * `salts` parallel tasks, each draining to a BOUNDED partial
-    * (count, ≤ cap+1 members) — and round 2 merges the ≤
-    * salts·(cap+1)-member partials per key and hands (total, members)
-    * to `emit`. When total ≤ cap every row survived its partial, so
-    * the merged member list is the complete bucket and the output is
-    * IDENTICAL to the single-round path; when total > cap the caller
-    * emits its skip row exactly as before. Salting on the MEMBER (not
-    * the row) keeps duplicate-member rows of one key in one
-    * sub-bucket, so member-distinct inputs stay distinct per partial.
+    * `salts == 1`: one round, `groupByKey(key).flatMapGroups` + [[drain]].
     *
-    * `rows` must be (key, member) pairs; encoders resolve at the call
-    * site via `spark.implicits._`.
+    * `salts > 1`: round 1 groups by (key, salt of `member(value)` mod
+    * salts), so a hot key's rows spread over `salts` tasks, each
+    * draining to a bounded partial (count, ≤ cap+1 values); round 2
+    * merges a key's partials. When the total is ≤ cap every row
+    * survived its partial, so `emit` sees the complete bucket, as in
+    * one round; above the cap it sees the exact total. Salting on the
+    * member keeps all rows of one member in one sub-bucket.
     */
-  def saltedDrain[K, V, O](rows: Dataset[(K, V)], cap: Int, salts: Int,
-      salt: V => Int, emit: (K, Long, collection.IndexedSeq[V]) => Iterator[O])(
-      implicit ek: Encoder[(K, Int)], ekk: Encoder[K],
+  def drainGroups[R, K, V, O](rows: Dataset[R], key: R => K, value: R => V, cap: Int,
+      salts: Int, member: V => String)(emit: (Long, collection.IndexedSeq[V]) => Iterator[O])(
+      implicit ek: Encoder[K], eks: Encoder[(K, Int)],
       ep: Encoder[(K, Long, Seq[V])], eo: Encoder[O]): Dataset[O] = {
     require(salts >= 1, "salts must be >= 1")
-    saltedPartials(rows, cap, salts, salt)
-      .groupByKey(_._1)
-      .flatMapGroups { (k, parts) =>
-        var total = 0L
-        val buf = new scala.collection.mutable.ArrayBuffer[V](16)
-        while (parts.hasNext) {
-          val (_, n, sample) = parts.next()
-          total += n
-          if (buf.length <= cap) buf ++= sample
-        }
-        emit(k, total, buf)
+    if (salts == 1)
+      rows.groupByKey(key).flatMapGroups { (_, it) =>
+        val (n, vs) = drain(it.map(value), cap)
+        emit(n, vs)
       }
+    else
+      saltedPartials(rows, key, value, cap, salts, member).groupByKey(_._1)
+        .flatMapGroups { (_, parts) =>
+          var total = 0L
+          val buf = new scala.collection.mutable.ArrayBuffer[V](16)
+          while (parts.hasNext) {
+            val (_, n, sample) = parts.next()
+            total += n
+            if (buf.length <= cap) buf ++= sample
+          }
+          emit(total, buf)
+        }
   }
 
-  /** Round 1 of [[saltedDrain]], also exposed directly so stage tests
-    * can assert no round-1 group ever holds a whole hot bucket: one
-    * bounded partial (key, count, ≤ cap+1 member sample) per
-    * (key, salt(member) mod salts) sub-bucket. saltedDrain's round 1
-    * IS this computation — one implementation, so a salt-distribution
-    * regression cannot hide from the round-1 tests behind a
-    * test-only copy salted with a different hash than the shipping
-    * path (round-5 review finding).
+  /** Round 1 of a salted [[drainGroups]]: one bounded partial
+    * (key, count, ≤ cap+1 values) per (key, salt) sub-bucket. Open to
+    * tests so they can assert no round-1 group holds a whole hot bucket.
     */
-  def saltedPartials[K, V](rows: Dataset[(K, V)], cap: Int, salts: Int,
-      salt: V => Int)(implicit ek: Encoder[(K, Int)],
+  private[graft] def saltedPartials[R, K, V](rows: Dataset[R], key: R => K, value: R => V,
+      cap: Int, salts: Int, member: V => String)(implicit eks: Encoder[(K, Int)],
       ep: Encoder[(K, Long, Seq[V])]): Dataset[(K, Long, Seq[V])] =
     rows
-      .groupByKey(r => (r._1, math.floorMod(salt(r._2), salts)))
-      .mapGroups { (key, it) =>
-        val (n, sample) = drain(it.map(_._2), cap)
-        (key._1, n, sample.toSeq)
+      .groupByKey(r => (key(r), math.floorMod(
+        scala.util.hashing.MurmurHash3.stringHash(member(value(r))), salts)))
+      .mapGroups { (k, it) =>
+        val (n, sample) = drain(it.map(value), cap)
+        (k._1, n, sample.toSeq)
       }
+
+  /** The id-pair emit: a bucket of 2..cap rows yields the unordered
+    * pairs of its distinct ids, (smaller, larger, skipped = 0); an
+    * over-cap bucket yields ONE (null, null, n) skip row instead.
+    */
+  def pairsOrSkip(cap: Int)(n: Long,
+      ids: collection.IndexedSeq[String]): Iterator[(String, String, Long)] =
+    if (n > cap) Iterator.single((null: String, null: String, n))
+    else if (ids.length < 2) Iterator.empty
+    else {
+      val s = ids.distinct.sorted
+      for {
+        i <- s.indices.iterator
+        j <- ((i + 1) until s.length).iterator
+      } yield (s(i), s(j), 0L)
+    }
 }

@@ -2,6 +2,7 @@ package graft.near
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import graft.functions.CappedGroups
 
 /** Deterministic hashing primitives shared by the near-dup stack.
   * Pure functions of (seed, input) — reproducible across runs and
@@ -325,51 +326,27 @@ object MinHashLSH {
         else minhashUdf(col("shingles"), lit(cfg.numPerms), lit(cfg.seed)))
 
   /** Candidate pairs + over-cap skip rows from banded LSH, in ONE
-    * streamed shuffle pass: explode band hashes per doc, group each
-    * (band_id, band_hash) bucket with `groupByKey`, STREAM the bucket
-    * through a bounded drain (`CappedGroups.drain` — at most cap+1
-    * members held, everything counted). A bucket of 2..cap members
-    * emits its unordered pairs with skipped=0; an over-capacity bucket
-    * (boilerplate hot band — the quadratic-blowup guard of SURVEY
-    * §7.3) emits ONE (null, null, n) skip row instead, so the skip
-    * metric is a side output of the same pass, never a second
-    * shingling scan. (An object-buffer udaf here sort-falls-back past
-    * 128 groups/partition and Encoder-serializes every partial buffer
-    * — measured 41% of pipeline wall time; see CappedGroups.)
+    * streamed shuffle pass: explode band hashes per doc and drain each
+    * (band_id, band_hash) bucket through [[CappedGroups.drainGroups]]
+    * (at most cap+1 members held, everything counted). A bucket of
+    * 2..cap members emits its unordered pairs with skipped=0; an
+    * over-capacity bucket (boilerplate hot band — the quadratic-blowup
+    * guard of SURVEY §7.3) emits ONE (null, null, n) skip row instead,
+    * so the skip metric is a side output of the same pass, never a
+    * second shingling scan. With `cfg.salts` above 1 the drain runs in
+    * two rounds.
     */
   def candidatesAndSkips(sigs: DataFrame, cfg: Config = Config()): DataFrame = {
-    if (cfg.salts > 1) return candidatesAndSkipsSalted(sigs, cfg)
     val spark = sigs.sparkSession
     import spark.implicits._
-    val cap = cfg.maxBucket
-    sigs
-      .filter(col("sig").isNotNull)
-      .select(col("id"),
-        posexplode(bandsUdf(col("sig"), lit(cfg.bands), lit(cfg.rowsPerBand)))
-          .as(Seq("band_id", "band_hash")))
-      .as[(String, Int, Long)]
-      .groupByKey(r => (r._2, r._3))
-      .flatMapGroups { (_, rows) =>
-        val (n, ids0) = graft.functions.CappedGroups.drain(rows.map(_._1), cap)
-        if (n > cap) Iterator.single((null: String, null: String, n))
-        else if (n < 2) Iterator.empty
-        else {
-          val ids = ids0.sorted
-          for {
-            i <- ids.indices.iterator
-            j <- ((i + 1) until ids.length).iterator
-          } yield (ids(i), ids(j), 0L)
-        }
-      }
+    type Row = (String, Int, Long)
+    CappedGroups.drainGroups(banded(sigs, cfg), (r: Row) => (r._2, r._3), (r: Row) => r._1,
+        cfg.maxBucket, cfg.salts, identity[String])(CappedGroups.pairsOrSkip(cfg.maxBucket))
       .toDF("src", "dst", "skipped")
   }
 
-  /** The (band bucket key, member id) pairs that feed the salted
-    * drain — ONE construction shared by the shipping pairing path and
-    * the test-facing round-1 partials, so they can never diverge.
-    */
-  private def bandedMembers(sigs: DataFrame,
-      cfg: Config): Dataset[((Int, Long), String)] = {
+  /** (id, band_id, band_hash): one row per band of each signed doc. */
+  private[near] def banded(sigs: DataFrame, cfg: Config): Dataset[(String, Int, Long)] = {
     val spark = sigs.sparkSession
     import spark.implicits._
     sigs
@@ -378,80 +355,6 @@ object MinHashLSH {
         posexplode(bandsUdf(col("sig"), lit(cfg.bands), lit(cfg.rowsPerBand)))
           .as(Seq("band_id", "band_hash")))
       .as[(String, Int, Long)]
-      .map(r => ((r._2, r._3), r._1))
-  }
-
-  /** The member-salt of the band drain (what spreads a hot bucket's
-    * rows over round-1 tasks) — the ONE function the shipping path
-    * uses; tests asserting round-1 boundedness go through the same
-    * symbol (a test-only copy salted with a different hash would let
-    * a salt-distribution regression pass the round-1 tests).
-    */
-  private[near] val memberSalt: String => Int =
-    id => scala.util.hashing.MurmurHash3.stringHash(id)
-
-  /** Round 1 of the salted drain: each (band bucket, salt) sub-bucket
-    * — salt = memberSalt(id) mod salts, so a hot bucket's rows spread
-    * over `salts` tasks — drains to a bounded partial
-    * ((band_id, band_hash), n, ≤ cap+1 sample ids). Exposed for tests
-    * to assert no round-1 group ever held the whole bucket; this IS
-    * the shipping [[candidatesAndSkipsSalted]] round 1
-    * ([[graft.functions.CappedGroups.saltedPartials]] on the same
-    * banded rows and the same salt).
-    */
-  def saltedPartials(sigs: DataFrame,
-      cfg: Config): Dataset[((Int, Long), Long, Seq[String])] = {
-    val spark = sigs.sparkSession
-    import spark.implicits._
-    graft.functions.CappedGroups.saltedPartials(
-      bandedMembers(sigs, cfg), cfg.maxBucket, cfg.salts, memberSalt)
-  }
-
-  /** Salted two-round variant of [[candidatesAndSkips]] — same output
-    * contract, but a single pathological over-cap key (one band bucket
-    * holding ~the whole corpus — the one-task O(rows) stream the
-    * CappedGroups skew note documents) is split across `cfg.salts`
-    * round-1 tasks via the shared [[graft.functions.CappedGroups
-    * .saltedDrain]] mechanism (round-5: ONE implementation serves all
-    * five pairing stages — bands here, SimHash tables, substring
-    * windows, winnowing grams, hyperplane buckets).
-    */
-  def candidatesAndSkipsSalted(sigs: DataFrame, cfg: Config): DataFrame = {
-    val spark = sigs.sparkSession
-    import spark.implicits._
-    val cap = cfg.maxBucket
-    graft.functions.CappedGroups.saltedDrain[(Int, Long), String, (String, String, Long)](
-      bandedMembers(sigs, cfg), cap, cfg.salts, memberSalt,
-      (_, total, ids) =>
-        if (total > cap) Iterator.single((null: String, null: String, total))
-        else if (ids.length < 2) Iterator.empty
-        else {
-          val s = ids.sorted
-          for {
-            i <- s.indices.iterator
-            j <- ((i + 1) until s.length).iterator
-          } yield (s(i), s(j), 0L)
-        })
-      .toDF("src", "dst", "skipped")
-  }
-
-  /** Distinct candidate pairs (pairs-only view of candidatesAndSkips). */
-  def candidates(sigs: DataFrame, cfg: Config = Config()): DataFrame =
-    candidatesAndSkips(sigs, cfg)
-      .filter(col("src").isNotNull)
-      .select("src", "dst")
-      .distinct()
-
-  /** Count of rows in over-capacity LSH buckets (skipped-candidate
-    * metric — no silent truncation).
-    */
-  def skippedBucketRows(sigs: DataFrame, cfg: Config = Config()): DataFrame = {
-    sigs.filter(col("sig").isNotNull)
-      .select(col("id"),
-        posexplode(bandsUdf(col("sig"), lit(cfg.bands), lit(cfg.rowsPerBand)))
-          .as(Seq("band_id", "band_hash")))
-      .groupBy("band_id", "band_hash").count()
-      .filter(col("count") > cfg.maxBucket)
   }
 
   /** Verified near-dup edges: exact Jaccard on the shingle sets of the
@@ -467,7 +370,9 @@ object MinHashLSH {
   def edges(docs: DataFrame, cfg: Config = Config(), textCol: String = "text",
       idCol: String = "url"): DataFrame = {
     val sigs = signatures(docs, cfg, textCol, idCol).persist()
-    val out = verifyCandidates(candidates(sigs, cfg), sigs, cfg).localCheckpoint()
+    val cand = candidatesAndSkips(sigs, cfg).filter(col("src").isNotNull)
+      .select("src", "dst").distinct()
+    val out = verifyCandidates(cand, sigs, cfg).localCheckpoint()
     sigs.unpersist()
     out
   }

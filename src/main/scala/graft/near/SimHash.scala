@@ -41,9 +41,9 @@ object SimHash {
       shingleK: Int = 5,
       seed: Long = 42L,
       maxBucket: Int = 200,
-      /** > 1 enables the salted two-round drain (shared
-        * CappedGroups.saltedDrain): a corpus dominated by ONE probe
-        * bucket streams through `salts` round-1 tasks instead of one.
+      /** > 1 drains in two salted rounds (CappedGroups.drainGroups):
+        * a corpus dominated by ONE probe bucket streams through `salts`
+        * round-1 tasks instead of one.
         */
       salts: Int = 1) {
     require(maxHamming < blocks && blocks <= 64, "pigeonhole needs maxHamming < blocks <= 64")
@@ -157,16 +157,22 @@ object SimHash {
   /** Hamming-verified pairs + over-cap skip rows in ONE streamed
     * shuffle pass (same shape and rationale as
     * MinHashLSH.candidatesAndSkips): each (table_id, key) probe bucket
-    * streams through a bounded drain; a 2..cap bucket emits its
-    * Hamming-≤-max pairs (verification fused into pair generation), an
-    * over-cap bucket emits one (null, null, 0, n) skip row.
+    * drains through [[graft.functions.CappedGroups.drainGroups]]; a
+    * 2..cap bucket emits its Hamming-≤-max pairs (verification fused
+    * into pair generation), an over-cap bucket emits one
+    * (null, null, 0, n) skip row.
     */
   def edgesAndSkips(fp0: DataFrame, cfg: Config = Config()): DataFrame = {
     val spark = fp0.sparkSession
     import spark.implicits._
     val cap = cfg.maxBucket
     val maxHam = cfg.maxHamming
-    def emit(n: Long, ms0: collection.IndexedSeq[(String, Long)]): Iterator[(String, String, Int, Long)] =
+    val rows = probed(fp0.filter(col("simhash").isNotNull), cfg)
+      .select(col("table_id"), col("key"), col("id"), col("simhash"))
+      .as[(Int, Long, String, Long)]
+    type Row = (Int, Long, String, Long)
+    graft.functions.CappedGroups.drainGroups(rows, (r: Row) => (r._1, r._2),
+        (r: Row) => (r._3, r._4), cap, cfg.salts, (m: (String, Long)) => m._1) { (n, ms0) =>
       if (n > cap) Iterator.single((null: String, null: String, 0, n))
       else if (ms0.length < 2) Iterator.empty
       else {
@@ -178,24 +184,7 @@ object SimHash {
           if h <= maxHam
         } yield (s(i)._1, s(j)._1, h, 0L)
       }
-    val rows = probed(fp0.filter(col("simhash").isNotNull), cfg)
-      .select(col("table_id"), col("key"), col("id"), col("simhash"))
-      .as[(Int, Long, String, Long)]
-    val out =
-      if (cfg.salts > 1)
-        // salted two-round drain (shared mechanism — see CappedGroups):
-        // a corpus-dominating probe bucket spreads over `salts` tasks
-        graft.functions.CappedGroups.saltedDrain[(Int, Long), (String, Long), (String, String, Int, Long)](
-          rows.map(r => ((r._1, r._2), (r._3, r._4))), cap, cfg.salts,
-          m => scala.util.hashing.MurmurHash3.stringHash(m._1),
-          (_, n, ms) => emit(n, ms))
-      else
-        rows.groupByKey(r => (r._1, r._2))
-          .flatMapGroups { (_, rs) =>
-            val (n, ms0) = graft.functions.CappedGroups.drain(rs.map(r => (r._3, r._4)), cap)
-            emit(n, ms0)
-          }
-    out.toDF("src", "dst", "hamming", "skipped")
+    }.toDF("src", "dst", "hamming", "skipped")
   }
 
   /** Edges from precomputed (id, simhash) — see fingerprintsFromShingles. */
@@ -204,13 +193,4 @@ object SimHash {
       .filter(col("src").isNotNull)
       .select("src", "dst", "hamming")
       .distinct()
-
-  /** Count of rows in over-capacity probe buckets (skipped-candidate
-    * metric — no silent truncation; pipelines should surface this).
-    */
-  def skippedBucketRows(docs: DataFrame, cfg: Config = Config(), textCol: String = "text",
-      idCol: String = "url"): DataFrame =
-    probed(fingerprints(docs, cfg, textCol, idCol).filter(col("simhash").isNotNull), cfg)
-      .groupBy(col("table_id"), col("key")).count()
-      .filter(col("count") > cfg.maxBucket)
 }

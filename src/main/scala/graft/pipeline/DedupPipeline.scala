@@ -44,7 +44,7 @@ object DedupPipeline {
       minShared: Int = 2,
       maxDocsPerWindow: Int = 50,
       /** > 1 spreads a corpus-dominating window hash over this many
-        * round-1 tasks (shared CappedGroups.saltedDrain mechanism).
+        * round-1 tasks (CappedGroups.drainGroups).
         */
       salts: Int = 1)
 
@@ -56,7 +56,7 @@ object DedupPipeline {
       minLen: Int = 60,
       maxDocsPerGram: Int = 50,
       /** > 1 spreads a corpus-dominating winnow gram over this many
-        * round-1 tasks (shared CappedGroups.saltedDrain mechanism).
+        * round-1 tasks (CappedGroups.drainGroups).
         */
       salts: Int = 1)
 

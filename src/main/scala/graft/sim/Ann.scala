@@ -134,12 +134,6 @@ object Ann {
     else math.min(128, math.max(1, math.ceil(math.log1p(-recall) / math.log1p(-q)).toInt))
   }
 
-  /** (table_id, code, id) — one row per (vector, table), map-side. */
-  private def codes(df: DataFrame, tables: Int, bits: Int, seed: Long,
-      idCol: String, vecCol: Column, idAs: String): DataFrame =
-    df.select(col(idCol).as(idAs),
-      posexplode(tableCodes(tables, bits, seed)(vecCol)).as(Seq("table_id", "code")))
-
   /** Approximate top-k: banded LSH candidates (agree on all bits of
     * ≥1 table), exact cosine re-rank. Queries are broadcast, so the
     * corpus side never shuffles: corpus codes + prenormed vectors are
@@ -217,69 +211,6 @@ object Ann {
   /** cosine from prenormalized parts (dot / sqrt(na·nb)), zero-guarded. */
   def cosineFromParts(av: Column, an: Column, bv: Column, bn: Column): Column =
     when(an > 0 && bn > 0, dotUdf(av, bv) / sqrt(an * bn)).otherwise(lit(0.0))
-
-  /** Banded-LSH candidate pairs + over-cap skip rows over one corpus,
-    * in ONE streamed shuffle pass (the MinHashLSH.candidatesAndSkips
-    * contract, fused per ADVICE r3 #3): the code frame carries only
-    * (table_id, code, id-as-string), vectors never ride the candidate
-    * shuffle, each bucket streams through a bounded drain
-    * (`CappedGroups`). A 2..cap bucket emits its unordered pairs with
-    * skipped = 0; an over-cap bucket (boilerplate embedding cluster —
-    * the quadratic-blowup guard) emits ONE (null, null, n) skip row —
-    * capped AND surfaced in the same pass, no second corpus scan.
-    */
-  def candidatePairsAndSkips(corpus: DataFrame, bits: Int, tables: Int, seed: Long,
-      idCol: String, vecCol: String, maxBucket: Int, salts: Int = 1): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val cap = maxBucket
-    def emit(n: Long, ids0: collection.IndexedSeq[String]): Iterator[(String, String, Long)] =
-      if (n > cap) Iterator.single((null: String, null: String, n))
-      else if (ids0.length < 2) Iterator.empty
-      else {
-        val ids = ids0.sorted
-        for {
-          i <- ids.indices.iterator
-          j <- ((i + 1) until ids.length).iterator
-        } yield (ids(i), ids(j), 0L)
-      }
-    val rows = codes(corpus.select(col(idCol).cast("string").as(idCol), col(vecCol)),
-        tables, bits, seed, idCol, col(vecCol), "id")
-      .select(col("id"), col("table_id"), col("code"))
-      .as[(String, Int, Long)]
-    val out =
-      if (salts > 1)
-        // salted two-round drain (shared CappedGroups mechanism): a
-        // corpus-dominating hyperplane bucket spreads over `salts` tasks
-        graft.functions.CappedGroups.saltedDrain[(Int, Long), String, (String, String, Long)](
-          rows.map(r => ((r._2, r._3), r._1)), cap, salts,
-          id => scala.util.hashing.MurmurHash3.stringHash(id),
-          (_, n, ids) => emit(n, ids))
-      else rows
-        .groupByKey(r => (r._2, r._3))
-        .flatMapGroups { (_, rs) =>
-          val (n, ids0) = graft.functions.CappedGroups.drain(rs.map(_._1), cap)
-          emit(n, ids0)
-        }
-    out.toDF("src", "dst", "skipped")
-  }
-
-  /** Rows in over-capacity hyperplane buckets (skip metric — capped
-    * AND surfaced, SCALE.md invariant 3). A view over
-    * [[candidatePairsAndSkips]]'s skip rows, no separate code scan.
-    * Schema: a single `skipped` column, one row per over-cap bucket
-    * (per-bucket (table_id, code) attribution is intentionally not
-    * carried — the fused candidate pass keys skip rows on null
-    * (src, dst), which is what lets ONE shuffle serve pairs and
-    * metric; callers needing per-bucket detail should group the code
-    * projection directly).
-    */
-  def skippedBucketRows(corpus: DataFrame, bits: Int, tables: Int, seed: Long = 42L,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      maxBucket: Int = 4096): DataFrame =
-    candidatePairsAndSkips(corpus, bits, tables, seed, idCol, vecCol, maxBucket)
-      .filter(col("src").isNull)
-      .select(col("skipped"))
 
   /** In-drain verify kernel shared by [[embeddingDupEdgesAndSkips]]
     * and [[SemDeDup.edgesAndSkips]] (r6, guide §8): score every
@@ -374,19 +305,9 @@ object Ann {
         struct(col("ids").as("_1"), col("v").as("_2"), col("nn").as("_3")).as("_2"))
       .as[((Int, Long), (String, Seq[Double], Double))]
     val emit = emitVerified(cap, threshold) _
-    val raw =
-      if (salts > 1)
-        graft.functions.CappedGroups
-          .saltedDrain[(Int, Long), (String, Seq[Double], Double), (String, String, java.lang.Double, Long)](
-            rows, cap, salts,
-            m => scala.util.hashing.MurmurHash3.stringHash(m._1),
-            (_, nn, ms) => emit(nn, ms))
-      else rows
-        .groupByKey(_._1)
-        .flatMapGroups { (_, rs) =>
-          val (nn, ms) = graft.functions.CappedGroups.drain(rs.map(_._2), cap)
-          emit(nn, ms)
-        }
+    type Row = ((Int, Long), (String, Seq[Double], Double))
+    val raw = graft.functions.CappedGroups.drainGroups(rows, (r: Row) => r._1,
+      (r: Row) => r._2, cap, salts, (m: (String, Seq[Double], Double)) => m._1)(emit)
     // dedupe pairs found in several tables (identical scores) AND
     // collapse over-cap skip rows (null keys group together) in one
     // small shuffle over the VERIFIED set

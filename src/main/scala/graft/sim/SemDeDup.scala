@@ -17,12 +17,13 @@ import org.apache.spark.sql.functions._
   *     k-means clustering — assignment runs map-side against broadcast
   *     centroids, so the corpus never shuffles for clustering;
   *   - within-cell pairing streams through the bounded
-  *     [[graft.functions.CappedGroups]] drain: a 2..maxCell cell emits
-  *     its pairs, an over-cap cell emits ONE counted skip row — capped
-  *     AND surfaced in the same pass (SCALE.md invariant 3), with the
-  *     opt-in salted two-round drain for a corpus-dominating cell;
-  *   - exact cosine verify joins vectors onto the (small) candidate
-  *     set only — vectors never ride the candidate shuffle.
+  *     [[graft.functions.CappedGroups.drainGroups]] drain: a 2..maxCell
+  *     cell emits its verified pairs, an over-cap cell emits ONE
+  *     counted skip row — capped AND surfaced in the same pass
+  *     (SCALE.md invariant 3), in two salted rounds when `salts` is
+  *     above 1 (a corpus-dominating cell);
+  *   - the exact cosine verify runs inside the drain
+  *     ([[Ann.emitVerified]]): each vector rides the cell shuffle once.
   *
   * Differs from [[Ann.embeddingDupEdges]]'s banded hyperplane LSH in
   * being DATA-ADAPTIVE: one density-following partition instead of T
@@ -65,19 +66,9 @@ object SemDeDup {
         struct(col("id").cast("string").as("_1"), col("v").as("_2"),
           col("nn").as("_3")).as("_2"))
       .as[(Int, (String, Seq[Double], Double))]
-    val raw =
-      if (salts > 1)
-        graft.functions.CappedGroups
-          .saltedDrain[Int, (String, Seq[Double], Double), (String, String, java.lang.Double, Long)](
-            rows, cap, salts,
-            m => scala.util.hashing.MurmurHash3.stringHash(m._1),
-            (_, n, ms) => emit(n, ms))
-      else rows
-        .groupByKey(_._1)
-        .flatMapGroups { (_, rs) =>
-          val (n, ms) = graft.functions.CappedGroups.drain(rs.map(_._2), cap)
-          emit(n, ms)
-        }
+    type Row = (Int, (String, Seq[Double], Double))
+    val raw = graft.functions.CappedGroups.drainGroups(rows, (r: Row) => r._1,
+      (r: Row) => r._2, cap, salts, (m: (String, Seq[Double], Double)) => m._1)(emit)
     // cells partition the corpus, so verified (src, dst) pairs are
     // already distinct; the groupBy only collapses over-cap cells'
     // skip rows into one summed row — now over the SMALL verified set

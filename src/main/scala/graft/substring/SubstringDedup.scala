@@ -2,6 +2,7 @@ package graft.substring
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.CappedGroups
 import graft.near.Hashing
 
 /** Exact substring deduplication [EXT] (north rule; the approach of
@@ -11,9 +12,9 @@ import graft.near.Hashing
   *
   * Two complementary operators:
   *
-  *  1. `duplicatedWindows` — the SCALE path: every w-token window is
-  *     hashed map-side (content hash of the window); a single groupBy
-  *     finds windows occurring in ≥2 documents. Pure
+  *  1. `edgesAndSkips` — the SCALE path: every w-token window is
+  *     hashed map-side (content hash of the window); one capped drain
+  *     per window hash finds windows occurring in ≥2 documents. Pure
   *     shuffle-of-hashes, linear in corpus size, no cross-partition
   *     coordination — this is what runs at 10^12 docs.
   *
@@ -53,102 +54,31 @@ object SubstringDedup {
     docs.select(col(idCol).as("id"), posexplode(windowHashUdf(w, stride)(col(textCol)))
       .as(Seq("win_pos", "win_hash")))
 
-  /** Duplicated w-token windows: win_hash groups spanning ≥2 distinct
-    * docs. Output (win_hash, n_docs, doc_ids sample). Streamed over
-    * SORTED groups: exact distinct count + first-`sampleDocs` sample in
-    * O(sampleDocs) memory — a 10M-doc boilerplate window never
-    * materializes its member set (the previous collect_set did).
-    */
-  def duplicatedWindows(docs: DataFrame, w: Int = 20, stride: Int = 10,
-      idCol: String = "url", textCol: String = "text", sampleDocs: Int = 20): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    windowHashes(docs, w, stride, idCol, textCol)
-      .select(col("win_hash"), col("id"))
-      .as[(Long, String)]
-      .groupByKey(_._1)
-      .flatMapSortedGroups(col("id")) { (wh, rows) =>
-        var nDocs = 0L
-        var prev: String = null
-        val sample = new scala.collection.mutable.ArrayBuffer[String](sampleDocs)
-        while (rows.hasNext) {
-          val id = rows.next()._2
-          if (id != prev) {
-            nDocs += 1
-            if (sample.length < sampleDocs) sample += id
-            prev = id
-          }
-        }
-        if (nDocs >= 2) Iterator.single((wh, nDocs, sample.toSeq)) else Iterator.empty
-      }
-      .toDF("win_hash", "n_docs", "doc_ids")
-  }
-
   /** Docs sharing ≥ minShared duplicated windows → dup edges
     * (src < dst) PLUS one (null, null, skipped=n_docs) row per
     * over-capacity window, in the same pass — SCALE.md invariant 3
     * ("capped AND surfaced"): hot boilerplate windows (> cap distinct
     * docs, the quadratic-blowup guard of SURVEY §7.3) are counted out
-    * loud, never silently dropped. Streamed over sorted groups: at
-    * most cap+1 distinct ids held; an over-cap window finishes its
-    * scan counting runs in O(1) memory to report the true doc count.
-    * Output: (src, dst, shared_windows, skipped); skip rows have null
-    * src/dst, shared_windows = count of over-cap windows aggregated
-    * into the row.
+    * loud, never silently dropped. Each doc's window hashes are made
+    * distinct map-side (`array_distinct`), so a window's row count in
+    * [[CappedGroups.drainGroups]] IS its distinct-doc count, in one
+    * round and in salted rounds alike: a doc that repeats a window
+    * counts once. Output: (src, dst, shared_windows, skipped); skip
+    * rows have null src/dst, shared_windows = count of over-cap
+    * windows aggregated into the row.
     */
   def edgesAndSkips(docs: DataFrame, w: Int = 20, stride: Int = 10,
       minShared: Int = 2, idCol: String = "url", textCol: String = "text",
       maxDocsPerWindow: Int = 50, salts: Int = 1): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val cap = maxDocsPerWindow
-    val base =
-      if (salts > 1)
-        // salted two-round drain (shared CappedGroups mechanism): the
-        // per-doc array_distinct makes (win_hash, id) pairs unique, so
-        // round-1 row counts ARE distinct-doc counts; salting on the
-        // id keeps each doc's row in one sub-bucket.
-        graft.functions.CappedGroups.saltedDrain[Long, String, (String, String, Long)](
-          docs.select(col(idCol).as("id"),
-              explode(array_distinct(windowHashUdf(w, stride)(col(textCol)))).as("win_hash"))
-            .as[(String, Long)].map(r => (r._2, r._1)),
-          cap, salts, id => scala.util.hashing.MurmurHash3.stringHash(id),
-          (_, nDocs, ids0) =>
-            if (nDocs > cap) Iterator.single((null: String, null: String, nDocs))
-            else if (ids0.length < 2) Iterator.empty
-            else {
-              val ids = ids0.sorted
-              for {
-                i <- ids.indices.iterator
-                j <- ((i + 1) until ids.length).iterator
-              } yield (ids(i), ids(j), 0L)
-            })
-      else windowHashes(docs, w, stride, idCol, textCol)
-        .select(col("win_hash"), col("id"))
-        .as[(Long, String)]
-        .groupByKey(_._1)
-        .flatMapSortedGroups(col("id")) { (_, rows) =>
-          // sorted stream → distinct ids arrive as runs; keep ≤ cap+1
-          val ids = new scala.collection.mutable.ArrayBuffer[String](16)
-          var nDocs = 0L
-          var prev: String = null
-          while (rows.hasNext) {
-            val id = rows.next()._2
-            if (id != prev) {
-              nDocs += 1
-              if (ids.length <= cap) ids += id
-              prev = id
-            }
-          }
-          if (nDocs > cap) Iterator.single((null: String, null: String, nDocs))
-          else if (ids.length < 2) Iterator.empty
-          else
-            for {
-              i <- ids.indices.iterator
-              j <- ((i + 1) until ids.length).iterator
-            } yield (ids(i), ids(j), 0L)
-        }
-    base.toDF("src", "dst", "skipped")
+    val rows = docs
+      .select(explode(array_distinct(windowHashUdf(w, stride)(col(textCol)))),
+        col(idCol))
+      .as[(Long, String)]
+    CappedGroups.drainGroups(rows, (r: (Long, String)) => r._1, (r: (Long, String)) => r._2,
+        maxDocsPerWindow, salts, identity[String])(CappedGroups.pairsOrSkip(maxDocsPerWindow))
+      .toDF("src", "dst", "skipped")
       // one aggregation serves both outputs: pair rows count their
       // shared windows; the all-null skip group sums its doc counts
       .groupBy("src", "dst")
@@ -290,35 +220,13 @@ object SubstringDedup {
     val k = math.max(8, minLen / 2)
     val s = minLen - k + 1 // winnow window: guarantee kicks in at k+s−1 = minLen
     val fpUdf = udf((text: String) => winnowFingerprints(text, k, s))
-    val cap = maxDocsPerGram
-    def emit(n: Long, ids0: collection.IndexedSeq[String]): Iterator[(String, String, Long)] =
-      if (n > cap) Iterator.single((null: String, null: String, n))
-      else if (ids0.length < 2) Iterator.empty
-      else {
-        val ids = ids0.distinct.sorted
-        for {
-          i <- ids.indices.iterator
-          j <- ((i + 1) until ids.length).iterator
-        } yield (ids(i), ids(j), 0L)
-      }
-    val rows = docs.select(col(idCol).as("id"), explode(fpUdf(col(textCol))).as("fp"))
+    // winnowFingerprints is distinct per doc: a gram's row count is
+    // its distinct-doc count
+    val rows = docs.select(col(idCol), explode(fpUdf(col(textCol))))
       .as[(String, Long)]
-    val out =
-      if (salts > 1)
-        // salted two-round drain (shared CappedGroups mechanism);
-        // winnowFingerprints is distinct per doc, so round-1 row
-        // counts are distinct-doc counts
-        graft.functions.CappedGroups.saltedDrain[Long, String, (String, String, Long)](
-          rows.map(r => (r._2, r._1)), cap, salts,
-          id => scala.util.hashing.MurmurHash3.stringHash(id),
-          (_, n, ids) => emit(n, ids))
-      else rows
-        .groupByKey(_._2)
-        .flatMapGroups { (_, rs) =>
-          val (n, ids0) = graft.functions.CappedGroups.drain(rs.map(_._1), cap)
-          emit(n, ids0)
-        }
-    out.toDF("src", "dst", "skipped")
+    CappedGroups.drainGroups(rows, (r: (String, Long)) => r._2, (r: (String, Long)) => r._1,
+        maxDocsPerGram, salts, identity[String])(CappedGroups.pairsOrSkip(maxDocsPerGram))
+      .toDF("src", "dst", "skipped")
   }
 
   /** Verified long-run dup edges + skip rows, for pipeline wiring:

@@ -79,4 +79,25 @@ class CheckpointResumeSpec extends SparkSpec {
     assert(sameClusters(DedupPipeline.runCheckpointed(mem600, mem).clusters,
       DedupPipeline.run(mem600).clusters))
   }
+
+  test("two runs into one checkpoint dir that differ only in --block-domains give different clusters") {
+    val base = Files.createTempDirectory("graft-ckpt-prefilter").toString
+    val input = s"$base/docs"
+    Corpus.docs(spark, 200).toDF().write.parquet(input)
+    // the clustered urls of a run (read before the next run replaces
+    // the staged tables)
+    def clustered(extra: String*): Set[String] = {
+      val conf = graft.Main.parse(
+        List("--input", input, "--checkpoint", s"$base/catalog") ++ extra)
+      graft.Main.runPipeline(graft.Main.inputDocs(spark, conf), conf,
+        conf.checkpoint.map(new Catalog(_, spark))).clusters
+        .select("url").collect().map(_.getString(0)).toSet
+    }
+    val all = clustered()
+    val blocked = clustered("--block-domains", "host3.example")
+    assert(all.exists(_.contains("//host3.example/")))
+    assert(!blocked.exists(_.contains("//host3.example/")),
+      "the --block-domains run resumed the unfiltered run's clusters")
+    assert(blocked == all.filterNot(_.contains("//host3.example/")))
+  }
 }

@@ -197,7 +197,7 @@ class DedupEngineSpec extends SparkSpec {
     assert(j("E").isEmpty && j("D").exists(_ >= 0.5) && j("F").exists(_ >= 0.5))
     // append-only delta: only the NOVEL doc enters the snapshot
     val verd = dedupAgainst(b2, snap, cfg)
-    val delta = snapshotDelta(b2, verd, cfg)
+    val delta = snapshotDeltaFromSignatures(MinHashLSH.signatures(b2, cfg), verd, cfg)
     assert(delta.sigs.select("id").collect().map(_.getString(0)).toSet == Set("E"))
     assert(delta.bands.select("id").distinct().collect().map(_.getString(0)).toSet == Set("E"))
     assert(delta.bands.count() == cfg.bands)
@@ -254,7 +254,7 @@ class DedupEngineSpec extends SparkSpec {
     val sigs = MinHashLSH.signatures(batch, cfg).persist()
     val verdicts = dedupAgainstSignatures(sigs, snap, cfg)
     val viaSigs = snapshotDeltaFromSignatures(sigs, verdicts, cfg)
-    val viaText = snapshotDelta(batch, verdicts, cfg)
+    val viaText = snapshotDeltaFromSignatures(MinHashLSH.signatures(batch, cfg), verdicts, cfg)
     assert(viaSigs.bands.collect().toSet == viaText.bands.collect().toSet)
     assert(viaSigs.sigs.select("id").collect().map(_.getString(0)).toSet ==
       viaText.sigs.select("id").collect().map(_.getString(0)).toSet)

@@ -2,36 +2,63 @@ package graft.functions
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, rng}
 
-/** The generalized two-round salted drain (r4 VERDICT #4): ONE
-  * mechanism (CappedGroups.saltedDrain) behind all five pairing
-  * stages — MinHash bands (covered in NearDupSpec), SimHash tables,
-  * substring windows, winnowing grams, hyperplane buckets. Each
-  * stage gets (a) a single-hot-key test in the 1M-row single-band
+/** The salted two-round drain of `CappedGroups.drainGroups`, the ONE
+  * drain behind every pairing stage — MinHash bands (covered in
+  * NearDupSpec), SimHash tables, substring windows, winnowing grams,
+  * hyperplane buckets. The kernel is a property over random keyed rows;
+  * each stage gets (a) a single-hot-key test in the 1M-row single-band
   * pattern — the whole corpus in one bucket, totals exact, no pair
   * blowup — and (b) a parity test: on a sub-cap corpus the salted
   * path's output is identical to the single-round path's.
   */
 class SaltedDrainSpec extends SparkSpec {
 
+  // random (key, member) rows: up to 12 keys of 0..3·cap rows each, so
+  // every sample has keys at, below and above the cap; members repeat
+  // within a key (a member drawn twice is two rows)
+  private val cap = 6
+  private val sample: Gen[Seq[(String, String)]] = for {
+    k <- Gen.choose(3, 12)
+    sizes <- Gen.listOfN(k, Gen.oneOf(Gen.choose(0, cap), Gen.choose(cap + 1, 3 * cap)))
+    rows <- sizes.zipWithIndex.foldLeft(Gen.const(Seq.empty[(String, String)])) {
+      case (acc, (n, key)) => for {
+        done <- acc
+        more <- Gen.listOfN(n, Gen.choose(0, 2 * n).map(m => (s"k$key", s"m$m")))
+      } yield done ++ more
+    }
+  } yield rows
+
   test("saltedDrain kernel: hot-key totals exact, merged buffer bounded, sub-cap buckets complete") {
     import spark.implicits._
-    val cap = 50
-    val salts = 16
-    val rows = spark.range(200000).map(i => ("hot", s"m$i"))
-      .union(spark.range(30).map(i => ("cold", s"c$i")))
-    val out = CappedGroups.saltedDrain[String, String, (String, Long, Int, Seq[String])](
-      rows, cap, salts, m => scala.util.hashing.MurmurHash3.stringHash(m),
-      (k, total, buf) => Iterator.single((k, total, buf.length, buf.sorted.toSeq)))
-      .collect().map(r => r._1 -> r).toMap
-    // hot key: every row counted, merge stops growing at ~cap (the
-    // per-key round-2 state is O(cap), never O(rows))
-    assert(out("hot")._2 == 200000L)
-    assert(out("hot")._3 <= 2 * cap + 1, s"merged buffer held ${out("hot")._3}")
-    // cold key (total <= cap): every partial kept every member, so the
-    // merged member list is the COMPLETE bucket
-    assert(out("cold")._2 == 30L)
-    assert(out("cold")._4 == (0 until 30).map(i => s"c$i").sorted)
+    // eight seeded samples in one frame (keys tagged by sample), so one
+    // drain job per salt count covers them all
+    val samples = (0 until 8).flatMap(i =>
+      sample(Gen.Parameters.default, rng.Seed(9100L + i)).get.map { case (k, m) => (s"$i/$k", m) })
+    val rows = samples.toDS().repartition(4)
+    // key -> (total, members seen by emit); members carry their key
+    def drained(salts: Int): Map[String, (Long, Seq[String])] =
+      CappedGroups.drainGroups(rows, (r: (String, String)) => r._1, identity[(String, String)],
+          cap, salts, (m: (String, String)) => m._2) {
+        (n, ms) => Iterator.single((ms.head._1, n, ms.map(_._2).sorted.toSeq))
+      }.collect().map(r => r._1 -> ((r._2, r._3))).toMap
+    val truth = samples.groupBy(_._1).map { case (k, rs) => k -> rs.map(_._2).sorted }
+    assert(truth.values.exists(_.length > cap) && truth.values.exists(_.length <= cap))
+    val one = drained(1)
+    assert(one.keySet == truth.keySet)
+    for (salts <- Seq(2, 7)) {
+      val salted = drained(salts)
+      assert(salted.keySet == truth.keySet, s"salts=$salts")
+      for ((k, (total, ms)) <- salted) {
+        // totals exact at every key, hot or not
+        assert(total == truth(k).length && total == one(k)._1, s"salts=$salts key=$k")
+        // a sub-cap bucket is complete, as in one round
+        if (total <= cap) assert(ms == truth(k) && ms == one(k)._2, s"salts=$salts key=$k")
+        // the merged buffer stops growing past cap: O(cap), never O(rows)
+        else assert(ms.length <= 2 * cap + 1, s"salts=$salts key=$k held ${ms.length}")
+      }
+    }
   }
 
   test("SimHash salted: single hot probe bucket per table, skip totals exact, no pairs") {
@@ -118,10 +145,10 @@ class SaltedDrainSpec extends SparkSpec {
     val vec = Array(1.0f, 0.0f, 0.0f, 0.0f)
     val corpus = spark.range(n)
       .map(i => (s"v$i", vec)).toDF("vec_id", "embedding")
-    val out = Ann.candidatePairsAndSkips(corpus, bits = 8, tables = 2, seed = 42L,
-      "vec_id", "embedding", maxBucket = 100, salts = 8).collect()
+    val out = Ann.embeddingDupEdgesAndSkips(corpus, 0.99, bits0 = 8, tables0 = 2,
+      maxBucket = 100, salts = 8).collect()
     assert(out.forall(_.isNullAt(0)), "an over-cap bucket emitted pairs")
-    assert(out.map(_.getLong(2)).sum == 2 * n)
+    assert(out.map(_.getLong(3)).sum == 2 * n)
   }
 
   test("hyperplane buckets salted == single-round on a sub-cap corpus") {
@@ -131,10 +158,12 @@ class SaltedDrainSpec extends SparkSpec {
     val corpus = (0 until 60)
       .map(i => (s"v$i", Array.fill(8)(rnd.nextGaussian().toFloat)))
       .toDF("vec_id", "embedding")
+    // threshold -1 keeps every candidate pair: the verified edges ARE
+    // the bucket pairs
     def rows(salts: Int) =
-      Ann.candidatePairsAndSkips(corpus, bits = 4, tables = 3, seed = 42L,
-        "vec_id", "embedding", maxBucket = 500, salts = salts)
-        .collect().map(r => (r.getString(0), r.getString(1))).toSet
+      Ann.embeddingDupEdgesAndSkips(corpus, -1.0, bits0 = 4, tables0 = 3,
+        maxBucket = 500, salts = salts)
+        .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet
     val salted = rows(8)
     assert(salted == rows(1) && salted.nonEmpty)
   }

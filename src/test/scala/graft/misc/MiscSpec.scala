@@ -314,16 +314,12 @@ class AnnSpec extends SparkSpec {
     val v = Array.tabulate(16)(d => prf(d))
     val corpus = (0 until 40).map(i => (i.toLong, v.map(x => x * (1 + i)))) // same direction
       .toDF("vec_id", "embedding")
-    val raw = Ann.candidatePairsAndSkips(corpus, bits = 4, tables = 3,
-      seed = 42L, idCol = "vec_id", vecCol = "embedding", maxBucket = 10)
-    assert(raw.filter(col("src").isNotNull).count() == 0)
-    val skips = raw.filter(col("src").isNull).select("skipped").collect().map(_.getLong(0))
-    assert(skips.length == 3 && skips.forall(_ == 40L)) // one per table
-    // and the edges-and-skips surface carries them through the verify
     val es = Ann.embeddingDupEdgesAndSkips(corpus, 0.99, bits0 = 4, tables0 = 3,
       n = Some(40L), maxBucket = 10)
-    assert(es.filter(col("src").isNull)
-      .agg(sum(col("skipped"))).head().getLong(0) == 120L)
+    assert(es.filter(col("src").isNotNull).count() == 0)
+    // the three tables' skip rows (40 rows each) fuse into one summed row
+    val skips = es.filter(col("src").isNull).select("skipped").collect().map(_.getLong(0))
+    assert(skips.toSeq == Seq(120L))
   }
 }
 
@@ -339,11 +335,23 @@ class SubstringSpec extends SparkSpec {
       ("d1", mk(40, "a") + " " + shared),
       ("d2", shared + " " + mk(40, "b")),
       ("d3", mk(80, "c"))).toDF("url", "text")
-    val dup = SubstringDedup.duplicatedWindows(docs, w = 20, stride = 1)
-    assert(dup.count() > 0)
     val edges = SubstringDedup.substringDupEdges(docs, w = 20, stride = 1, minShared = 1)
     val pairs = edges.select("src", "dst").collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(pairs == Set(("d1", "d2")))
+  }
+
+  test("a doc that repeats a window counts once toward the window's cap, in one round and salted") {
+    val run = mk(10, "r")
+    // every window of `run` occurs twice in d1 and once in d2: two
+    // distinct docs, within a cap of 2 although the window has 3 rows
+    val docs = Seq(("d1", run + " " + run), ("d2", run), ("d3", mk(20, "z")))
+      .toDF("url", "text")
+    def rows(salts: Int) = SubstringDedup.edgesAndSkips(docs, w = 5, stride = 1,
+        minShared = 1, maxDocsPerWindow = 2, salts = salts).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3))).toSet
+    val one = rows(1)
+    assert(one == Set(("d1", "d2", 6L, 0L)), one.toString)
+    assert(rows(7) == one)
   }
 
   test("suffix-array finds cross-doc repeats >= minLen chars") {

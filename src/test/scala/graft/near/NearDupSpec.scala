@@ -129,10 +129,10 @@ class NearDupSpec extends SparkSpec {
       .map(i => (s"u$i", "same tokens " * 30)).toDF("url", "text")
     val cfg = MinHashLSH.Config(maxBucket = 100)
     val sigs = MinHashLSH.signatures(hot, cfg)
-    val skipped = MinHashLSH.skippedBucketRows(sigs, cfg)
-      .agg(sum(col("count"))).head().getLong(0)
-    assert(skipped == 100000L * cfg.bands)
-    assert(MinHashLSH.candidates(sigs, cfg).count() == 0)
+    val out = MinHashLSH.candidatesAndSkips(sigs, cfg)
+      .agg(sum(col("skipped")), count(col("src"))).head()
+    assert(out.getLong(0) == 100000L * cfg.bands)
+    assert(out.getLong(1) == 0L)
   }
 
   test("pipeline surfaces over-cap skipped-bucket rows as a metric") {
@@ -155,7 +155,9 @@ class NearDupSpec extends SparkSpec {
     import spark.implicits._
     val hot = (0 until 500).map(i => (s"u$i", "same tokens " * 30)).toDF("url", "text")
     val cfg = SimHash.Config(maxBucket = 100)
-    assert(SimHash.skippedBucketRows(hot, cfg).count() > 0)
+    val skips = SimHash.edgesAndSkips(SimHash.fingerprints(hot, cfg), cfg)
+      .filter(col("src").isNull)
+    assert(skips.count() > 0)
     assert(SimHash.edges(hot, cfg).count() == 0)
   }
 
@@ -171,8 +173,10 @@ class NearDupSpec extends SparkSpec {
     val sigs = spark.range(n)
       .select(concat(lit("u"), col("id")).as("id"), sameSig.as("sig"))
     // round-1 partials (the SHIPPING path's round 1 — same banded rows,
-    // same memberSalt): one per salt, none anywhere near the full bucket
-    val parts = MinHashLSH.saltedPartials(sigs, cfg).collect()
+    // same member salt): one per salt, none anywhere near the full bucket
+    val parts = graft.functions.CappedGroups.saltedPartials(MinHashLSH.banded(sigs, cfg),
+      (r: (String, Int, Long)) => (r._2, r._3), (r: (String, Int, Long)) => r._1,
+      cfg.maxBucket, cfg.salts, identity[String]).collect()
     assert(parts.length == cfg.salts)
     assert(parts.map(_._2).sum == n)
     assert(parts.forall(_._2 < n / 4), s"a partial held too much: ${parts.map(_._2).toSeq}")
