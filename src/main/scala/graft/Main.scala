@@ -549,16 +549,15 @@ object Main {
   }
 
   /** Clusters-snapshot maintenance (--clusters-snapshot): fold the
-    * batch's dup edges (url -> dup_of / near_dup_of) into the standing
-    * (id, component) assignment at `dir`/assign via
-    * [[graft.cluster.IncrementalCC]] — CC over the touched subgraph
-    * only; the prior table is scanned once map-side. The rewrite is
-    * the [[Catalog]] commit of table `assign`: a crash never leaves a
-    * partial table, and an interrupted swap is finished by the next
-    * run; on Iceberg this step is a MERGE INTO touching relabeled
-    * rows. Ids are assumed unique across crawls (url + warc_ts at
-    * production scale) — a re-crawled url is the SNAPSHOT's identity
-    * question, not this table's.
+    * batch's dup edges (url -> dup_of / near_dup_of) and its urls into
+    * the standing (id, component) assignment at `dir`/assign via
+    * [[graft.cluster.IncrementalCC.fold]] — one map-side scan of the
+    * prior table, CC over the touched subgraph only, one write plan.
+    * The rewrite is the [[Catalog]] commit of table `assign`: a crash
+    * never leaves a partial table, and an interrupted swap is finished
+    * by the next run; on Iceberg this step is a MERGE INTO touching
+    * relabeled rows. A re-crawled url keeps its one standing row (and
+    * component); urls are assumed unique within one batch.
     */
   private[graft] def maintainClusters(spark: SparkSession, dir: String,
       verdicts: DataFrame, dupCol: String, verbose: Boolean = false): Unit = {
@@ -570,24 +569,13 @@ object Main {
       else Seq.empty[(String, String)].toDF("id", "component")
     val edges = verdicts.filter(col(dupCol).isNotNull)
       .select(col("url").as("src"), col(dupCol).as("dst"))
-    val merged = graft.cluster.IncrementalCC.merge(prior, edges)
-    // novel docs with no edge at all are their own singleton component;
-    // edge endpoints are already covered by merge's newAssign
-    val endpoints = edges.select(col("src").as("id"))
-      .unionByName(edges.select(col("dst").as("id"))).distinct()
-    val isolated = verdicts.filter(col(dupCol).isNull)
-      .select(col("url").as("id"), col("url").as("component"))
-      .join(endpoints, Seq("id"), "left_anti")
-    val next = graft.cluster.IncrementalCC.patch(prior, merged)
-      .unionByName(isolated)
     // counted before the commit replaces the prior files they read
-    if (verbose) {
-      val nRelabel = merged.relabel.count()
-      val nNew = merged.newAssign.count()
+    val report = Option.when(verbose) { (nRelabel: Long, nNew: Long) =>
       System.err.println(s"clusters: $nRelabel components relabeled, " +
         s"$nNew ids joined existing/new merged components")
     }
-    cat.commit("assign", next)
+    cat.commit("assign", graft.cluster.IncrementalCC.fold(prior, edges,
+      verdicts.select(col("url").as("id")), report = report))
   }
 
   /** The shared incremental-mode sink: emit verdicts (progress-tapped,

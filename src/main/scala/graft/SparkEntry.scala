@@ -1333,14 +1333,14 @@ object SparkEntry {
     // ---- incremental connected components: the odd half is "today's
     // crawl"; the even half's clusters were computed by "a previous
     // run" (materialized — the standing assignment table) and are
-    // PATCHED, never recomputed. Delta edges come from probing a
+    // FOLDED, never recomputed. Delta edges come from probing a
     // (key -> keeper) snapshot of the prior star groups (the
     // q_incremental shape: at scale the snapshot is scanned once
-    // map-side vs the broadcast batch keys); IncrementalCC then runs
-    // CC over ONLY the touched subgraph and broadcasts a relabel map
-    // for the affected components. Oracle: q_cc's full-corpus
-    // recursive min-label CTE — the patched assignment must equal a
-    // from-scratch run exactly.
+    // map-side vs the broadcast batch keys); IncrementalCC.fold then
+    // scans the assignment once, runs CC over ONLY the touched
+    // subgraph and relabels through a broadcast map of the changed
+    // labels. Oracle: q_cc's full-corpus recursive min-label CTE — the
+    // folded assignment must equal a from-scratch run exactly.
     "q_incremental_cc" -> ((s, dir) => {
       val d = docs(s, dir).select(col("doc_id"),
         lpad(col("doc_id").cast("string"), 12, "0").as("id"),
@@ -1377,11 +1377,9 @@ object SparkEntry {
           .select(col("id").as("src"), col("dst"))
       }
       val deltaEdges = delta("fp").unionByName(delta("ident"))
-      val merged = graft.cluster.IncrementalCC.merge(priorAssign, deltaEdges)
-      val patched = graft.cluster.IncrementalCC.patch(priorAssign, merged)
-      d.select(col("id")).join(patched, Seq("id"), "left")
-        .select(col("id").cast("long").as("doc_id"),
-          coalesce(col("component"), col("id")).cast("long").as("component"))
+      // the batch ids complete the fold: every doc gets exactly one row
+      graft.cluster.IncrementalCC.fold(priorAssign, deltaEdges, batch.select(col("id")))
+        .select(col("id").cast("long").as("doc_id"), col("component").cast("long").as("component"))
     }),
 
     // ---- text analysis: n-gram-heuristic language id

@@ -72,6 +72,13 @@ object DedupPipeline {
       substring: SubstringConfig = SubstringConfig(),
       longRun: LongRunConfig = LongRunConfig())
 
+  /** A run's outputs. From [[runCheckpointed]], `clusters`, `edges`
+    * and `dedupedDocs` are lazy reads of the catalog's committed
+    * tables: a later run into the same catalog that recomputes a stage
+    * replaces their files, and reading this `Result` afterwards fails
+    * with `FAILED_READ_FILE.FILE_NOT_EXIST`. Collect or persist what
+    * must outlive the next run.
+    */
   final class Result(
       val clusters: DataFrame, // (url, cluster_id) — every input url
       val exact: DedupResult,

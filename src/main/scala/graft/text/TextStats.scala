@@ -204,12 +204,12 @@ object TextStats {
       }
     })
 
-  /** (n, dup_frac, dup_char_frac) of `text` split at regex `sep` with
+  /** (n, dup_frac, dup_char_frac) of `text` split at regex `sepRegex` with
     * empty units dropped — the [[dupUnitFeatures]]∘[[unitArray]]
     * chain compiled (one grain per call; char mass in code points).
     */
-  def dupUnitsKernel(sep: String): org.apache.spark.sql.expressions.UserDefinedFunction = {
-    val p = java.util.regex.Pattern.compile(sep)
+  def dupUnitsKernel(sepRegex: String): org.apache.spark.sql.expressions.UserDefinedFunction = {
+    val p = java.util.regex.Pattern.compile(sepRegex)
     udf((text: String) => {
       val units = p.split(if (text == null) "" else text, -1)
       var n = 0

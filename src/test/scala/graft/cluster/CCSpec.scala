@@ -131,10 +131,23 @@ class CCSpec extends SparkSpec {
     assert(cc.select(min(col("component"))).head().getString(0) == "hub")
   }
 
-  // --- IncrementalCC: patch a standing assignment with a delta ---
+  // --- IncrementalCC: fold a batch into a standing assignment ---
 
   private def assignOf(df: org.apache.spark.sql.DataFrame): Map[String, String] =
     df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+
+  /** The folded rows (one per id, checked) and fold's (relabelled
+    * components, new ids joined) report.
+    */
+  private def fold(prior: org.apache.spark.sql.DataFrame, delta: org.apache.spark.sql.DataFrame,
+      ids: Seq[String] = Nil): (Map[String, String], (Long, Long)) = {
+    var counts = (-1L, -1L)
+    val rows = IncrementalCC.fold(prior, delta, ids.toDF("id"),
+      report = Some((r: Long, n: Long) => counts = (r, n))).collect()
+      .map(r => r.getString(0) -> r.getString(1))
+    assert(rows.length == rows.map(_._1).distinct.length, "one row per id")
+    (rows.toMap, counts)
+  }
 
   test("incremental merge: batch doc bridges two prior components") {
     // prior clusters {a1,a2} (root a1) and {b1,b2} (root b1); batch doc
@@ -142,39 +155,35 @@ class CCSpec extends SparkSpec {
     val prior = Seq(("a1", "a1"), ("a2", "a1"), ("b1", "b1"), ("b2", "b1"),
       ("c1", "c1")).toDF("id", "component") // c1: untouched bystander
     val delta = Seq(("x", "a2"), ("x", "b1")).toDF("src", "dst")
-    val m = IncrementalCC.merge(prior, delta)
-    val relabel = m.relabel.collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(relabel == Map("b1" -> "a1")) // only the losing root relabels
-    assert(assignOf(m.newAssign) == Map("x" -> "a1"))
-    val patched = assignOf(IncrementalCC.patch(prior, m))
-    assert(patched == Map("a1" -> "a1", "a2" -> "a1", "b1" -> "a1",
+    val (folded, counts) = fold(prior, delta, Seq("x"))
+    // only the losing root relabels; x is the one new id
+    assert(counts == ((1L, 1L)))
+    assert(folded == Map("a1" -> "a1", "a2" -> "a1", "b1" -> "a1",
       "b2" -> "a1", "c1" -> "c1", "x" -> "a1"))
   }
 
   test("incremental merge: batch id becomes the new global minimum") {
     val prior = Seq(("m1", "m1"), ("m2", "m1")).toDF("id", "component")
     val delta = Seq(("a0", "m2")).toDF("src", "dst") // a0 < m1
-    val m = IncrementalCC.merge(prior, delta)
-    assert(m.relabel.collect().map(r => r.getString(0) -> r.getString(1)).toMap ==
-      Map("m1" -> "a0"))
-    assert(assignOf(m.newAssign) == Map("a0" -> "a0"))
-    assert(assignOf(IncrementalCC.patch(prior, m)) ==
-      Map("m1" -> "a0", "m2" -> "a0", "a0" -> "a0"))
+    val (folded, counts) = fold(prior, delta, Seq("a0"))
+    assert(counts == ((1L, 1L))) // m1 -> a0 relabels; a0 joins
+    assert(folded == Map("m1" -> "a0", "m2" -> "a0", "a0" -> "a0"))
   }
 
-  test("incremental merge: prior-to-prior bridge has empty newAssign") {
+  test("incremental merge: fold adds no id beyond the prior's") {
+    // a prior-to-prior bridge, and a batch that re-crawls prior ids
     val prior = Seq(("a", "a"), ("b", "a"), ("c", "c"), ("d", "c"))
       .toDF("id", "component")
     val delta = Seq(("b", "d")).toDF("src", "dst")
-    val m = IncrementalCC.merge(prior, delta)
-    assert(m.newAssign.count() == 0L)
-    assert(assignOf(IncrementalCC.patch(prior, m)) ==
-      Map("a" -> "a", "b" -> "a", "c" -> "a", "d" -> "a"))
+    val (folded, counts) = fold(prior, delta, Seq("b", "c"))
+    assert(counts == ((1L, 0L)))
+    assert(folded == Map("a" -> "a", "b" -> "a", "c" -> "a", "d" -> "a"))
   }
 
   test("incremental merge equals from-scratch CC on a seeded random graph") {
     // 120 nodes, seeded edges; prior = edges among even nodes, delta =
-    // every edge touching an odd node (the q_incremental_cc split)
+    // every edge touching an odd node, batch = the odd nodes (the
+    // q_incremental_cc split)
     val rnd = new scala.util.Random(7)
     def name(i: Int) = f"n$i%03d"
     val all = (0 until 120).map(name)
@@ -182,18 +191,16 @@ class CCSpec extends SparkSpec {
       .filter { case (a, b) => a != b }.map { case (a, b) => (name(a), name(b)) }
     def even(s: String) = s.drop(1).toInt % 2 == 0
     val (priorE, deltaE) = edges.partition { case (a, b) => even(a) && even(b) }
-    val priorIds = all.filter(even)
+    val (priorIds, batchIds) = all.partition(even)
     val priorCc = assignOf(ConnectedComponents.run(priorE.toDF("src", "dst")))
     val priorAssign = priorIds.map(i => i -> priorCc.getOrElse(i, i))
       .toDF("id", "component")
-    val m = IncrementalCC.merge(priorAssign, deltaE.toDF("src", "dst"))
-    val patched = assignOf(IncrementalCC.patch(priorAssign, m))
+    val (folded, _) = fold(priorAssign, deltaE.toDF("src", "dst"), batchIds)
     val full = assignOf(ConnectedComponents.run(edges.toDF("src", "dst")))
-    // patched covers prior ids + delta endpoints; every one must agree
-    // with the from-scratch labels (isolated ids default to themselves)
-    patched.foreach { case (id, comp) =>
+    // every id, isolated ones included, agrees with the from-scratch
+    // labels (isolated ids default to themselves)
+    assert(folded.keySet == all.toSet)
+    folded.foreach { case (id, comp) =>
       assert(comp == full.getOrElse(id, id), s"id=$id") }
-    val deltaEndpoints = deltaE.flatMap(e => Seq(e._1, e._2)).toSet
-    assert((priorIds.toSet ++ deltaEndpoints) == patched.keySet)
   }
 }

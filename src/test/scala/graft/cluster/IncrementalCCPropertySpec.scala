@@ -3,15 +3,17 @@ package graft.cluster
 import graft.SparkSpec
 import org.scalacheck.{Gen, rng}
 
-/** `IncrementalCC.merge` + `patch` equals from-scratch connected
-  * components on seeded random crawls: a prior graph whose min-label
-  * assignment (isolated ids included) is stored as parquet and read
-  * back with `IncrementalCC.assignSchema`, as `Main.maintainClusters`
-  * reads it, and delta edges that form new-id hubs and chains, bridge
-  * prior components, and attach new ids to prior ones. The patched
-  * assignment must equal `ConnectedComponents.run` over the prior and
-  * delta edges, with every other prior id or delta endpoint labelled by
-  * itself.
+/** `IncrementalCC.fold` equals from-scratch connected components on
+  * seeded random crawls: a prior graph whose min-label assignment
+  * (isolated ids included) is stored as parquet and read back with
+  * `IncrementalCC.assignSchema`, as `Main.maintainClusters` reads it,
+  * and a batch whose delta edges form new-id hubs and chains, bridge
+  * prior components, attach new ids to prior roots and non-root
+  * members, and point at a novel batch doc; the batch ids add isolated
+  * new ids and re-crawled prior ids. The folded assignment must hold
+  * one row per prior id, delta endpoint and batch id, equal to
+  * `ConnectedComponents.run` over the prior and delta edges with every
+  * other id labelled by itself — also onto an empty prior.
   */
 class IncrementalCCPropertySpec extends SparkSpec {
   import spark.implicits._
@@ -20,11 +22,13 @@ class IncrementalCCPropertySpec extends SparkSpec {
 
   private val priorIds: IndexedSeq[String] = (0 until 40).map(i => f"a$i%02d")
   private val newIds: IndexedSeq[String] = (0 until 30).map(i => f"n$i%02d")
+  // batch docs no edge leaves: isolated unless a later doc dups them
+  private val novelIds: IndexedSeq[String] = (0 until 10).map(i => f"m$i%02d")
 
   private def edge(from: Seq[String], to: Seq[String]): Gen[Edge] =
     for (a <- Gen.oneOf(from); b <- Gen.oneOf(to)) yield (a, b)
 
-  private case class Crawl(prior: Seq[Edge], delta: Seq[Edge])
+  private case class Crawl(prior: Seq[Edge], delta: Seq[Edge], batch: Seq[String])
 
   private val crawl: Gen[Crawl] = for {
     prior <- Gen.choose(15, 35).flatMap(Gen.listOfN(_, edge(priorIds, priorIds)))
@@ -36,11 +40,20 @@ class IncrementalCCPropertySpec extends SparkSpec {
     bridges <- Gen.choose(1, 4).flatMap(Gen.listOfN(_, edge(priorIds, priorIds)))
     attach <- Gen.choose(2, 6).flatMap(Gen.listOfN(_, edge(newIds, priorIds)))
     loose <- Gen.choose(0, 5).flatMap(Gen.listOfN(_, edge(newIds, newIds)))
+    onto <- Gen.oneOf(newIds)
+    novel <- Gen.pick(4, novelIds)
+    dupOfNovel <- Gen.oneOf(newIds)
+    recrawled <- Gen.pick(3, priorIds)
   } yield {
     val c = chain.toSeq
-    Crawl(prior,
-      spokes.toSeq.filter(_ != hub).map(s => (hub, s)) ++ c.zip(c.tail) ++
-        Seq((c.last, anchor)) ++ bridges ++ attach ++ loose.filter(e => e._1 != e._2))
+    // an edge onto a member that is not its prior component's root
+    val nonRoot = labels(prior, priorIds).collect { case (u, r) if u != r => u }.toSeq.sorted
+    val delta = spokes.toSeq.filter(_ != hub).map(s => (hub, s)) ++ c.zip(c.tail) ++
+      Seq((c.last, anchor)) ++ bridges ++ attach ++ loose.filter(e => e._1 != e._2) ++
+      nonRoot.headOption.map(onto -> _) ++ Seq((dupOfNovel, novel.head))
+    val batch = delta.flatMap(e => Seq(e._1, e._2)).filterNot(priorIds.contains) ++
+      novel ++ recrawled
+    Crawl(prior, delta, batch.distinct)
   }
 
   private def samples: Seq[Crawl] =
@@ -61,22 +74,35 @@ class IncrementalCCPropertySpec extends SparkSpec {
       .flatMap { c => val m = c.min; c.map(_ -> m) }.toMap
   }
 
-  test("merge + patch equals from-scratch CC over prior and delta edges") {
+  /** Fold `c` onto the stored assignment of `prior` over `pIds`; check
+    * it against from-scratch CC and return the expected labels.
+    */
+  private def check(c: Crawl, pIds: Seq[String], i: Int): Map[String, String] = {
+    val dir = java.nio.file.Files.createTempDirectory("icc").resolve("assign").toString
+    labels(c.prior, pIds).toSeq.toDF("id", "component").write.parquet(dir)
+    val prior = spark.read.schema(IncrementalCC.assignSchema).parquet(dir)
+    val folded = IncrementalCC.fold(prior, c.delta.toDF("src", "dst"), c.batch.toDF("id"))
+      .collect().map(r => r.getString(0) -> r.getString(1))
+    val cc = ConnectedComponents.run((c.prior ++ c.delta).toDF("src", "dst")).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    val ids = pIds ++ c.delta.flatMap(e => Seq(e._1, e._2)) ++ c.batch
+    val expect = ids.map(u => u -> cc.getOrElse(u, u)).toMap
+    assert(folded.length == expect.size, s"crawl $i: duplicate or missing ids")
+    assert(folded.toMap == expect, s"crawl $i")
+    expect
+  }
+
+  test("fold equals from-scratch CC on random crawls") {
     for ((c, i) <- samples.zipWithIndex) {
-      val dir = java.nio.file.Files.createTempDirectory("icc").resolve("assign").toString
-      labels(c.prior, priorIds).toSeq.toDF("id", "component").write.parquet(dir)
-      val prior = spark.read.schema(IncrementalCC.assignSchema).parquet(dir)
-      val delta = c.delta.toDF("src", "dst")
-      val patched = IncrementalCC.patch(prior, IncrementalCC.merge(prior, delta)).collect()
-        .map(r => r.getString(0) -> r.getString(1))
-      val cc = ConnectedComponents.run((c.prior ++ c.delta).toDF("src", "dst")).collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
-      val ids = priorIds ++ c.delta.flatMap(e => Seq(e._1, e._2))
-      val expect = ids.map(u => u -> cc.getOrElse(u, u)).toMap
-      assert(patched.length == expect.size, s"crawl $i: duplicate or missing ids")
-      assert(patched.toMap == expect, s"crawl $i")
+      val expect = check(c, priorIds, i)
       assert(priorIds.map(expect).toSet.size < labels(c.prior, priorIds).values.toSet.size,
         s"crawl $i: the delta bridges prior components")
     }
+  }
+
+  test("fold onto an empty prior equals from-scratch CC") {
+    // the prior's ids are new ids now: every edge endpoint is a batch id
+    for ((c, i) <- samples.zipWithIndex)
+      check(Crawl(Nil, c.delta, (c.batch ++ c.delta.flatMap(e => Seq(e._1, e._2))).distinct), Nil, i)
   }
 }

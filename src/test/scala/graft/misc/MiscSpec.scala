@@ -1637,6 +1637,75 @@ class IncrementalCliSpec extends SparkSpec {
       s"interrupted swap must recover prior components, got $recovered")
   }
 
+  /** A crawl batch as the incremental CLI reads it. */
+  private def crawlBatch(rows: Seq[(String, String)]) = rows.toDF("url", "text")
+    .withColumn("warc_ts", lit(java.sql.Timestamp.valueOf("2026-01-01 00:00:00")))
+    .withColumn("html", col("text").cast("binary"))
+    .withColumn("lang", lit("en"))
+
+  test("--clusters-snapshot keeps one row per re-crawled url") {
+    def rows(ccDir: String): Seq[(String, String)] =
+      spark.read.parquet(s"$ccDir/assign").collect()
+        .map(r => r.getString(0) -> r.getString(1)).toSeq.sorted
+    // C novel in crawl 1, then re-crawled as novel (new text) with D
+    val base1 = java.nio.file.Files.createTempDirectory("graft-recrawl").toString
+    graft.Main.maintainClusters(spark, s"$base1/cc", graft.Main.runIncremental(spark,
+      crawlBatch(Seq(("A", "alpha text"), ("B", "alpha text"), ("C", "beta text"))),
+      s"$base1/snap"), "dup_of")
+    graft.Main.maintainClusters(spark, s"$base1/cc", graft.Main.runIncremental(spark,
+      crawlBatch(Seq(("C", "delta text"), ("D", "epsilon text"))), s"$base1/snap"), "dup_of")
+    assert(rows(s"$base1/cc") == Seq("A" -> "A", "B" -> "A", "C" -> "C", "D" -> "D"))
+    // C linked to A in crawl 1, then re-crawled as novel: it keeps A
+    val base2 = java.nio.file.Files.createTempDirectory("graft-recrawl").toString
+    graft.Main.maintainClusters(spark, s"$base2/cc", graft.Main.runIncremental(spark,
+      crawlBatch(Seq(("A", "alpha text"), ("B", "alpha text"), ("C", "alpha text"))),
+      s"$base2/snap"), "dup_of")
+    graft.Main.maintainClusters(spark, s"$base2/cc", graft.Main.runIncremental(spark,
+      crawlBatch(Seq(("C", "zeta text"), ("D", "eta text"))), s"$base2/snap"), "dup_of")
+    assert(rows(s"$base2/cc") == Seq("A" -> "A", "B" -> "A", "C" -> "A", "D" -> "D"))
+  }
+
+  test("--clusters-snapshot folds a batch in at most 6 jobs with no shuffle") {
+    val base = java.nio.file.Files.createTempDirectory("graft-ccjobs").toString
+    val (snapDir, ccDir) = (s"$base/snap", s"$base/cc")
+    graft.Main.maintainClusters(spark, ccDir, graft.Main.runIncremental(spark,
+      crawlBatch(Seq(("A", "alpha text"), ("B", "alpha text"), ("C", "beta text"))),
+      snapDir), "dup_of")
+    val v2 = graft.Main.runIncremental(spark, crawlBatch(Seq(("0-first", "beta text"),
+      ("D", "alpha text"), ("E", "gamma text"), ("F", "gamma text"))), snapDir)
+    val sc = spark.sparkContext
+    val group = s"clusters-fold-${System.nanoTime()}"
+    var jobs = 0
+    var shuffleBytes = 0L
+    val stages = scala.collection.mutable.Set.empty[Int]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          synchronized { jobs += 1; stages ++= e.stageIds }
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        synchronized {
+          if (stages(e.stageId) && e.taskMetrics != null)
+            shuffleBytes += e.taskMetrics.shuffleWriteMetrics.bytesWritten
+        }
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "clusters_snapshot", interruptOnCancel = false)
+      try graft.Main.maintainClusters(spark, ccDir, v2, "dup_of")
+      finally sc.clearJobGroup()
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(spark.read.parquet(s"$ccDir/assign").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap ==
+      Map("0-first" -> "0-first", "A" -> "A", "B" -> "A", "C" -> "0-first",
+        "D" -> "A", "E" -> "E", "F" -> "E"))
+    listener.synchronized {
+      assert(jobs <= 6, s"$jobs jobs")
+      assert(shuffleBytes == 0L, s"$shuffleBytes shuffle bytes written")
+    }
+  }
+
   test("a failing emit sink leaves the snapshot unpoisoned (append runs after sink)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-snap2").toString + "/snap"
     def mk(rows: Seq[(String, String)]) = rows.toDF("url", "text")
