@@ -190,7 +190,7 @@ object Main {
 
   case class Conf(
       inputs: Seq[String] = Nil,
-      algs: Seq[String] = Seq("filesize", "initial_xxhash", "sha"),
+      algs: Seq[String] = graft.functions.Digests.DefaultAlgs,
       ignoreEmpty: Boolean = false,
       exactOnly: Boolean = false,
       outfile: String = "-",
@@ -644,23 +644,24 @@ object Main {
     // the snapshot delta (shingling is the dominant map-side cost of
     // this stack — paying it twice per crawl doubled the bill)
     val batchSigs = graft.near.MinHashLSH.signatures(docs, cfg).persist()
-    val skippedAcc = spark.sparkContext.longAccumulator("near_snapshot_skipped")
-    // eagerly checkpointed by dedupAgainstSignatures
-    val verdicts = IncrementalNearDup
-      .dedupAgainstSignatures(batchSigs, snap, cfg, skippedAcc = Some(skippedAcc))
-    // over-cap skip surfacing (capped AND surfaced — a saturated prior
-    // or batch band bucket silently degrading recall is the one failure
-    // an operator of a standing snapshot must see)
-    if (skippedAcc.value > 0)
-      System.err.println(
-        s"near-snapshot: ${skippedAcc.value} over-cap candidate rows skipped " +
-          "(hot band bucket; raise maxBucket)")
-    sink(verdicts)
-    val delta = IncrementalNearDup.snapshotDeltaFromSignatures(batchSigs, verdicts, cfg)
-    cat.append("bands", delta.bands)
-    cat.append("sigs", delta.sigs)
-    batchSigs.unpersist()
-    verdicts
+    try {
+      val skippedAcc = spark.sparkContext.longAccumulator("near_snapshot_skipped")
+      // eagerly checkpointed by dedupAgainstSignatures
+      val verdicts = IncrementalNearDup
+        .dedupAgainstSignatures(batchSigs, snap, cfg, skippedAcc = Some(skippedAcc))
+      // over-cap skip surfacing (capped AND surfaced — a saturated prior
+      // or batch band bucket silently degrading recall is the one failure
+      // an operator of a standing snapshot must see)
+      if (skippedAcc.value > 0)
+        System.err.println(
+          s"near-snapshot: ${skippedAcc.value} over-cap candidate rows skipped " +
+            "(hot band bucket; raise maxBucket)")
+      sink(verdicts)
+      val delta = IncrementalNearDup.snapshotDeltaFromSignatures(batchSigs, verdicts, cfg)
+      cat.append("bands", delta.bands)
+      cat.append("sigs", delta.sigs)
+      verdicts
+    } finally batchSigs.unpersist()
   }
 
   /** The near-dup MinHash config for this invocation: the ship

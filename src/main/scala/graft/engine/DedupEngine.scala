@@ -41,12 +41,6 @@ final class DedupResult(
     */
   lazy val blockMeta: DataFrame = blockMeta0
 
-  /** Total objects = Σ block sizes (computed from the aggregated
-    * meta frame — never a second scan of the corpus).
-    */
-  lazy val totalObjects: Long =
-    blockMeta.agg(coalesce(sum(col("size")), lit(0L))).head().getLong(0)
-
   /** Reference-parity blocks WITH member arrays — report path only.
     * block_id = lexicographic min member mirrors the reference CLI's
     * alphabetical-min canonical rule (CLI.pm:282), so grouping the
@@ -90,29 +84,21 @@ final class DedupResult(
   * (reference `Data::Dedup::Engine`, Engine.pm:70-607), re-expressed as
   * Spark dataflow instead of the reference's in-memory key-trie.
   *
-  * Two physically different plans, identical results (both are tested
-  * against the ported collision oracle and against each other):
+  * One plan: every digest is computed map-side in ONE scan of the
+  * content column, then only the stringified `(id, k0..kn)` tuples are
+  * shuffled — a single wide group-by plus windows over an aggregated
+  * (tiny) frame. The reference computes digest k only for rows that
+  * still collide after level k−1, which saved disk seeks on a
+  * filesystem; on columnar storage a second pass over `html` for
+  * survivors costs more than hashing it once. Lazy *semantics* (short
+  * key arrays, per-level digest/collision counts) are recovered
+  * algebraically: a block's key count = the shortest key prefix that
+  * isolates it (SURVEY.md §1.2.1), pinned by the ported [6,3,3,0]
+  * collision oracle.
   *
-  *  - **Eager** (default, the 100 TB path): all digests are computed
-  *    map-side in ONE scan of the content column, then only the narrow
-  *    `(id, k0..kn)` tuples are shuffled — a single wide group-by plus
-  *    windows over an aggregated (tiny) frame. The reference's lazy
-  *    per-level digest computation saved disk seeks on a filesystem;
-  *    on columnar storage a second pass over `html` for survivors
-  *    costs more than hashing it once, and crucially the SHUFFLE never
-  *    carries page bytes. Lazy *semantics* (short key arrays, per-level
-  *    digest/collision counts) are recovered algebraically: a block's
-  *    key count = the shortest key prefix that isolates it
-  *    (SURVEY.md §1.2.1).
-  *
-  *  - **Staged** (reference-shaped): one level at a time over a
-  *    shrinking survivor set; digest k is genuinely only computed for
-  *    rows still ambiguous after k-1 — the plan to choose when a later
-  *    digest is drastically more expensive than a scan (e.g. a remote
-  *    fetch). One repartition by k0 up front; every later per-level
-  *    window reuses that partitioning (HashPartitioning(k0) satisfies
-  *    ClusteredDistribution(k0..kk)), so the survivor loop adds sorts
-  *    but NO further shuffles.
+  * A shuffled row is as wide as its keys: the hash digests are a few
+  * bytes each, but the `bytes` level (`--byte-verify`) keys on
+  * `hex(html)`, so under it every row's page crosses the exchange.
   *
   * Block aggregation is a map-side-combining groupBy (count + min),
   * never a collect_list, so a hot block (all-empty pages sharing one
@@ -120,10 +106,6 @@ final class DedupResult(
   * the full key is the one skewed join, handled by AQE skew-join.
   */
 object DedupEngine {
-
-  sealed trait Mode
-  case object Eager extends Mode
-  case object Staged extends Mode
 
   /** Stringify a digest column the way the reference stringifies keys
     * for hashing (Engine.pm:340) — but collision-safely: raw binary
@@ -142,12 +124,14 @@ object DedupEngine {
     df.select(col("__id") +: keyCols: _*)
   }
 
+  private def keyCols(n: Int): Seq[Column] = (0 until n).map(i => col(s"__k$i"))
+
   /** Run the cascade over `df`; `idCol` identifies the object (the
     * reference's opaque scalar — a url for the corpus, a path for
     * files). Degenerate empty cascade ⇒ one block of everything with
     * keys=[] (Engine.pm:138-139, Engine.t:65-84).
     */
-  def run(df: DataFrame, idCol: String, cascade: Seq[DigestSpec], mode: Mode = Eager): DedupResult = {
+  def run(df: DataFrame, idCol: String, cascade: Seq[DigestSpec]): DedupResult = {
     val withId = df.withColumn("__id", col(idCol).cast("string"))
     val n = cascade.length
     if (n == 0) {
@@ -161,16 +145,6 @@ object DedupEngine {
         .crossJoin(broadcast(blockMeta.select(col("block_id"))))
       return new DedupResult(blockMeta, assignments, 0)
     }
-    mode match {
-      case Eager  => runEager(withId, cascade)
-      case Staged => runStaged(withId, cascade)
-    }
-  }
-
-  private def keyCols(n: Int): Seq[Column] = (0 until n).map(i => col(s"__k$i"))
-
-  private def runEager(withId: DataFrame, cascade: Seq[DigestSpec]): DedupResult = {
-    val n = cascade.length
     val narrow0 = stringify(withId, cascade)
     // the single-object degenerate (keys=[], Engine.pm:351-364) only
     // needs to know whether ≥2 rows exist — a limit(2) probe, not a
@@ -238,54 +212,4 @@ object DedupEngine {
     */
   private def nullSafeKeyCond(n: Int): Column =
     (0 until n).map(i => col(s"__k$i") <=> col(s"__m$i")).reduce(_ && _)
-
-  private def runStaged(withId: DataFrame, cascade: Seq[DigestSpec]): DedupResult = {
-    val n = cascade.length
-    val types = withId
-      .select(cascade.zipWithIndex.map { case (d, i) => d.expr.as(s"__k$i") }: _*)
-      .schema.fields.map(_.dataType)
-    def keyed(d: DigestSpec, i: Int): Column = {
-      val c = if (types(i) == BinaryType) hex(d.expr) else d.expr.cast("string")
-      c.as(s"__k$i")
-    }
-    var cur = withId.withColumn("__k0", keyed(cascade.head, 0)).repartition(col("__k0"))
-    // deferred single-object probe (see runEager) — forced only when
-    // blockMeta is first touched
-    val cur0 = cur
-    lazy val single = cur0.limit(2).count() < 2
-    var metaParts = Vector.empty[DataFrame]
-    var assignParts = Vector.empty[DataFrame]
-    for (k <- 0 until n) {
-      if (k > 0) cur = cur.withColumn(s"__k$k", keyed(cascade(k), k))
-      val cnt = count(lit(1)).over(Window.partitionBy(keyCols(k + 1): _*))
-      cur = cur.withColumn("__cnt", cnt)
-      val singletons = cur.filter(col("__cnt") === 1L)
-      metaParts = metaParts :+ singletons.select(
-        array(keyCols(k + 1): _*).as("keys"),
-        lit(1L).as("size"),
-        lit(k + 1).as("nkeys"),
-        col("__id").as("block_id"))
-      assignParts = assignParts :+ singletons
-        .select(col("__id").as("id"), col("__id").as("block_id"))
-      cur = cur.filter(col("__cnt") > 1L).drop("__cnt")
-    }
-    val finalGrouped = cur
-      .groupBy(keyCols(n): _*)
-      .agg(count(lit(1)).as("size"), min(col("__id")).as("block_id"))
-    metaParts = metaParts :+ finalGrouped.select(
-      array(keyCols(n): _*).as("keys"), col("size"), lit(n).as("nkeys"), col("block_id"))
-    assignParts = assignParts :+ cur
-      .join(renameKeys(finalGrouped, n), nullSafeKeyCond(n))
-      .select(col("__id").as("id"), col("block_id"))
-    // single-object corpus: the reference never computes any key
-    // (lazy — no collider ever arrives); mirror it post-hoc.
-    val allMeta = metaParts.reduce(_ unionByName _)
-    def blockMeta =
-      if (single)
-        allMeta.select(
-          lit(Array.empty[String]).cast("array<string>").as("keys"),
-          col("size"), lit(0).as("nkeys"), col("block_id"))
-      else allMeta
-    new DedupResult(blockMeta, assignParts.reduce(_ unionByName _), n)
-  }
 }

@@ -177,9 +177,8 @@ object IncrementalNearDup {
       idCol: String = "url", textCol: String = "text",
       skippedAcc: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
     val batchSigs = MinHashLSH.signatures(batch, cfg, textCol, idCol).persist()
-    val out = dedupAgainstSignatures(batchSigs, snapshot, cfg, idCol, skippedAcc)
-    batchSigs.unpersist()
-    out
+    try dedupAgainstSignatures(batchSigs, snapshot, cfg, idCol, skippedAcc)
+    finally batchSigs.unpersist()
   }
 
   /** [[dedupAgainst]] over precomputed `MinHashLSH.signatures` rows
@@ -205,41 +204,42 @@ object IncrementalNearDup {
     // persisted so the skip aggregate below re-reads this SMALL frame
     // instead of re-running the bucket pass
     val cand = candidates(batchSigs, snapshot, cfg).persist()
-    // one pair per (id, partner, tier), partitioned by id so the per-id
-    // minimum below needs no second exchange
-    val pairs = cand.filter(col("partner").isNotNull)
-      .select(col("id"), col("partner"), col("tier"))
-      .repartition(col("id"))
-      .distinct()
-    // second (and last) snapshot scan: fetch ONLY candidate keepers'
-    // shingles map-side; the batch's own shingles are tier 1
-    val keeperIds = pairs.filter(col("tier") === Prior).select(col("partner").as("id"))
-    val partnerSh = snapshot.sigs.join(broadcast(keeperIds), Seq("id"), "left_semi")
-      .select(col("id").as("partner"), lit(Prior).as("tier"), col("shingles").as("sh_p"))
-      .unionByName(batchSigs.select(col("id").as("partner"), lit(Batch).as("tier"),
-        col("shingles").as("sh_p")))
-    val batchSh = batchSigs.select(col("id"), col("shingles").as("sh_b"))
-    val best = pairs
-      .join(broadcast(partnerSh), Seq("partner", "tier"))
-      .join(broadcast(batchSh), Seq("id"))
-      .withColumn("j", jaccardUdf(col("sh_b"), col("sh_p")))
-      .filter(col("j") >= cfg.jaccardThreshold)
-      .groupBy("id")
-      .agg(min(struct(col("tier"), col("partner"), col("j"))).as("m"))
-      .select(col("id"), col("m.partner").as("near_dup_of"), col("m.j").as("jaccard"))
+    try {
+      // one pair per (id, partner, tier), partitioned by id so the per-id
+      // minimum below needs no second exchange
+      val pairs = cand.filter(col("partner").isNotNull)
+        .select(col("id"), col("partner"), col("tier"))
+        .repartition(col("id"))
+        .distinct()
+      // second (and last) snapshot scan: fetch ONLY candidate keepers'
+      // shingles map-side; the batch's own shingles are tier 1
+      val keeperIds = pairs.filter(col("tier") === Prior).select(col("partner").as("id"))
+      val partnerSh = snapshot.sigs.join(broadcast(keeperIds), Seq("id"), "left_semi")
+        .select(col("id").as("partner"), lit(Prior).as("tier"), col("shingles").as("sh_p"))
+        .unionByName(batchSigs.select(col("id").as("partner"), lit(Batch).as("tier"),
+          col("shingles").as("sh_p")))
+      val batchSh = batchSigs.select(col("id"), col("shingles").as("sh_b"))
+      val best = pairs
+        .join(broadcast(partnerSh), Seq("partner", "tier"))
+        .join(broadcast(batchSh), Seq("id"))
+        .withColumn("j", jaccardUdf(col("sh_b"), col("sh_p")))
+        .filter(col("j") >= cfg.jaccardThreshold)
+        .groupBy("id")
+        .agg(min(struct(col("tier"), col("partner"), col("j"))).as("m"))
+        .select(col("id"), col("m.partner").as("near_dup_of"), col("m.j").as("jaccard"))
 
-    val out = batchSigs.select(col("id"))
-      .join(broadcast(best), Seq("id"), "left")
-      .select(col("id").as(idCol), col("near_dup_of"), col("jaccard"))
-      .withColumn("is_novel", col("near_dup_of").isNull)
-      .localCheckpoint() // eager: cand is materialized by here
-    // one job over the cached frame: a fold, where a global aggregate
-    // would add a shuffle stage
-    skippedAcc.foreach(_.add(
-      cand.filter(col("partner").isNull).select(col("skipped")).as[Long]
-        .rdd.fold(0L)(_ + _)))
-    cand.unpersist()
-    out
+      val out = batchSigs.select(col("id"))
+        .join(broadcast(best), Seq("id"), "left")
+        .select(col("id").as(idCol), col("near_dup_of"), col("jaccard"))
+        .withColumn("is_novel", col("near_dup_of").isNull)
+        .localCheckpoint() // eager: cand is materialized by here
+      // one job over the cached frame: a fold, where a global aggregate
+      // would add a shuffle stage
+      skippedAcc.foreach(_.add(
+        cand.filter(col("partner").isNull).select(col("skipped")).as[Long]
+          .rdd.fold(0L)(_ + _)))
+      out
+    } finally cand.unpersist()
   }
 
   /** Append-only snapshot update: band + sig rows for the batch docs

@@ -160,14 +160,11 @@ object Digests {
     "bytes" -> DigestSpec("bytes", "full content bytes", content)
   )
 
-  /** The default cascade: filesize → initial_xxhash → sha
+  /** The default cascade's ids: filesize → initial_xxhash → sha
     * (DigestFactory.pm:33-39 — the code's 3 levels win over the
     * manpage's documented 4, SURVEY.md §2.3).
     */
-  def defaultCascade(content: Column): Seq[DigestSpec] = {
-    val a = all(content)
-    Seq(a("filesize"), a("initial_xxhash"), a("sha"))
-  }
+  val DefaultAlgs: Seq[String] = Seq("filesize", "initial_xxhash", "sha")
 
   /** Cascade selection by id list — parity with `--alg`
     * (CLI.pm:89-97). Unknown ids fail fast like Engine BUILD

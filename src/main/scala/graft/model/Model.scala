@@ -32,23 +32,5 @@ final case class DocTruth(url: String, truth_group: Long, truth_kind: String)
   */
 final case class DigestSpec(id: String, name: String, expr: Column)
 
-/** One output group of the dedup engine
-  * (reference Data::Dedup::Engine::Block, Engine.pm:228-328).
-  * `keys` may be SHORTER than the cascade: only the digests that were
-  * needed to isolate the block are present (lazy-digest invariant,
-  * Engine.pm:246-252, SURVEY.md §1.2.1). Keys are stringified digest
-  * values (reference stringifies for hashing, Engine.pm:340).
-  */
-final case class Block(keys: Seq[String], members: Seq[String])
-
 /** Engine kernel fixture row (FIXTURES.md §2). */
 final case class KV(letter: String, n: Int)
-
-/** Job configuration (reference CLI options P1, CLI.pm:30-39). */
-final case class JobConf(
-    algs: Seq[String] = Seq("filesize", "initial_xxhash", "sha"),
-    ignoreEmpty: Boolean = false,
-    resolveAliases: Boolean = true,
-    contentCol: String = "html",
-    idCol: String = "url"
-)

@@ -61,7 +61,7 @@ object DedupPipeline {
       salts: Int = 1)
 
   case class Config(
-      algs: Seq[String] = Seq("filesize", "initial_xxhash", "sha"),
+      algs: Seq[String] = Digests.DefaultAlgs,
       ignoreEmpty: Boolean = false,
       useMinHash: Boolean = true,
       useSimHash: Boolean = true,
@@ -70,7 +70,13 @@ object DedupPipeline {
       minhash: MinHashLSH.Config = MinHashLSH.Config(),
       simhash: SimHash.Config = SimHash.Config(),
       substring: SubstringConfig = SubstringConfig(),
-      longRun: LongRunConfig = LongRunConfig())
+      longRun: LongRunConfig = LongRunConfig()) {
+    // SimHash fingerprints the shingles MinHash's signature pass
+    // already holds: one shingling pass per run
+    require(!useSimHash || simhash.shingleK == minhash.shingleK,
+      s"simhash.shingleK (${simhash.shingleK}) must equal minhash.shingleK " +
+        s"(${minhash.shingleK}) while SimHash is on: both stages share one shingling pass")
+  }
 
   /** A run's outputs. From [[runCheckpointed]], `clusters`, `edges`
     * and `dedupedDocs` are lazy reads of the catalog's committed
@@ -185,21 +191,10 @@ object DedupPipeline {
       // [EXT] near-dup stages over non-empty canonical text. ONE
       // shingling/signature pass feeds MinHash banding, verification,
       // SimHash fingerprints AND the skip metrics (tokenize+hash is the
-      // dominant map-side cost); SimHash shares MinHash's shingles only
-      // when both stages use the same shingleK — a differing
-      // cfg.simhash.shingleK gets its own pass instead of silently
-      // inheriting the wrong feature universe.
+      // dominant map-side cost); `Config` pins SimHash to MinHash's
+      // shingleK, so both stages read the same feature universe.
       val textDocs = canon.filter(trim(col("text")) =!= "")
-      val sameK = cfg.simhash.shingleK == cfg.minhash.shingleK
-      val sigsMh =
-        if (cfg.useMinHash || (cfg.useSimHash && sameK))
-          Some(held(MinHashLSH.signatures(textDocs, cfg.minhash)))
-        else None
-      val sigsSh =
-        if (!cfg.useSimHash) None
-        else if (sameK) sigsMh
-        else Some(held(MinHashLSH.signatures(textDocs,
-          cfg.minhash.copy(shingleK = cfg.simhash.shingleK))))
+      lazy val sigs = held(MinHashLSH.signatures(textDocs, cfg.minhash))
 
       // per stage: candidate pairs + over-cap skip rows (src null) from
       // one streamed pass, held so its edges and its skip row share it,
@@ -210,11 +205,11 @@ object DedupPipeline {
       // ≥ minLen chars links the pair, verified by LCS.
       val stages: Seq[(String, DataFrame, DataFrame => DataFrame)] = Seq(
         Option.when(cfg.useMinHash)(("minhash",
-          MinHashLSH.candidatesAndSkips(sigsMh.get, cfg.minhash),
+          MinHashLSH.candidatesAndSkips(sigs, cfg.minhash),
           (c: DataFrame) =>
-            MinHashLSH.verifyCandidates(c.distinct(), sigsMh.get, cfg.minhash).drop("jaccard"))),
-        sigsSh.map(sg => ("simhash",
-          SimHash.edgesAndSkips(SimHash.fingerprintsFromShingles(sg, cfg.simhash), cfg.simhash),
+            MinHashLSH.verifyCandidates(c.distinct(), sigs, cfg.minhash).drop("jaccard"))),
+        Option.when(cfg.useSimHash)(("simhash",
+          SimHash.edgesAndSkips(SimHash.fingerprintsFromShingles(sigs, cfg.simhash), cfg.simhash),
           (c: DataFrame) => c.distinct())),
         Option.when(cfg.useSubstring)(("substring",
           SubstringDedup.edgesAndSkips(textDocs, cfg.substring.w, cfg.substring.stride,

@@ -40,11 +40,24 @@ class PageRankSpec extends SparkSpec {
     assert(expect("a") == expect.values.max)
     assert(expect("c") == expect.values.min)
     assert(expect("h") > expect("b") && expect("d") > expect("c"))
-    // checkpointEvery must not change values, only lineage
-    val out2 = PageRank.ranks(edges.toDF("src", "dst"), iters = 10,
-      checkpointEvery = 2)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(out2 == expect)
+    // the lineage cut every 4 iterations must not change values: runs
+    // that end before, at and past a cut match the reference
+    for (iters <- Seq(3, 4, 5, 9)) {
+      val out = PageRank.ranks(edges.toDF("src", "dst"), iters = iters)
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(out == reference(edges, iters), s"iters=$iters")
+    }
+  }
+
+  test("an empty edge frame fails and releases every frame ranks cached") {
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache() // whatever earlier suites left cached
+    val ex = intercept[IllegalArgumentException] {
+      PageRank.ranks(Seq.empty[(String, String)].toDF("src", "dst"))
+    }
+    assert(ex.getMessage.contains("empty graph"))
+    assert(cacheManager.isEmpty, "a frame ranks persisted is still cached")
   }
 
   test("href extraction: absolute http(s) only, fragment-stopped, document order") {

@@ -30,6 +30,10 @@ class DedupEngineSpec extends SparkSpec {
     r.blocks.select("keys", "members").collect()
       .map(row => (row.getSeq[String](0), row.getSeq[String](1))).toSet
 
+  /** Σ block sizes over the meta frame. */
+  private def blockSizes(r: DedupResult): Long =
+    r.blockMeta.agg(sum(col("size"))).head().getLong(0)
+
   // expected per Engine.t:250-264 (bag of blocks incl. short key arrays)
   private val expected = Set(
     (Seq("A", "1", "1", "1"), Seq("A1")),
@@ -42,52 +46,38 @@ class DedupEngineSpec extends SparkSpec {
     (Seq("C", "0"), Seq("C6")),
     (Seq("C", "1", "0", "4"), Seq("C9")))
 
-  for (mode <- Seq(DedupEngine.Eager, DedupEngine.Staged)) {
-    val m = mode.toString
-
-    test(s"$m: multi-level blocking reproduces reference blocks incl. short key arrays") {
-      val r = DedupEngine.run(fixture, "id", cascade, mode)
-      assert(blockSet(r) == expected)
-    }
-
-    test(s"$m: collision counts match the [6,3,3,0] oracle (Engine.t:267-271)") {
-      val r = DedupEngine.run(fixture, "id", cascade, mode)
-      assert(r.collisionCounts == Seq(6L, 3L, 3L, 0L))
-    }
-
-    test(s"$m: digest counts are monotonic non-increasing and lazy (Engine.pm:558-578)") {
-      val r = DedupEngine.run(fixture, "id", cascade, mode)
-      assert(r.digestCounts == Seq(9L, 9L, 6L, 6L))
-    }
-
-    test(s"$m: empty cascade puts everything in one keyless block (Engine.t:65-84)") {
-      val r = DedupEngine.run(fixture, "id", Nil, mode)
-      assert(blockSet(r) == Set((Seq.empty[String],
-        Seq("A1", "A4", "A7", "B2", "B5", "B8", "C3", "C9", "C6").sorted)))
-    }
-
-    test(s"$m: single object never computes a key (lazy, Engine.pm:351-364)") {
-      val r = DedupEngine.run(fixture.limit(1), "id", cascade, mode)
-      assert(blockSet(r).head._1.isEmpty)
-    }
-
-    test(s"$m: single-level grouping (Engine.t:86-124)") {
-      val r = DedupEngine.run(fixture, "id", cascade.take(1), mode)
-      assert(blockSet(r) == Set(
-        (Seq("A"), Seq("A1", "A4", "A7")),
-        (Seq("B"), Seq("B2", "B5", "B8")),
-        (Seq("C"), Seq("C3", "C6", "C9"))))
-    }
+  test("Eager: multi-level blocking reproduces reference blocks incl. short key arrays") {
+    val r = DedupEngine.run(fixture, "id", cascade)
+    assert(blockSet(r) == expected)
   }
 
-  test("eager and staged agree on a corpus slice") {
-    val docs = graft.corpus.Corpus.docs(spark, 300).toDF()
-    val casc = graft.functions.Digests.defaultCascade(col("html"))
-    val a = DedupEngine.run(docs, "url", casc, DedupEngine.Eager)
-    val b = DedupEngine.run(docs, "url", casc, DedupEngine.Staged)
-    assert(blockSet(a) == blockSet(b))
-    assert(a.digestCounts == b.digestCounts)
-    assert(a.collisionCounts == b.collisionCounts)
+  test("Eager: collision counts match the [6,3,3,0] oracle (Engine.t:267-271)") {
+    val r = DedupEngine.run(fixture, "id", cascade)
+    assert(r.collisionCounts == Seq(6L, 3L, 3L, 0L))
+  }
+
+  test("Eager: digest counts are monotonic non-increasing and lazy (Engine.pm:558-578)") {
+    val r = DedupEngine.run(fixture, "id", cascade)
+    assert(r.digestCounts == Seq(9L, 9L, 6L, 6L))
+  }
+
+  test("Eager: empty cascade puts everything in one keyless block (Engine.t:65-84)") {
+    val r = DedupEngine.run(fixture, "id", Nil)
+    assert(blockSet(r) == Set((Seq.empty[String],
+      Seq("A1", "A4", "A7", "B2", "B5", "B8", "C3", "C9", "C6").sorted)))
+  }
+
+  test("Eager: single object never computes a key (lazy, Engine.pm:351-364)") {
+    val r = DedupEngine.run(fixture.limit(1), "id", cascade)
+    assert(blockSet(r).head._1.isEmpty)
+  }
+
+  test("Eager: single-level grouping (Engine.t:86-124)") {
+    val r = DedupEngine.run(fixture, "id", cascade.take(1))
+    assert(blockSet(r) == Set(
+      (Seq("A"), Seq("A1", "A4", "A7")),
+      (Seq("B"), Seq("B2", "B5", "B8")),
+      (Seq("C"), Seq("C3", "C6", "C9"))))
   }
 
   test("construction fails fast on unknown digest id (Engine.t:210-232)") {
@@ -98,29 +88,28 @@ class DedupEngineSpec extends SparkSpec {
 
   test("last-level collisions are zero by construction on exact grouping") {
     val docs = graft.corpus.Corpus.docs(spark, 500).toDF()
-    val casc = graft.functions.Digests.defaultCascade(col("html"))
+    val casc = graft.functions.Digests.cascade(col("html"), graft.functions.Digests.DefaultAlgs)
     val r = DedupEngine.run(docs, "url", casc)
     assert(r.collisionCounts.last == 0L)
   }
 
-  for (mode <- Seq(DedupEngine.Eager, DedupEngine.Staged))
-    test(s"$mode: null digests form a real block — no row vanishes (r2 ADVICE)") {
-      // sha/md5 of NULL content is NULL at every level: groupBy counts
-      // the null-key block but a plain equi-join drops its rows from
-      // assignments — the null-safe join keeps blockMeta and
-      // assignments consistent
-      val docs = Seq(("u1", "same"), ("u2", "same"), ("u3", null),
-        ("u4", null), ("u5", "only")).toDF("id", "content")
-      val casc = Seq(
-        DigestSpec("len", "length", length(col("content"))),
-        DigestSpec("md5", "md5", md5(col("content").cast("binary"))))
-      val r = DedupEngine.run(docs, "id", casc, mode)
-      assert(r.assignments.count() == 5) // every input row assigned
-      assert(r.totalObjects == 5)
-      val byBlock = r.assignments.groupBy("block_id").count()
-        .collect().map(x => x.getString(0) -> x.getLong(1)).toMap
-      assert(byBlock == Map("u1" -> 2L, "u3" -> 2L, "u5" -> 1L))
-    }
+  test("Eager: null digests form a real block — no row vanishes (r2 ADVICE)") {
+    // sha/md5 of NULL content is NULL at every level: groupBy counts
+    // the null-key block but a plain equi-join drops its rows from
+    // assignments — the null-safe join keeps blockMeta and
+    // assignments consistent
+    val docs = Seq(("u1", "same"), ("u2", "same"), ("u3", null),
+      ("u4", null), ("u5", "only")).toDF("id", "content")
+    val casc = Seq(
+      DigestSpec("len", "length", length(col("content"))),
+      DigestSpec("md5", "md5", md5(col("content").cast("binary"))))
+    val r = DedupEngine.run(docs, "id", casc)
+    assert(r.assignments.count() == 5) // every input row assigned
+    assert(blockSizes(r) == 5) // and blockMeta counts every one of them
+    val byBlock = r.assignments.groupBy("block_id").count()
+      .collect().map(x => x.getString(0) -> x.getLong(1)).toMap
+    assert(byBlock == Map("u1" -> 2L, "u3" -> 2L, "u5" -> 1L))
+  }
 
   test("hot-block skew: a degenerate single-key block completes sanely (r2 VERDICT #7)") {
     // 200k identical-content rows = ONE full-key block. The block
@@ -136,7 +125,7 @@ class DedupEngineSpec extends SparkSpec {
       DigestSpec("len", "length", length(col("content"))),
       DigestSpec("md5", "md5", md5(col("content").cast("binary"))))
     val r = DedupEngine.run(docs, "id", casc)
-    assert(r.totalObjects == 200000L)
+    assert(blockSizes(r) == 200000L)
     assert(r.assignments.count() == 200000L)
     val hot = r.blockMeta.filter(col("size") > 1).collect()
     assert(hot.length == 1 && hot.head.getAs[Long]("size") == 199990L)

@@ -1236,6 +1236,20 @@ class IncrementalCliSpec extends SparkSpec {
     assert(sigIds == Set("A", "C", "D"), "near-dup B never enters the snapshot")
   }
 
+  test("--near-snapshot mode: a sink that throws leaves no batch frame cached") {
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache() // whatever earlier suites left cached
+    val dir = java.nio.file.Files.createTempDirectory("graft-nsnap-fail").toString + "/snap"
+    val docs = Seq(("A", (0 until 60).map(i => s"tok$i").mkString(" "))).toDF("url", "text")
+    val ex = intercept[IllegalStateException] {
+      graft.Main.runIncrementalNear(spark, docs, dir,
+        sink = _ => throw new IllegalStateException("sink failed"))
+    }
+    assert(ex.getMessage == "sink failed")
+    assert(cacheManager.isEmpty, "the batch signatures are still cached")
+  }
+
   test("--format splits assigns leakage-safe labels: a dup pair never straddles the boundary") {
     def mk(rows: Seq[(String, String)]) = rows.toDF("url", "text")
       .withColumn("warc_ts", lit(java.sql.Timestamp.valueOf("2026-01-01 00:00:00")))

@@ -10,12 +10,13 @@ import org.apache.spark.sql.functions._
   * shingling, same md5-prefix hash, same affine-permutation minima,
   * bit for bit, on a corpus that exercises every branch (short docs,
   * whole-doc shingles, duplicate shingles, the >= 6-token bbit path,
-  * empty-ish docs with odd whitespace).
+  * empty-ish docs with odd whitespace) plus seeded random documents
+  * ([[graft.RandomText]]).
   */
 class VerifKernelSpec extends SparkSpec {
   import spark.implicits._
 
-  private val docs = Seq(
+  private val fixtures = Seq(
     // >= 6 tokens, repeated shingles (dedup-irrelevance of the min fold)
     (1L, "a b c d e f g h a b c d e f g h a b c d e f"),
     (2L, "one two three four five six"),
@@ -24,8 +25,11 @@ class VerifKernelSpec extends SparkSpec {
     (5L, "x"), // single token
     (6L, "  leading\tand   trailing  mixedwhitespace tokens here okay fine "),
     (7L, (1 to 300).map(i => s"tok${i % 37}").mkString(" ")), // long, heavy dup shingles
-    (8L, "six exact tokens touch boundary case"))
-    .toDF("doc_id", "text")
+    (8L, "six exact tokens touch boundary case")) ++
+    // seeded random text: repeated tokens, tabs and space runs, astral
+    // code points, line and paragraph breaks
+    graft.RandomText.docs(24).zipWithIndex.map { case (t, i) => (100L + i, t) }
+  private val docs = fixtures.toDF("doc_id", "text")
 
   private val toksDf = docs
     .filter(col("text").isNotNull && trim(col("text")) =!= "")

@@ -84,8 +84,7 @@ class CheckpointPipelineSpec extends SparkSpec {
     val table = Seq(
       ("exact-only", docs, DedupPipeline.Config(useMinHash = false, useSimHash = false)),
       ("substring+longrun over cap", subDocs, subCfg),
-      ("simhash shingleK 3, minhash 5", docs,
-        DedupPipeline.Config(simhash = SimHash.Config(shingleK = 3))),
+      ("simhash only", docs, DedupPipeline.Config(useMinHash = false)),
       ("ignoreEmpty", docs, DedupPipeline.Config(ignoreEmpty = true)))
     for ((name, d, cfg) <- table) {
       val c = new Catalog(Files.createTempDirectory("graft-ckpt-eq").toString, spark)
@@ -93,6 +92,16 @@ class CheckpointPipelineSpec extends SparkSpec {
       assertSameResult(direct, DedupPipeline.runCheckpointed(d, c, cfg, "eq"), s"$name, fresh")
       assertSameResult(direct, DedupPipeline.runCheckpointed(d, c, cfg, "eq"), s"$name, resumed")
     }
+  }
+
+  test("a SimHash shingleK that differs from MinHash's is rejected while SimHash is on") {
+    val ex = intercept[IllegalArgumentException] {
+      DedupPipeline.Config(simhash = SimHash.Config(shingleK = 3))
+    }
+    assert(ex.getMessage.contains("simhash.shingleK (3)") &&
+      ex.getMessage.contains("minhash.shingleK (5)"), ex.getMessage)
+    // SimHash off: its shingleK is never read, so it is not checked
+    DedupPipeline.Config(useSimHash = false, simhash = SimHash.Config(shingleK = 3))
   }
 
   test("checkpointed substring+longrun stages persist their skip metrics; resume reads them back") {

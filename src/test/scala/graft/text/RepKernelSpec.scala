@@ -11,10 +11,16 @@ import org.apache.spark.sql.functions._
   * rounding, bit for bit, on a corpus that exercises every branch
   * (blank/whitespace-only docs, single token, tab-led text whose
   * space-only trim leaves a leading empty token, heavy repetition,
-  * ties, astral code points, lone separators).
+  * ties, astral code points, lone separators) plus seeded random
+  * documents ([[graft.RandomText]]).
   */
 class RepKernelSpec extends SparkSpec {
   import spark.implicits._
+
+  // seeded random text: repeated tokens, tabs and space runs, astral
+  // code points, line and paragraph breaks
+  private val random: Seq[(Long, String)] =
+    graft.RandomText.docs(32).zipWithIndex.map { case (t, i) => (100L + i, t) }
 
   private val texts = Seq(
     (1L, "a b a b a b a b"), // heavy bigram repetition
@@ -27,7 +33,7 @@ class RepKernelSpec extends SparkSpec {
     (8L, (1 to 200).map(i => s"t${i % 7}").mkString(" ")), // long, dup-heavy
     (9L, "tie a tie b tie a tie b"), // top-count tie
     (10L, "🎉 fest 🎉 fest 🎉 fest")) // astral
-    .toDF("doc_id", "text")
+    .concat(random).toDF("doc_id", "text")
 
   private val structured = Seq(
     (1L, "aa\nbb\naa\ncc"), // dup line
@@ -39,7 +45,7 @@ class RepKernelSpec extends SparkSpec {
     (7L, "🎉\n🎉\nxy"), // astral char mass
     (8L, "same\nsame\nsame\nsame"),
     (9L, "x\ny\n\nx\ny")) // cross-grain structure
-    .toDF("doc_id", "text")
+    .concat(random).toDF("doc_id", "text")
 
   test("repetition kernel == expression chain") {
     val feats = TextStats.repetitionFeatures(col("bgs"))
