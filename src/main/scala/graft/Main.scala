@@ -357,30 +357,12 @@ object Main {
     require(conf.clustersSnapshot.isEmpty,
       "--clusters-snapshot requires --snapshot or --near-snapshot")
 
-    // the dataset-audit formats (overlap/lm/ccnet) read only the INPUT
-    // corpus — running the dedup DAG (shingles, MinHash-128, banded
-    // pairing, CC iterations) to then never read its result would cost
-    // a corpus-scale pass for nothing, so the pipeline is lazy and the
-    // audit formats never force it
-    val auditOnly =
-      Set("overlap", "lm", "ccnet", "mirrors", "hitters").contains(conf.format)
+    // the pipeline is lazy: the audit formats never force it
+    val auditOnly = AuditFormats.contains(conf.format)
     val catalog = conf.checkpoint.map(new Catalog(_, spark))
     lazy val result = runPipeline(docs, conf, catalog)
 
-    // quality keep-policy (r4 VERDICT #5): the cluster survivor is the
-    // argmax-quality member instead of the min-url canonical. Keepers
-    // are one small row per cluster — persisted so survivor joins and
-    // the metrics count share one computation.
-    val keepers =
-      if (auditOnly) None else keepPolicyKeepers(docs, result, conf.keepPolicy)
-    keepers.foreach(_.persist())
-    val out0 = formatOutput(docs, result, conf.format, keepers, conf.split,
-      conf.ccnetSample, conf.domainCap, conf.tokenBudget, conf.hittersM)
-    val out =
-      if (conf.progress) graft.progress.Progress.tap(out0, "report_out") else out0
-    if (conf.debug) System.err.println(out.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode))
-    emit(conf.outfile, out, conf.shards)
+    emitReport(docs, result, conf, catalog)
 
     // observed progress metrics land in the checkpoint catalog's
     // metrics table (S5: metrics stream → metrics sink)
@@ -389,14 +371,6 @@ object Main {
         cat.recordMetrics(s"observe:${o.name}",
           o.metrics.collect { case (k, v: Long) => k -> v })
       }
-    }
-
-    // quality keep-policy metrics (S5/S6 sink): how many clusters got
-    // a quality-selected keeper, and how many differ from the min-url
-    // canonical the default policy would have kept
-    keepers.foreach { k =>
-      catalog.foreach(recordKeepPolicyMetrics(k, _))
-      k.unpersist()
     }
 
     if (conf.verbose && !auditOnly) {
@@ -412,6 +386,39 @@ object Main {
       }
     }
     spark.stop()
+  }
+
+  /** The dataset-audit formats: they read only the INPUT corpus —
+    * running the dedup DAG (shingles, MinHash-128, banded pairing, CC
+    * iterations) to then never read its result would cost a
+    * corpus-scale pass for nothing.
+    */
+  private val AuditFormats = Set("overlap", "lm", "ccnet", "mirrors", "hitters")
+
+  /** Emit the report of `result` in `conf`'s format to `conf.outfile`.
+    * Under a quality keep-policy (r4 VERDICT #5) the cluster survivor
+    * is the argmax-quality member instead of the min-url canonical. The
+    * keepers are one small row per cluster, persisted so survivor joins
+    * and the metrics (how many clusters got a quality-selected keeper,
+    * and how many differ from the min-url canonical; S5/S6 sink) share
+    * one computation, and released on error too.
+    */
+  private[graft] def emitReport(docs: DataFrame, result: => DedupPipeline.Result, conf: Conf,
+      catalog: Option[Catalog]): Unit = {
+    val auditOnly = AuditFormats.contains(conf.format)
+    val keepers =
+      if (auditOnly) None else keepPolicyKeepers(docs, result, conf.keepPolicy)
+    keepers.foreach(_.persist())
+    try {
+      val out0 = formatOutput(docs, result, conf.format, keepers, conf.split,
+        conf.ccnetSample, conf.domainCap, conf.tokenBudget, conf.hittersM)
+      val out =
+        if (conf.progress) graft.progress.Progress.tap(out0, "report_out") else out0
+      if (conf.debug) System.err.println(out.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode))
+      emit(conf.outfile, out, conf.shards)
+      for (k <- keepers; cat <- catalog) recordKeepPolicyMetrics(k, cat)
+    } finally keepers.foreach(_.unpersist())
   }
 
   /** The docs a run reads: the union of its inputs through the

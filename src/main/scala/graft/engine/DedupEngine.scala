@@ -159,7 +159,12 @@ object DedupEngine {
     // is a ReusedExchange and the scan+digest projection runs ONCE per
     // action instead of once per consumer (digest CPU over page bytes
     // dominates everything else at 100 TB — the narrow-row shuffle it
-    // trades away the map-side combine for is ~150 B/row).
+    // trades away the map-side combine for is ~150 B/row). The reuse
+    // holds only while both subtrees stay equal: a consumer predicate
+    // on `id` alone, written or inferred (`id =!= block_id` infers
+    // `isnotnull(id)`), is pushed below the probe side's exchange only
+    // and splits it, so consumers filter null-tolerantly
+    // (`coalesce(pred, false)`, as the pipeline's exact edges do).
     val narrow = narrow0.repartition(keyCols(n): _*)
     // aggregation over the pre-shuffled frame: hot blocks never
     // materialize arrays (count+min only)

@@ -1,9 +1,14 @@
 package graft.engine
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.near.MinHashLSH
+import org.apache.spark.unsafe.types.UTF8String
+import graft.near.{Hashing, MinHashLSH}
 
 /** Incremental (delta) NEAR-dup: check a new crawl batch against the
   * accumulated corpus's MinHash/LSH signature SNAPSHOT — without
@@ -23,31 +28,59 @@ import graft.near.MinHashLSH
   * `near_dup_of` is the minimum prior keeper with verified Jaccard ≥
   * threshold (the prior corpus wins — its doc is the one already
   * retained downstream); otherwise the minimum EARLIER batch doc with
-  * verified Jaccard ≥ threshold; otherwise null (novel). Single-pass
-  * over originals — near-dup is not transitive, so no fixpoint chase.
+  * verified Jaccard ≥ threshold; otherwise null (novel). "Minimum" is
+  * Spark's string order (unsigned UTF-8 bytes); "earlier" is the
+  * bucket pass's `String` order. Single-pass over originals —
+  * near-dup is not transitive, so no fixpoint chase.
   *
-  * Scale shape: the snapshot is the 10^12-row side, the batch is
-  * small. Both verdict tiers come from ONE bucket pass and ONE verify:
-  *   - `bands` is probed in ONE map-side `left_semi` scan against the
-  *     BROADCAST batch band keys;
-  *   - the hits (tier 0) and the batch's own band rows (tier 1) are
-  *     grouped per (band_id, band_hash) bucket once, prior members
-  *     first; the drain holds at most `cfg.maxBucket` + 1 members per
-  *     tier and streams each batch member past the held prior members;
-  *   - `sigs` is scanned once map-side against the broadcast candidate
-  *     keeper ids, and one exact-Jaccard join over both tiers' shingles
-  *     feeds one per-id `min(struct(tier, partner, j))`.
-  * The caps apply per tier: a bucket with more than `cfg.maxBucket`
-  * prior members, or more than `cfg.maxBucket` batch members, yields
-  * skip rows for that tier instead of pairs — capped and surfaced,
-  * never silently exploded (SCALE.md invariant 3). `cfg.salts` is not
-  * used: one hot bucket streams through one task, as in the
-  * single-round [[MinHashLSH.candidatesAndSkips]]. For batches whose
-  * band key set outgrows a broadcast, the [[IncrementalDedup
-  * .dedupAgainstBloom]] Bloom middle path applies unchanged to the
-  * (band_id, band_hash) key.
+  * Both verdict tiers come from ONE bucket pass (`bucketRows`) and ONE
+  * verify. The caps apply per tier: a bucket with more than
+  * `cfg.maxBucket` prior members, or more than `cfg.maxBucket` batch
+  * members, yields skip rows for that tier instead of pairs — capped
+  * and surfaced, never silently exploded (SCALE.md invariant 3).
+  * `cfg.salts` is not used: one hot bucket streams through one task,
+  * as in the single-round [[MinHashLSH.candidatesAndSkips]].
+  *
+  * Two paths, chosen from the measured input size ("To Partition, or
+  * Not to Partition", SIGMOD'21), with identical verdicts and skip
+  * totals:
+  *   - Driver finisher, when the batch's signature rows, the snapshot
+  *     band hits and the candidate keepers' shingle sets fit
+  *     [[LocalBelow]] (rows plus shingle hashes). Three bounded jobs
+  *     read them: a collect of the batch signatures (band hashes from
+  *     `MinHashLSH.bandHashesLocal`, executor-side), ONE map-side scan
+  *     of `bands` keeping the rows whose key is in the broadcast batch
+  *     key set, and ONE map-side fetch of the candidate keepers' rows
+  *     of `sigs`. The bucket pass, the skip total, `Hashing.jaccard`
+  *     and the per-id minimum run on the driver, and the verdicts come
+  *     back as a local frame. Each job ships a partition's rows only
+  *     while they fit its share of what is left of the bound, so at
+  *     most [[LocalBelow]] rows and hashes reach the driver (SCALE.md
+  *     invariant 4).
+  *   - Distributed plan, above the bound (the scale path): `bands` is
+  *     probed in ONE map-side `left_semi` scan against the BROADCAST
+  *     batch band keys; the hits (tier 0) and the batch's own band rows
+  *     (tier 1) are grouped per (band_id, band_hash) bucket once, prior
+  *     members first, and the drain holds at most `cfg.maxBucket` + 1
+  *     members per tier; `sigs` is scanned once map-side against the
+  *     broadcast candidate keeper ids, and one exact-Jaccard join over
+  *     both tiers' shingles feeds one per-id
+  *     `min(struct(tier, partner, j))`. For batches whose band key set
+  *     outgrows a broadcast, the [[IncrementalDedup.dedupAgainstBloom]]
+  *     Bloom middle path applies unchanged to the (band_id, band_hash)
+  *     key.
   */
 object IncrementalNearDup {
+
+  /** Default bound of the driver finisher: 2^19 rows plus shingle
+    * hashes, a few MB of driver heap. A batch doc weighs one plus its
+    * band count plus its shingle count, a band hit one, a keeper's
+    * `sigs` row one plus its shingle count. A 250-doc crawl batch
+    * (about 8k band rows and 62k shingle hashes) or a 1,000-doc
+    * bootstrap batch (about 280k) fits; a batch of some thousands of
+    * pages, or a hot prior bucket of that many members, does not.
+    */
+  val LocalBelow: Int = 1 << 19
 
   /** The two snapshot frames (see object doc). */
   case class Snapshot(bands: DataFrame, sigs: DataFrame)
@@ -76,13 +109,11 @@ object IncrementalNearDup {
     */
   def bootstrap(prior: DataFrame, cfg: MinHashLSH.Config = MinHashLSH.Config(),
       idCol: String = "url", textCol: String = "text"): Snapshot = {
-    // lazy checkpoint (r6): both snapshot views (band rows, shingle
-    // sets) derive from one signature pass, computed and cached by the
-    // first job that reads either; the keeper-shingle fetch waits for
-    // the band probe's broadcast output, so the views are never
-    // computed concurrently. In production the snapshot IS a table.
-    val sigs = MinHashLSH.signatures(prior, cfg, textCol, idCol)
-      .localCheckpoint(false)
+    // eager checkpoint: both snapshot views (band rows, shingle sets)
+    // read the one signature pass it materializes here, so a job that
+    // reads both views never computes a partition twice. In production
+    // the snapshot IS a table.
+    val sigs = MinHashLSH.signatures(prior, cfg, textCol, idCol).localCheckpoint()
     Snapshot(bandRows(sigs, cfg), sigs.select(col("id"), col("shingles")))
   }
 
@@ -175,31 +206,179 @@ object IncrementalNearDup {
   def dedupAgainst(batch: DataFrame, snapshot: Snapshot,
       cfg: MinHashLSH.Config = MinHashLSH.Config(),
       idCol: String = "url", textCol: String = "text",
-      skippedAcc: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
+      skippedAcc: Option[org.apache.spark.util.LongAccumulator] = None,
+      localBelow: Int = LocalBelow): DataFrame = {
     val batchSigs = MinHashLSH.signatures(batch, cfg, textCol, idCol).persist()
-    try dedupAgainstSignatures(batchSigs, snapshot, cfg, idCol, skippedAcc)
+    try dedupAgainstSignatures(batchSigs, snapshot, cfg, idCol, skippedAcc, localBelow)
     finally batchSigs.unpersist()
   }
 
   /** [[dedupAgainst]] over precomputed `MinHashLSH.signatures` rows
     * (persist them across this call and [[snapshotDeltaFromSignatures]]
-    * so the batch is shingled ONCE per crawl). The result is eagerly
-    * checkpointed. When `skippedAcc` is given, the summed over-cap
-    * skip count of both tiers is added to it: per saturated prior
-    * bucket, its size times the batch docs in it; per saturated batch
-    * bucket, its size (the [[MinHashLSH.candidatesAndSkips]] count).
-    * It is the signal that recall is degrading on a hot boilerplate
-    * band: capped AND surfaced, SCALE.md invariant 3.
+    * so the batch is shingled ONCE per crawl). The result is
+    * materialized: a local frame from the driver finisher, an eager
+    * checkpoint from the distributed plan. When `skippedAcc` is given,
+    * the summed over-cap skip count of both tiers is added to it: per
+    * saturated prior bucket, its size times the batch docs in it; per
+    * saturated batch bucket, its size (the
+    * [[MinHashLSH.candidatesAndSkips]] count). It is the signal that
+    * recall is degrading on a hot boilerplate band: capped AND
+    * surfaced, SCALE.md invariant 3. `localBelow = 0` forces the
+    * distributed plan for any batch with a row.
     */
   def dedupAgainstSignatures(batchSigs: DataFrame, snapshot: Snapshot,
       cfg: MinHashLSH.Config = MinHashLSH.Config(),
       idCol: String = "url",
-      skippedAcc: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
+      skippedAcc: Option[org.apache.spark.util.LongAccumulator] = None,
+      localBelow: Int = LocalBelow): DataFrame = {
+    localVerdicts(batchSigs, snapshot, cfg, localBelow) match {
+      case Some((rows, skipped)) =>
+        skippedAcc.foreach(_.add(skipped))
+        val schema = StructType(Seq(
+          StructField(idCol, StringType, batchSigs.schema("id").nullable),
+          StructField("near_dup_of", StringType), StructField("jaccard", DoubleType),
+          StructField("is_novel", BooleanType, nullable = false)))
+        batchSigs.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      case None => distributedVerdicts(batchSigs, snapshot, cfg, idCol, skippedAcc)
+    }
+  }
+
+  /** One job over `df`'s internal rows: `weigh` gives each row's weight
+    * (0 = not wanted) and `copy` its driver copy. A partition copies
+    * rows while its summed weight is within its share of `budget`
+    * (budget / numPartitions) and only weighs the rest, so at most
+    * `budget` reaches the driver. Returns the copies and their total
+    * weight, or None when the total is over `budget`. A skewed
+    * partition past its share, with the total within `budget`, costs
+    * one more, unshared run of the job.
+    */
+  private def collectWithin[T](df: DataFrame, budget: Long)(weigh: InternalRow => Long,
+      copy: InternalRow => T): Option[(Seq[T], Long)] = {
+    def run(shared: Boolean) = df.queryExecution.toRdd.mapPartitions { rows =>
+      val share = if (shared) budget / TaskContext.get().numPartitions() else budget
+      val kept = mutable.ArrayBuffer.empty[T]
+      var total = 0L
+      rows.foreach { r =>
+        val w = weigh(r)
+        if (w > 0) {
+          total += w
+          if (total <= share) kept += copy(r) else kept.clear()
+        }
+      }
+      Iterator.single((total, Option.when(total <= share)(kept.toSeq)))
+    }.collect()
+    val parts = run(shared = true)
+    val total = parts.map(_._1).sum
+    if (total > budget) None
+    else Some(((if (parts.forall(_._2.isDefined)) parts else run(shared = false))
+      .toSeq.flatMap(_._2.get), total))
+  }
+
+  private def stringAt(r: InternalRow, i: Int): String =
+    if (r.isNullAt(i)) null else r.getUTF8String(i).toString
+
+  private def longsAt(r: InternalRow, i: Int): Array[Long] =
+    if (r.isNullAt(i)) null else r.getArray(i).toLongArray()
+
+  private def sizeAt(r: InternalRow, i: Int): Long =
+    if (r.isNullAt(i)) 0L else r.getArray(i).numElements()
+
+  /** The driver finisher (object doc): the verdict rows and the skip
+    * total, or None when the batch, its band hits or its keepers'
+    * shingle sets do not fit `budget`.
+    */
+  private def localVerdicts(batchSigs: DataFrame, snapshot: Snapshot, cfg: MinHashLSH.Config,
+      budget: Long): Option[(Seq[Row], Long)] = {
+    val sc = batchSigs.sparkSession.sparkContext
+    val (bands, perBand) = (cfg.bands, cfg.rowsPerBand)
+    // job 1: (id, shingles, band hashes) per batch row; the band
+    // hashes are those of `bandRows` (null signature: no band rows)
+    val batch = collectWithin(batchSigs.select(col("id"), col("shingles"), col("sig")), budget)(
+      r => 1L + bands + sizeAt(r, 1),
+      r => (stringAt(r, 0), longsAt(r, 1),
+        Option(longsAt(r, 2)).map(MinHashLSH.bandHashesLocal(_, bands, perBand)).orNull))
+    batch.flatMap { case (docs, w1) =>
+      val keys = sc.broadcast(docs.iterator.filter(_._3 != null)
+        .flatMap(d => d._3.iterator.zipWithIndex.map { case (h, b) => (b, h) }).toSet)
+      // job 2: the snapshot band rows on a batch key (an equi-join: null keys never hit)
+      val hits = try collectWithin(
+          snapshot.bands.select(col("band_id"), col("band_hash"), col("id")), budget - w1)(
+          r => if (!r.isNullAt(0) && !r.isNullAt(1) &&
+            keys.value.contains((r.getInt(0), r.getLong(1)))) 1L else 0L,
+          r => (r.getInt(0), r.getLong(1), stringAt(r, 2)))
+        finally keys.destroy()
+      hits.flatMap { case (prior, w2) =>
+        decideLocally(docs, prior, snapshot, cfg, budget - w1 - w2) }
+    }
+  }
+
+  /** The bucket pass, the keeper fetch (job 3) and the verify of the
+    * driver finisher over the collected batch rows and band hits.
+    */
+  private def decideLocally(docs: Seq[(String, Array[Long], Array[Long])],
+      hits: Seq[(Int, Long, String)], snapshot: Snapshot, cfg: MinHashLSH.Config,
+      budget: Long): Option[(Seq[Row], Long)] = {
+    val members = mutable.HashMap.empty[(Int, Long),
+      (mutable.ArrayBuffer[String], mutable.ArrayBuffer[String])]
+    def bucket(k: (Int, Long)) = members.getOrElseUpdate(k,
+      (mutable.ArrayBuffer.empty[String], mutable.ArrayBuffer.empty[String]))
+    for ((id, _, bh) <- docs if bh != null; b <- bh.indices) bucket((b, bh(b)))._2 += id
+    for ((b, h, id) <- hits) bucket((b, h))._1 += id
+    var skipped = 0L
+    val pairs = mutable.LinkedHashSet.empty[(String, String, Int)]
+    for ((prior, batch) <- members.valuesIterator;
+         (id, partner, tier, n) <- bucketRows(
+           prior.iterator.map((_, Prior)) ++ batch.iterator.map((_, Batch)), cfg.maxBucket))
+      if (partner == null) skipped += n
+      // a null batch id joins no shingle set: no verdict
+      else if (id != null) pairs += ((id, partner, tier))
+    val keeperIds = pairs.iterator.collect { case (_, p, Prior) => UTF8String.fromString(p) }.toSet
+    val keepers =
+      if (keeperIds.isEmpty) Some((Seq.empty[(String, Array[Long])], 0L))
+      else {
+        val ids = snapshot.sigs.sparkSession.sparkContext.broadcast(keeperIds)
+        try collectWithin(snapshot.sigs.select(col("id"), col("shingles")), budget)(
+            r => if (!r.isNullAt(0) && ids.value.contains(r.getUTF8String(0))) 1L + sizeAt(r, 1)
+              else 0L,
+            r => (stringAt(r, 0), longsAt(r, 1)))
+        finally ids.destroy()
+      }
+    keepers.map { case (fetched, _) =>
+      val shingles = Seq(Prior -> fetched, Batch -> docs.map(d => (d._1, d._2)))
+        .map { case (t, rows) => t -> rows.filter(_._1 != null).groupMap(_._1)(_._2) }.toMap
+      // per id, the minimum (tier, partner, j) in Spark's struct order
+      // over every verified shingle-set pairing of (id, partner)
+      def before(x: (Int, String, Double), y: (Int, String, Double)): Boolean =
+        if (x._1 != y._1) x._1 < y._1
+        else {
+          val c = UTF8String.fromString(x._2).binaryCompare(UTF8String.fromString(y._2))
+          if (c != 0) c < 0 else x._3 < y._3
+        }
+      val best = mutable.HashMap.empty[String, (Int, String, Double)]
+      for ((id, partner, tier) <- pairs;
+           sb <- shingles(Batch).getOrElse(id, Nil);
+           sp <- shingles(tier).getOrElse(partner, Nil)) {
+        val j = Hashing.jaccard(sb, sp)
+        val m = (tier, partner, j)
+        if (j >= cfg.jaccardThreshold && best.get(id).forall(before(m, _))) best(id) = m
+      }
+      (docs.map { case (id, _, _) => best.get(id) match {
+        case Some((_, p, j)) => Row(id, p, j, false)
+        case None => Row(id, null, null, true)
+      } }, skipped)
+    }
+  }
+
+  /** The distributed plan (object doc); the result is eagerly
+    * checkpointed.
+    */
+  private def distributedVerdicts(batchSigs: DataFrame, snapshot: Snapshot,
+      cfg: MinHashLSH.Config, idCol: String,
+      skippedAcc: Option[org.apache.spark.util.LongAccumulator]): DataFrame = {
     val spark = batchSigs.sparkSession
     import spark.implicits._
     val jaccardUdf = udf((x: Seq[Long], y: Seq[Long]) =>
-      graft.near.Hashing.jaccard(
-        if (x == null) null else x.toArray, if (y == null) null else y.toArray))
+      Hashing.jaccard(if (x == null) null else x.toArray, if (y == null) null else y.toArray))
 
     // persisted so the skip aggregate below re-reads this SMALL frame
     // instead of re-running the bucket pass
@@ -252,7 +431,13 @@ object IncrementalNearDup {
       cfg: MinHashLSH.Config = MinHashLSH.Config(),
       idCol: String = "url"): Snapshot = {
     val novel = verdicts.filter(col("is_novel")).select(col(idCol).as("id"))
-    val kept = batchSigs.join(broadcast(novel), Seq("id"), "left_semi")
+    // a local verdict frame (the driver finisher's) selects its novel
+    // ids by value: broadcasting a local frame costs one Spark job per
+    // consumer
+    val kept =
+      if (verdicts.isLocal)
+        batchSigs.filter(col("id").isin(novel.collect().toSeq.map(_.get(0)): _*))
+      else batchSigs.join(broadcast(novel), Seq("id"), "left_semi")
     Snapshot(bandRows(kept, cfg), kept.select(col("id"), col("shingles")))
   }
 }

@@ -363,18 +363,18 @@ object MinHashLSH {
     * Terminal operator: the signature frame is persisted for the
     * candidate pass + the two verification joins, the (small) verified
     * edge set is materialized via localCheckpoint, and the signatures
-    * are unpersisted before returning — no cached frame outlives the
+    * are unpersisted before returning, on error too — no cached frame outlives the
     * call (r2 VERDICT #2: the persist leak pinned the widest
     * intermediate of the whole pipeline in executor storage).
     */
   def edges(docs: DataFrame, cfg: Config = Config(), textCol: String = "text",
       idCol: String = "url"): DataFrame = {
     val sigs = signatures(docs, cfg, textCol, idCol).persist()
-    val cand = candidatesAndSkips(sigs, cfg).filter(col("src").isNotNull)
-      .select("src", "dst").distinct()
-    val out = verifyCandidates(cand, sigs, cfg).localCheckpoint()
-    sigs.unpersist()
-    out
+    try {
+      val cand = candidatesAndSkips(sigs, cfg).filter(col("src").isNotNull)
+        .select("src", "dst").distinct()
+      verifyCandidates(cand, sigs, cfg).localCheckpoint()
+    } finally sigs.unpersist()
   }
 
   /** Exact-Jaccard verification of (src, dst) candidate pairs against

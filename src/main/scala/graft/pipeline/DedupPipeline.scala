@@ -155,7 +155,7 @@ object DedupPipeline {
     * builds the near-dup stages, and `exact` costs only what its
     * consumers force.
     */
-  private final class EdgeDag(docsRaw: DataFrame, cfg: Config) {
+  private[pipeline] final class EdgeDag(docsRaw: DataFrame, cfg: Config) {
     // F4 quarantine: undecodable rows (text null) are counted and routed
     // out, never silently dropped (Files.pm:229-233, Files.t:290-299)
     val quarantined: DataFrame = docsRaw.filter(col("text").isNull)
@@ -184,8 +184,13 @@ object DedupPipeline {
       * so a RESUME reads it back instead of re-shingling the corpus.
       */
     lazy val rows: DataFrame = {
+      // null-tolerant on purpose: from a bare `id =!= block_id`,
+      // constraint inference derives `isnotnull(id)` and pushes it under
+      // the assignments' probe side only, which splits the shared digest
+      // exchange in two (every page digested twice). A null id still
+      // yields no edge.
       val exactEdges = exact.assignments
-        .filter(col("id") =!= col("block_id"))
+        .filter(coalesce(col("id") =!= col("block_id"), lit(false)))
         .select(col("id").as("src"), col("block_id").as("dst"), lit("exact").as("kind"))
 
       // [EXT] near-dup stages over non-empty canonical text. ONE

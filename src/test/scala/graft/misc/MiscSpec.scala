@@ -1720,6 +1720,50 @@ class IncrementalCliSpec extends SparkSpec {
     }
   }
 
+  test("--near-snapshot decides a small batch in at most 8 jobs with no shuffle") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-nsnap-jobs").toString + "/snap"
+    def page(tag: String, edit: Int) =
+      (0 until 120).map(i => if (i % 40 == edit) s"alt$i" else s"$tag$i").mkString(" ")
+    graft.Main.runIncrementalNear(spark, crawlBatch(Seq(("A", page("tok", -1)),
+      ("C", page("other", -1)), ("E", page("third", -1)))), dir)
+    val sc = spark.sparkContext
+    val group = s"near-snapshot-${System.nanoTime()}"
+    var jobs = 0
+    var shuffleBytes = 0L
+    val stages = scala.collection.mutable.Set.empty[Int]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          synchronized { jobs += 1; stages ++= e.stageIds }
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        synchronized {
+          if (stages(e.stageId) && e.taskMetrics != null)
+            shuffleBytes += e.taskMetrics.shuffleWriteMetrics.bytesWritten
+        }
+    }
+    val out = java.nio.file.Files.createTempDirectory("graft-nsnap-out").toString + "/v"
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    val verdicts = try {
+      sc.setJobGroup(group, "near_snapshot", interruptOnCancel = false)
+      try graft.Main.runIncrementalNear(spark, crawlBatch(Seq(("B", page("tok", 39)),
+          ("D", page("novel", -1)), ("F", page("novel", 39)))), dir,
+          v => graft.Main.emit(out, v))
+      finally sc.clearJobGroup()
+    } finally {
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(verdicts.collect().map(r => r.getString(0) -> Option(r.getString(1))).toMap ==
+      Map("B" -> Some("A"), "D" -> None, "F" -> Some("D")))
+    assert(spark.read.parquet(s"$dir/sigs").select("id").collect().map(_.getString(0)).toSet ==
+      Set("A", "C", "D", "E"), "the snapshot gained the batch's novel doc only")
+    listener.synchronized {
+      assert(jobs <= 8, s"$jobs jobs")
+      assert(shuffleBytes == 0L, s"$shuffleBytes shuffle bytes written")
+    }
+  }
+
   test("a failing emit sink leaves the snapshot unpoisoned (append runs after sink)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-snap2").toString + "/snap"
     def mk(rows: Seq[(String, String)]) = rows.toDF("url", "text")

@@ -194,4 +194,18 @@ class NearDupSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(salted == single && salted.size == 50 * 49 / 2)
   }
+
+  test("MinHashLSH.edges releases its signatures when the verify throws") {
+    import spark.implicits._
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache() // whatever earlier suites left cached
+    val docs = Seq(("a", "one two three four five six"), ("b", "one two three four five six"))
+      .toDF("url", "text")
+      .withColumn("text", when(col("url") === "b", raise_error(lit("page failed")))
+        .otherwise(col("text")))
+    intercept[Exception](MinHashLSH.edges(docs))
+    assert(cacheManager.isEmpty, "the signatures are still cached")
+  }
 }
+

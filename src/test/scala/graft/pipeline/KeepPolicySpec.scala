@@ -73,4 +73,17 @@ class KeepPolicySpec extends SparkSpec {
     assert(s("https://z.example/bad") == -1.0)
     assert(s("https://z.example/ok") > 0.0)
   }
+
+  test("a sink that throws leaves no keepers frame cached") {
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache() // whatever earlier suites left cached
+    // an output path under a regular file: the csv write fails
+    val file = java.nio.file.Files.createTempFile("graft-keep-sink", ".txt").toString
+    val conf = graft.Main.parse(List("--input", "x.parquet", "--format", "clusters",
+      "--keep-policy", "quality", "--outfile", s"$file/out"))
+    intercept[Exception](graft.Main.emitReport(docs, result, conf, None))
+    assert(cacheManager.isEmpty, "the keepers are still cached")
+  }
 }
+

@@ -1,5 +1,9 @@
 package graft.pipeline
 
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_COL, ReusedExchangeExec,
+  ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.corpus.Corpus
@@ -164,5 +168,38 @@ class PipelineSpec extends SparkSpec {
         maxDocsPerWindow = 3)))
     assert(r.edges.filter(col("kind") === "substring").count() == 0)
     assert(r.skippedBucketRows.get("substring").exists(_ >= 6L))
+  }
+
+  /** The digest exchanges (a column repartition whose output carries
+    * the exact stage's `__id`) of a physical plan, through AQE plans,
+    * query stages and subqueries; a reused exchange is not counted.
+    */
+  private def digestExchanges(p: SparkPlan): Seq[ShuffleExchangeExec] = p match {
+    case a: AdaptiveSparkPlanExec => digestExchanges(a.executedPlan)
+    case s: QueryStageExec => digestExchanges(s.plan)
+    case _: ReusedExchangeExec => Nil
+    case e: ShuffleExchangeExec =>
+      (if (e.shuffleOrigin == REPARTITION_BY_COL && e.output.exists(_.name == "__id")) Seq(e)
+        else Nil) ++ digestExchanges(e.child)
+    case other => (other.children ++ other.subqueries).flatMap(digestExchanges)
+  }
+
+  test("the edge plan digests every page once: one digest exchange, initial and final plan") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-digest-xchg").toString + "/docs"
+    Corpus.docs(spark, 300L).toDF().write.parquet(dir)
+    val dag = new DedupPipeline.EdgeDag(spark.read.parquet(dir), DedupPipeline.Config())
+    try {
+      val rows = dag.rows
+      val initial = rows.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.inputPlan
+        case p => p
+      }
+      // before AQE's stage reuse: the consumers' exchanges are one plan
+      assert(digestExchanges(initial).map(_.canonicalized).distinct.size == 1,
+        initial.treeString)
+      rows.collect()
+      val fin = rows.queryExecution.executedPlan
+      assert(digestExchanges(fin).size == 1, fin.treeString)
+    } finally dag.release()
   }
 }
