@@ -2,12 +2,12 @@ package graft.engine
 
 import scala.collection.mutable
 
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.DriverCollect
+import graft.functions.DriverCollect.{collectWithin, longsAt, sizeAt, stringAt}
 import graft.near.{Hashing, MinHashLSH}
 
 /** Incremental (delta) NEAR-dup: check a new crawl batch against the
@@ -46,7 +46,10 @@ import graft.near.{Hashing, MinHashLSH}
   * totals:
   *   - Driver finisher, when the batch's signature rows, the snapshot
   *     band hits and the candidate keepers' shingle sets fit
-  *     [[LocalBelow]] (rows plus shingle hashes). Three bounded jobs
+  *     [[DriverCollect.NearDupBound]] (rows plus shingle hashes: a
+  *     batch doc weighs one plus its band count plus its shingle count,
+  *     a band hit one, a keeper's `sigs` row one plus its shingle
+  *     count). Three bounded jobs ([[DriverCollect.collectWithin]])
   *     read them: a collect of the batch signatures (band hashes from
   *     `MinHashLSH.bandHashesLocal`, executor-side), ONE map-side scan
   *     of `bands` keeping the rows whose key is in the broadcast batch
@@ -55,7 +58,7 @@ import graft.near.{Hashing, MinHashLSH}
   *     and the per-id minimum run on the driver, and the verdicts come
   *     back as a local frame. Each job ships a partition's rows only
   *     while they fit its share of what is left of the bound, so at
-  *     most [[LocalBelow]] rows and hashes reach the driver (SCALE.md
+  *     most the bound's rows and hashes reach the driver (SCALE.md
   *     invariant 4).
   *   - Distributed plan, above the bound (the scale path): `bands` is
   *     probed in ONE map-side `left_semi` scan against the BROADCAST
@@ -71,16 +74,6 @@ import graft.near.{Hashing, MinHashLSH}
   *     key.
   */
 object IncrementalNearDup {
-
-  /** Default bound of the driver finisher: 2^19 rows plus shingle
-    * hashes, a few MB of driver heap. A batch doc weighs one plus its
-    * band count plus its shingle count, a band hit one, a keeper's
-    * `sigs` row one plus its shingle count. A 250-doc crawl batch
-    * (about 8k band rows and 62k shingle hashes) or a 1,000-doc
-    * bootstrap batch (about 280k) fits; a batch of some thousands of
-    * pages, or a hot prior bucket of that many members, does not.
-    */
-  val LocalBelow: Int = 1 << 19
 
   /** The two snapshot frames (see object doc). */
   case class Snapshot(bands: DataFrame, sigs: DataFrame)
@@ -207,7 +200,7 @@ object IncrementalNearDup {
       cfg: MinHashLSH.Config = MinHashLSH.Config(),
       idCol: String = "url", textCol: String = "text",
       skippedAcc: Option[org.apache.spark.util.LongAccumulator] = None,
-      localBelow: Int = LocalBelow): DataFrame = {
+      localBelow: Int = DriverCollect.NearDupBound): DataFrame = {
     val batchSigs = MinHashLSH.signatures(batch, cfg, textCol, idCol).persist()
     try dedupAgainstSignatures(batchSigs, snapshot, cfg, idCol, skippedAcc, localBelow)
     finally batchSigs.unpersist()
@@ -230,7 +223,7 @@ object IncrementalNearDup {
       cfg: MinHashLSH.Config = MinHashLSH.Config(),
       idCol: String = "url",
       skippedAcc: Option[org.apache.spark.util.LongAccumulator] = None,
-      localBelow: Int = LocalBelow): DataFrame = {
+      localBelow: Int = DriverCollect.NearDupBound): DataFrame = {
     localVerdicts(batchSigs, snapshot, cfg, localBelow) match {
       case Some((rows, skipped)) =>
         skippedAcc.foreach(_.add(skipped))
@@ -242,46 +235,6 @@ object IncrementalNearDup {
       case None => distributedVerdicts(batchSigs, snapshot, cfg, idCol, skippedAcc)
     }
   }
-
-  /** One job over `df`'s internal rows: `weigh` gives each row's weight
-    * (0 = not wanted) and `copy` its driver copy. A partition copies
-    * rows while its summed weight is within its share of `budget`
-    * (budget / numPartitions) and only weighs the rest, so at most
-    * `budget` reaches the driver. Returns the copies and their total
-    * weight, or None when the total is over `budget`. A skewed
-    * partition past its share, with the total within `budget`, costs
-    * one more, unshared run of the job.
-    */
-  private def collectWithin[T](df: DataFrame, budget: Long)(weigh: InternalRow => Long,
-      copy: InternalRow => T): Option[(Seq[T], Long)] = {
-    def run(shared: Boolean) = df.queryExecution.toRdd.mapPartitions { rows =>
-      val share = if (shared) budget / TaskContext.get().numPartitions() else budget
-      val kept = mutable.ArrayBuffer.empty[T]
-      var total = 0L
-      rows.foreach { r =>
-        val w = weigh(r)
-        if (w > 0) {
-          total += w
-          if (total <= share) kept += copy(r) else kept.clear()
-        }
-      }
-      Iterator.single((total, Option.when(total <= share)(kept.toSeq)))
-    }.collect()
-    val parts = run(shared = true)
-    val total = parts.map(_._1).sum
-    if (total > budget) None
-    else Some(((if (parts.forall(_._2.isDefined)) parts else run(shared = false))
-      .toSeq.flatMap(_._2.get), total))
-  }
-
-  private def stringAt(r: InternalRow, i: Int): String =
-    if (r.isNullAt(i)) null else r.getUTF8String(i).toString
-
-  private def longsAt(r: InternalRow, i: Int): Array[Long] =
-    if (r.isNullAt(i)) null else r.getArray(i).toLongArray()
-
-  private def sizeAt(r: InternalRow, i: Int): Long =
-    if (r.isNullAt(i)) 0L else r.getArray(i).numElements()
 
   /** The driver finisher (object doc): the verdict rows and the skip
     * total, or None when the batch, its band hits or its keepers'

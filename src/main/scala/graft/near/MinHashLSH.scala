@@ -1,5 +1,7 @@
 package graft.near
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.functions.CappedGroups
@@ -287,10 +289,6 @@ object MinHashLSH {
 
   private val shinglesUdf = udf((text: String, k: Int) =>
     Hashing.shingleHashes(Hashing.tokenize(text), k))
-  private val minhashUdf = udf((sh: Array[Long], perms: Int, seed: Long) =>
-    Hashing.minhash(sh, perms, seed))
-  private val ophUdf = udf((sh: Array[Long], k: Int, seed: Long) =>
-    Hashing.ophMinhash(sh, k, seed))
   /** Row-level band hashes — the ONE banding arithmetic, shared by the
     * batch udf and row-at-a-time consumers (streaming state store,
     * incremental snapshot probes) so a streamed doc lands in exactly
@@ -321,9 +319,14 @@ object MinHashLSH {
     docs.select(
         col(idCol).as("id"),
         shinglesUdf(col(textCol), lit(cfg.shingleK)).as("shingles"))
-      .withColumn("sig",
-        if (cfg.oph) ophUdf(col("shingles"), lit(cfg.numPerms), lit(cfg.seed))
-        else minhashUdf(col("shingles"), lit(cfg.numPerms), lit(cfg.seed)))
+      .withColumn("sig", udf((sh: Array[Long]) => signatureOf(sh, cfg)).apply(col("shingles")))
+
+  /** The signature of one shingle set under `cfg` (null when empty):
+    * the row rule of [[signatures]], for row-at-a-time consumers.
+    */
+  private[graft] def signatureOf(shingles: Array[Long], cfg: Config): Array[Long] =
+    if (cfg.oph) Hashing.ophMinhash(shingles, cfg.numPerms, cfg.seed)
+    else Hashing.minhash(shingles, cfg.numPerms, cfg.seed)
 
   /** Candidate pairs + over-cap skip rows from banded LSH, in ONE
     * streamed shuffle pass: explode band hashes per doc and drain each
@@ -375,6 +378,37 @@ object MinHashLSH {
         .select("src", "dst").distinct()
       verifyCandidates(cand, sigs, cfg).localCheckpoint()
     } finally sigs.unpersist()
+  }
+
+  /** The driver twin of [[candidatesAndSkips]] + [[verifyCandidates]]
+    * over collected (id, shingles, sig) rows: each signed doc's bands
+    * ([[bandHashesLocal]]) fill the (band_id, band_hash) buckets, each
+    * bucket goes through the drain's emit
+    * ([[CappedGroups.pairsOrSkip]]), and each distinct candidate pair
+    * yields one (src, dst) per shingle-set pairing of its two ids that
+    * passes the exact-Jaccard threshold — the rows the verify's two
+    * inner joins yield (an id held twice has two shingle sets). Returns
+    * those rows and the summed rows of the over-cap buckets.
+    */
+  private[graft] def edgesAndSkippedLocal(docs: Seq[(String, Array[Long], Array[Long])],
+      cfg: Config): (Seq[(String, String)], Long) = {
+    val buckets = mutable.HashMap.empty[(Int, Long), mutable.ArrayBuffer[String]]
+    for ((id, _, sig) <- docs if sig != null;
+         (h, b) <- bandHashesLocal(sig, cfg.bands, cfg.rowsPerBand).iterator.zipWithIndex)
+      buckets.getOrElseUpdate((b, h), mutable.ArrayBuffer.empty) += id
+    var skipped = 0L
+    val cand = mutable.LinkedHashSet.empty[(String, String)]
+    for (ids <- buckets.valuesIterator;
+         (src, dst, n) <- CappedGroups.pairsOrSkip(cfg.maxBucket)(ids.length, ids))
+      if (src == null) skipped += n else cand += ((src, dst))
+    val shingles = docs.groupMap(_._1)(_._2)
+    val edges = for {
+      (src, dst) <- cand.toSeq
+      a <- shingles(src)
+      b <- shingles(dst)
+      if Hashing.jaccard(a, b) >= cfg.jaccardThreshold
+    } yield (src, dst)
+    (edges, skipped)
   }
 
   /** Exact-Jaccard verification of (src, dst) candidate pairs against

@@ -1,7 +1,10 @@
 package graft.near
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.CappedGroups
 
 /** SimHash fingerprints with Hamming-ball candidate probing [EXT]
   * (north rule; SURVEY §7.1 module 7).
@@ -157,34 +160,63 @@ object SimHash {
   /** Hamming-verified pairs + over-cap skip rows in ONE streamed
     * shuffle pass (same shape and rationale as
     * MinHashLSH.candidatesAndSkips): each (table_id, key) probe bucket
-    * drains through [[graft.functions.CappedGroups.drainGroups]]; a
-    * 2..cap bucket emits its Hamming-≤-max pairs (verification fused
-    * into pair generation), an over-cap bucket emits one
-    * (null, null, 0, n) skip row.
+    * drains through [[graft.functions.CappedGroups.drainGroups]] into
+    * [[hammingPairsOrSkip]].
     */
   def edgesAndSkips(fp0: DataFrame, cfg: Config = Config()): DataFrame = {
     val spark = fp0.sparkSession
     import spark.implicits._
-    val cap = cfg.maxBucket
-    val maxHam = cfg.maxHamming
     val rows = probed(fp0.filter(col("simhash").isNotNull), cfg)
       .select(col("table_id"), col("key"), col("id"), col("simhash"))
       .as[(Int, Long, String, Long)]
     type Row = (Int, Long, String, Long)
-    graft.functions.CappedGroups.drainGroups(rows, (r: Row) => (r._1, r._2),
-        (r: Row) => (r._3, r._4), cap, cfg.salts, (m: (String, Long)) => m._1) { (n, ms0) =>
-      if (n > cap) Iterator.single((null: String, null: String, 0, n))
-      else if (ms0.length < 2) Iterator.empty
-      else {
-        val s = ms0.sortBy(_._1)
-        for {
-          i <- s.indices.iterator
-          j <- ((i + 1) until s.length).iterator
-          h = java.lang.Long.bitCount(s(i)._2 ^ s(j)._2)
-          if h <= maxHam
-        } yield (s(i)._1, s(j)._1, h, 0L)
-      }
-    }.toDF("src", "dst", "hamming", "skipped")
+    CappedGroups.drainGroups(rows, (r: Row) => (r._1, r._2), (r: Row) => (r._3, r._4),
+        cfg.maxBucket, cfg.salts, (m: (String, Long)) => m._1)(
+        hammingPairsOrSkip(cfg.maxBucket, cfg.maxHamming))
+      .toDF("src", "dst", "hamming", "skipped")
+  }
+
+  /** The in-bucket emit of a probe bucket of `n` rows with members
+    * (id, simhash): a bucket of 2..cap rows yields its pairs within
+    * Hamming distance `maxHam` (verification fused into pair
+    * generation) as (smaller id, larger id, hamming, skipped = 0); an
+    * over-cap bucket yields ONE (null, null, 0, n) skip row instead.
+    */
+  def hammingPairsOrSkip(cap: Int, maxHam: Int)(n: Long,
+      ms: collection.IndexedSeq[(String, Long)]): Iterator[(String, String, Int, Long)] =
+    if (n > cap) Iterator.single((null: String, null: String, 0, n))
+    else if (ms.length < 2) Iterator.empty
+    else {
+      val s = ms.sortBy(_._1)
+      for {
+        i <- s.indices.iterator
+        j <- ((i + 1) until s.length).iterator
+        h = java.lang.Long.bitCount(s(i)._2 ^ s(j)._2)
+        if h <= maxHam
+      } yield (s(i)._1, s(j)._1, h, 0L)
+    }
+
+  /** The driver twin of [[fingerprintsFromShingles]] +
+    * [[edgesAndSkips]] + the pipeline's `distinct` over collected
+    * (id, shingles) rows: the distinct (src, dst) edges and the summed
+    * rows of the over-cap buckets. Fingerprints ([[simhash64]]), probe
+    * keys ([[probeKeys]]) and the in-bucket emit
+    * ([[hammingPairsOrSkip]]) are the distributed plan's.
+    */
+  private[graft] def edgesAndSkippedLocal(docs: Seq[(String, Array[Long])],
+      cfg: Config): (Seq[(String, String)], Long) = {
+    val buckets = mutable.HashMap.empty[(Int, Long), mutable.ArrayBuffer[(String, Long)]]
+    for ((id, sh) <- docs if sh != null && sh.nonEmpty) {
+      val fp = simhash64(sh, cfg.seed)
+      for (k <- probeKeys(fp, cfg))
+        buckets.getOrElseUpdate(k, mutable.ArrayBuffer.empty) += ((id, fp))
+    }
+    var skipped = 0L
+    val edges = mutable.LinkedHashSet.empty[(String, String)]
+    for (ms <- buckets.valuesIterator;
+         (src, dst, _, n) <- hammingPairsOrSkip(cfg.maxBucket, cfg.maxHamming)(ms.length, ms))
+      if (src == null) skipped += n else edges += ((src, dst))
+    (edges.toSeq, skipped)
   }
 
   /** Edges from precomputed (id, simhash) — see fingerprintsFromShingles. */

@@ -1,12 +1,13 @@
 package graft.pipeline
 
 import scala.collection.mutable
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.checkpoint.Catalog
 import graft.cluster.ConnectedComponents
 import graft.engine.{DedupEngine, DedupResult}
-import graft.functions.Digests
+import graft.functions.{Digests, DriverCollect}
 import graft.near.{MinHashLSH, SimHash}
 import graft.report.{Report, Urls}
 import graft.substring.SubstringDedup
@@ -29,6 +30,16 @@ import graft.substring.SubstringDedup
   * The edge DAG is written once (`EdgeDag`): `run` materializes its
   * rows with a `localCheckpoint`; `runCheckpointed` is `run`'s stages
   * wrapped in `Catalog.stage` (edges, clusters, deduped corpus).
+  *
+  * The MinHash and SimHash stages pick their plan from the measured
+  * input size ("To Partition, or Not to Partition", SIGMOD'21), as
+  * `ConnectedComponents` and `IncrementalNearDup` do: when the text
+  * docs' signature pass fits `DriverCollect.NearDupBound`, one bounded
+  * collect brings it to the driver, which bands, drains, verifies and
+  * fingerprints in plain Scala with the distributed stages' own rules
+  * and returns their edge and skip rows as one local frame; above the
+  * bound they are the distributed drains. Both plans yield the same
+  * rows (NearDupGateSpec).
   */
 object DedupPipeline {
 
@@ -153,9 +164,12 @@ object DedupPipeline {
   /** The edge DAG that `run` and `runCheckpointed` share. Nothing runs
     * until `rows` is materialized: a resumed `runCheckpointed` never
     * builds the near-dup stages, and `exact` costs only what its
-    * consumers force.
+    * consumers force. `localBelow` is the MinHash/SimHash driver gate
+    * (`rows`); 0 forces the distributed stages for any input with a
+    * text doc.
     */
-  private[pipeline] final class EdgeDag(docsRaw: DataFrame, cfg: Config) {
+  private[pipeline] final class EdgeDag(docsRaw: DataFrame, cfg: Config,
+      localBelow: Int = DriverCollect.NearDupBound) {
     // F4 quarantine: undecodable rows (text null) are counted and routed
     // out, never silently dropped (Files.pm:229-233, Files.t:290-299)
     val quarantined: DataFrame = docsRaw.filter(col("text").isNull)
@@ -182,6 +196,15 @@ object DedupPipeline {
       * kind = 'skip:<stage>', null src/dst and its over-cap bucket rows
       * in `skipped`. The skip metric is part of the materialized output,
       * so a RESUME reads it back instead of re-shingling the corpus.
+      *
+      * The MinHash and SimHash stages take one of two plans, chosen
+      * from the measured input size, with the same rows: when the text
+      * docs' signature pass fits `localBelow` (a doc weighs one plus
+      * its band count plus its shingle count), building `rows` runs ONE
+      * bounded collect of (id, shingles, sig) and both stages, their
+      * skip totals included, are decided on the driver into one local
+      * frame; above it, they are distributed drains over one held
+      * signature pass.
       */
     lazy val rows: DataFrame = {
       // null-tolerant on purpose: from a bare `id =!= block_id`,
@@ -199,6 +222,10 @@ object DedupPipeline {
       // dominant map-side cost); `Config` pins SimHash to MinHash's
       // shingleK, so both stages read the same feature universe.
       val textDocs = canon.filter(trim(col("text")) =!= "")
+      val local =
+        if (cfg.useMinHash || cfg.useSimHash)
+          nearDupLocally(MinHashLSH.signatures(textDocs, cfg.minhash).select("id", "shingles"))
+        else None
       lazy val sigs = held(MinHashLSH.signatures(textDocs, cfg.minhash))
 
       // per stage: candidate pairs + over-cap skip rows (src null) from
@@ -209,11 +236,11 @@ object DedupPipeline {
       // long-run stage (Lee et al. policy): one exact shared run
       // ≥ minLen chars links the pair, verified by LCS.
       val stages: Seq[(String, DataFrame, DataFrame => DataFrame)] = Seq(
-        Option.when(cfg.useMinHash)(("minhash",
+        Option.when(cfg.useMinHash && local.isEmpty)(("minhash",
           MinHashLSH.candidatesAndSkips(sigs, cfg.minhash),
           (c: DataFrame) =>
             MinHashLSH.verifyCandidates(c.distinct(), sigs, cfg.minhash).drop("jaccard"))),
-        Option.when(cfg.useSimHash)(("simhash",
+        Option.when(cfg.useSimHash && local.isEmpty)(("simhash",
           SimHash.edgesAndSkips(SimHash.fingerprintsFromShingles(sigs, cfg.simhash), cfg.simhash),
           (c: DataFrame) => c.distinct())),
         Option.when(cfg.useSubstring)(("substring",
@@ -237,9 +264,44 @@ object DedupPipeline {
         .agg(coalesce(sum(col("skipped")), lit(0L)).as("skipped"))
         .select(lit(null).cast("string").as("src"), lit(null).cast("string").as("dst"),
           lit(s"skip:$k").as("kind"), col("skipped")) }
-      (edgeRows +: skipRows).reduce(_ unionByName _)
+      (edgeRows +: skipRows ++: local.toSeq).reduce(_ unionByName _)
+    }
+
+    /** The MinHash/SimHash driver finisher (see `rows`) over the text
+      * docs' (id, shingles): the enabled stages' edge and skip rows as
+      * one local frame, or None when the signature pass is over
+      * `localBelow`. A row is weighed by its shingle count and only a
+      * row that ships is signed, in the collect's task, so a pass over
+      * the bound costs shingling, not MinHash. Plain Scala on the
+      * driver: the op plans no operator for these stages.
+      */
+    private def nearDupLocally(shingled: DataFrame): Option[DataFrame] = {
+      val mh = cfg.minhash // the task closures capture no EdgeDag
+      DriverCollect.collectWithin(shingled, localBelow)(
+          r => 1L + mh.bands + DriverCollect.sizeAt(r, 1),
+          r => {
+            val sh = DriverCollect.longsAt(r, 1)
+            (DriverCollect.stringAt(r, 0), sh, MinHashLSH.signatureOf(sh, mh))
+          })
+        .map { case (docs, _) =>
+          val decided = Seq(
+            Option.when(cfg.useMinHash)(
+              "minhash" -> MinHashLSH.edgesAndSkippedLocal(docs, cfg.minhash)),
+            Option.when(cfg.useSimHash)(
+              "simhash" -> SimHash.edgesAndSkippedLocal(docs.map(d => (d._1, d._2)), cfg.simhash))
+          ).flatten
+          val out = decided.flatMap { case (k, (edges, skipped)) =>
+            edges.map { case (src, dst) => Row(src, dst, k, 0L) } :+
+              Row(null, null, s"skip:$k", skipped) }
+          docsRaw.sparkSession.createDataFrame(java.util.Arrays.asList(out: _*), EdgeRowSchema)
+        }
     }
   }
+
+  /** The schema of `EdgeDag.rows`. */
+  private val EdgeRowSchema = StructType(Seq(StructField("src", StringType),
+    StructField("dst", StringType), StructField("kind", StringType, nullable = false),
+    StructField("skipped", LongType, nullable = false)))
 
   /** Materialized edge rows → (edges (src, dst, kind), skippedBucketRows
     * by stage); one collect of the skip rows.
@@ -257,8 +319,12 @@ object DedupPipeline {
       .join(cc, valid("url") === cc("id"), "left")
       .select(col("url"), coalesce(col("component"), col("url")).as("cluster_id"))
 
-  def run(docsRaw: DataFrame, cfg: Config = Config()): Result = {
-    val dag = new EdgeDag(docsRaw, cfg)
+  /** `localBelow` is the MinHash/SimHash driver gate (`EdgeDag.rows`);
+    * 0 forces the distributed stages.
+    */
+  def run(docsRaw: DataFrame, cfg: Config = Config(),
+      localBelow: Int = DriverCollect.NearDupBound): Result = {
+    val dag = new EdgeDag(docsRaw, cfg, localBelow)
     // ONE materialization of the whole edge dag (r2 VERDICT #2); the
     // skip sums are read back from it
     val staged = try dag.rows.localCheckpoint() finally dag.release()
@@ -275,17 +341,18 @@ object DedupPipeline {
     * and the deduped corpus. The input lineage is `inputLineage` plus
     * the files `docsRaw` scans; with neither, every stage recomputes.
     * The run that computes the clusters records their metrics in the
-    * catalog's metrics table (S5/S6).
+    * catalog's metrics table (S5/S6). `localBelow` is `run`'s.
     */
   def runCheckpointed(docsRaw: DataFrame, catalog: Catalog,
-      cfg: Config = Config(), inputLineage: String = ""): Result = {
+      cfg: Config = Config(), inputLineage: String = "",
+      localBelow: Int = DriverCollect.NearDupBound): Result = {
     val input = Seq(inputLineage, Catalog.inputFiles(docsRaw)).filter(_.nonEmpty).mkString("|")
     val base = (if (input.isEmpty) s"unknown:${java.util.UUID.randomUUID}" else input) +
       s"|algs=${cfg.algs.mkString(",")}|ie=${cfg.ignoreEmpty}" +
       s"|mh=${cfg.useMinHash}:${cfg.minhash}|sh=${cfg.useSimHash}:${cfg.simhash}" +
       s"|sub=${cfg.useSubstring}:${cfg.substring}" +
       s"|lr=${cfg.useLongRun}:${cfg.longRun}"
-    val dag = new EdgeDag(docsRaw, cfg)
+    val dag = new EdgeDag(docsRaw, cfg, localBelow)
     // stage 1: the edge rows with their skip rows (resume skips
     // digesting/shingling entirely)
     val staged = try catalog.stage("edges", base)(dag.rows) finally dag.release()

@@ -141,7 +141,7 @@ class IncrementalNearDupPropertySpec extends SparkSpec {
         s"crawl $i ranks partners by UTF-8 bytes")
       val snap = IncrementalNearDup.bootstrap(c.prior.toDF("url", "text"), cfg)
       val batch = c.batch.toDF("url", "text").repartition(3)
-      val schemas = for ((bound, local) <- Seq(IncrementalNearDup.LocalBelow -> true,
+      val schemas = for ((bound, local) <- Seq(graft.functions.DriverCollect.NearDupBound -> true,
           weight(c.batch) + 1 -> false, 0 -> false)) yield {
         val acc = spark.sparkContext.longAccumulator(s"t_prop_skips_${i}_$bound")
         val verdicts = IncrementalNearDup.dedupAgainst(batch, snap, cfg, skippedAcc = Some(acc),

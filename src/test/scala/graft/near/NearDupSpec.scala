@@ -135,21 +135,26 @@ class NearDupSpec extends SparkSpec {
     assert(out.getLong(1) == 0L)
   }
 
-  test("pipeline surfaces over-cap skipped-bucket rows as a metric") {
-    import spark.implicits._
-    val hot = spark.range(400)
-      .map(i => (s"https://h.example/$i", "same tokens " * 30)).toDF("url", "text")
-      .withColumn("warc_ts", lit(java.sql.Timestamp.valueOf("2026-01-01 00:00:00")))
-      .withColumn("html", col("text").cast("binary"))
-      .withColumn("lang", lit("en"))
-    val cfg = graft.pipeline.DedupPipeline.Config(
-      minhash = MinHashLSH.Config(maxBucket = 50),
-      simhash = SimHash.Config(maxBucket = 50))
-    val r = graft.pipeline.DedupPipeline.run(hot, cfg)
-    r.clusters.write.format("noop").mode("overwrite").save()
-    assert(r.skippedBucketRows.getOrElse("minhash", 0L) > 0L)
-    assert(r.skippedBucketRows.getOrElse("simhash", 0L) > 0L)
-  }
+  // the pipeline decides MinHash and SimHash on the driver under its
+  // default gate and as distributed stages at gate 0; the default-gate
+  // name is the historical one
+  for ((suffix, gate) <- Seq("" -> graft.functions.DriverCollect.NearDupBound,
+      " [distributed, localBelow = 0]" -> 0))
+    test("pipeline surfaces over-cap skipped-bucket rows as a metric" + suffix) {
+      import spark.implicits._
+      val hot = spark.range(400)
+        .map(i => (s"https://h.example/$i", "same tokens " * 30)).toDF("url", "text")
+        .withColumn("warc_ts", lit(java.sql.Timestamp.valueOf("2026-01-01 00:00:00")))
+        .withColumn("html", col("text").cast("binary"))
+        .withColumn("lang", lit("en"))
+      val cfg = graft.pipeline.DedupPipeline.Config(
+        minhash = MinHashLSH.Config(maxBucket = 50),
+        simhash = SimHash.Config(maxBucket = 50))
+      val r = graft.pipeline.DedupPipeline.run(hot, cfg, gate)
+      r.clusters.write.format("noop").mode("overwrite").save()
+      assert(r.skippedBucketRows.getOrElse("minhash", 0L) > 0L)
+      assert(r.skippedBucketRows.getOrElse("simhash", 0L) > 0L)
+    }
 
   test("SimHash hot-bucket cap drops oversized buckets and reports them") {
     import spark.implicits._

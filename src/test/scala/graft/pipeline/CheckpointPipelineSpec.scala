@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.checkpoint.Catalog
 import graft.corpus.Corpus
+import graft.functions.DriverCollect
 import graft.near.SimHash
 
 /** Checkpoint/resume semantics of the staged pipeline (north rule:
@@ -48,52 +49,6 @@ class CheckpointPipelineSpec extends SparkSpec {
     assert(a.skippedBucketRows == b.skippedBucketRows, s"$what: skipped bucket rows differ")
   }
 
-  test("checkpointed run equals direct run; re-run resumes without rewriting stage tables") {
-    val docs = Corpus.docs(spark, 400).toDF()
-    val dir = Files.createTempDirectory("graft-ckpt").toString
-    val cat = new Catalog(dir, spark)
-
-    val direct = DedupPipeline.run(docs)
-    val staged = DedupPipeline.runCheckpointed(docs, cat, inputLineage = "corpus400")
-    assertSameResult(direct, staged, "default, fresh")
-
-    def mtimes(name: String): Map[String, Long] = {
-      val d = Paths.get(s"$dir/$name")
-      import scala.jdk.CollectionConverters._
-      Files.list(d).iterator().asScala
-        .map(p => p.getFileName.toString -> Files.getLastModifiedTime(p).toMillis).toMap
-    }
-    val stagedCount = staged.clusters.count()
-    val before = (mtimes("edges"), mtimes("clusters"))
-    Thread.sleep(1100)
-    val resumed = DedupPipeline.runCheckpointed(docs, cat, inputLineage = "corpus400")
-    assert(resumed.clusters.count() == stagedCount)
-    assert((mtimes("edges"), mtimes("clusters")) == before,
-      "stage tables were rewritten on an unchanged-lineage resume")
-    assertSameResult(direct, resumed, "default, resumed")
-
-    // changed config ⇒ lineage differs ⇒ stages recompute
-    val changed = DedupPipeline.runCheckpointed(docs, cat,
-      cfg = DedupPipeline.Config(ignoreEmpty = true), inputLineage = "corpus400")
-    val changedCount = changed.clusters.count()
-    assert(mtimes("edges") != before._1)
-    assert(changedCount <= stagedCount)
-
-    // every config: run ≡ a fresh runCheckpointed ≡ a resumed one
-    val (subDocs, subCfg) = overCapFixture
-    val table = Seq(
-      ("exact-only", docs, DedupPipeline.Config(useMinHash = false, useSimHash = false)),
-      ("substring+longrun over cap", subDocs, subCfg),
-      ("simhash only", docs, DedupPipeline.Config(useMinHash = false)),
-      ("ignoreEmpty", docs, DedupPipeline.Config(ignoreEmpty = true)))
-    for ((name, d, cfg) <- table) {
-      val c = new Catalog(Files.createTempDirectory("graft-ckpt-eq").toString, spark)
-      val direct = DedupPipeline.run(d, cfg)
-      assertSameResult(direct, DedupPipeline.runCheckpointed(d, c, cfg, "eq"), s"$name, fresh")
-      assertSameResult(direct, DedupPipeline.runCheckpointed(d, c, cfg, "eq"), s"$name, resumed")
-    }
-  }
-
   test("a SimHash shingleK that differs from MinHash's is rejected while SimHash is on") {
     val ex = intercept[IllegalArgumentException] {
       DedupPipeline.Config(simhash = SimHash.Config(shingleK = 3))
@@ -104,31 +59,93 @@ class CheckpointPipelineSpec extends SparkSpec {
     DedupPipeline.Config(useSimHash = false, simhash = SimHash.Config(shingleK = 3))
   }
 
-  test("checkpointed substring+longrun stages persist their skip metrics; resume reads them back") {
-    val (docs, cfg) = overCapFixture
-    val dir = Files.createTempDirectory("graft-ckpt-sub").toString
-    val cat = new Catalog(dir, spark)
-    val staged = DedupPipeline.runCheckpointed(docs, cat, cfg, inputLineage = "sub6")
-    assert(staged.skippedBucketRows.get("substring").exists(_ >= 6L))
-    assert(staged.skippedBucketRows.get("longrun").contains(0L))
-    assert(staged.edges.filter(col("kind") === "longrun").count() >= 1)
-    // resume: metrics come back from the staged table, not a recompute
-    val resumed = DedupPipeline.runCheckpointed(docs, cat, cfg, inputLineage = "sub6")
-    assert(resumed.skippedBucketRows == staged.skippedBucketRows)
-  }
+  // each edge and skip case runs with MinHash and SimHash decided on
+  // the driver (default gate) and as distributed stages (gate 0); the
+  // default-gate names are the historical ones
+  for ((suffix, gate) <- Seq("" -> DriverCollect.NearDupBound,
+      " [distributed, localBelow = 0]" -> 0)) {
+    test("checkpointed run equals direct run; re-run resumes without rewriting stage tables" +
+        suffix) {
+      val docs = Corpus.docs(spark, 400).toDF()
+      val dir = Files.createTempDirectory("graft-ckpt").toString
+      val cat = new Catalog(dir, spark)
 
-  test("a run that fails writing its edges releases every frame the edge DAG cached") {
-    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sharedState.cacheManager
-    spark.catalog.clearCache() // whatever earlier suites left cached
-    // a catalog root that is a regular file: the edges write throws
-    // after the DAG has persisted its signatures and stage outputs
-    val root = Files.createTempFile("graft-ckpt-root", ".file").toString
-    val (docs, cfg) = overCapFixture
-    intercept[Exception] {
-      DedupPipeline.runCheckpointed(docs, new Catalog(root, spark), cfg, inputLineage = "fail")
+      val direct = DedupPipeline.run(docs, localBelow = gate)
+      val staged = DedupPipeline.runCheckpointed(docs, cat, inputLineage = "corpus400",
+        localBelow = gate)
+      assertSameResult(direct, staged, "default, fresh")
+
+      def mtimes(name: String): Map[String, Long] = {
+        val d = Paths.get(s"$dir/$name")
+        import scala.jdk.CollectionConverters._
+        Files.list(d).iterator().asScala
+          .map(p => p.getFileName.toString -> Files.getLastModifiedTime(p).toMillis).toMap
+      }
+      val stagedCount = staged.clusters.count()
+      val before = (mtimes("edges"), mtimes("clusters"))
+      Thread.sleep(1100)
+      val resumed = DedupPipeline.runCheckpointed(docs, cat, inputLineage = "corpus400",
+        localBelow = gate)
+      assert(resumed.clusters.count() == stagedCount)
+      assert((mtimes("edges"), mtimes("clusters")) == before,
+        "stage tables were rewritten on an unchanged-lineage resume")
+      assertSameResult(direct, resumed, "default, resumed")
+
+      // changed config ⇒ lineage differs ⇒ stages recompute
+      val changed = DedupPipeline.runCheckpointed(docs, cat,
+        cfg = DedupPipeline.Config(ignoreEmpty = true), inputLineage = "corpus400",
+        localBelow = gate)
+      val changedCount = changed.clusters.count()
+      assert(mtimes("edges") != before._1)
+      assert(changedCount <= stagedCount)
+
+      // every config: run ≡ a fresh runCheckpointed ≡ a resumed one
+      val (subDocs, subCfg) = overCapFixture
+      val table = Seq(
+        ("exact-only", docs, DedupPipeline.Config(useMinHash = false, useSimHash = false)),
+        ("substring+longrun over cap", subDocs, subCfg),
+        ("simhash only", docs, DedupPipeline.Config(useMinHash = false)),
+        ("ignoreEmpty", docs, DedupPipeline.Config(ignoreEmpty = true)))
+      for ((name, d, cfg) <- table) {
+        val c = new Catalog(Files.createTempDirectory("graft-ckpt-eq").toString, spark)
+        val direct = DedupPipeline.run(d, cfg, gate)
+        assertSameResult(direct, DedupPipeline.runCheckpointed(d, c, cfg, "eq", gate),
+          s"$name, fresh")
+        assertSameResult(direct, DedupPipeline.runCheckpointed(d, c, cfg, "eq", gate),
+          s"$name, resumed")
+      }
     }
-    assert(cacheManager.isEmpty, "a frame the edge DAG persisted is still cached")
+
+    test("checkpointed substring+longrun stages persist their skip metrics; " +
+        "resume reads them back" + suffix) {
+      val (docs, cfg) = overCapFixture
+      val dir = Files.createTempDirectory("graft-ckpt-sub").toString
+      val cat = new Catalog(dir, spark)
+      val staged = DedupPipeline.runCheckpointed(docs, cat, cfg, inputLineage = "sub6",
+        localBelow = gate)
+      assert(staged.skippedBucketRows.get("substring").exists(_ >= 6L))
+      assert(staged.skippedBucketRows.get("longrun").contains(0L))
+      assert(staged.edges.filter(col("kind") === "longrun").count() >= 1)
+      // resume: metrics come back from the staged table, not a recompute
+      val resumed = DedupPipeline.runCheckpointed(docs, cat, cfg, inputLineage = "sub6",
+        localBelow = gate)
+      assert(resumed.skippedBucketRows == staged.skippedBucketRows)
+    }
+
+    test("a run that fails writing its edges releases every frame the edge DAG cached" + suffix) {
+      val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sharedState.cacheManager
+      spark.catalog.clearCache() // whatever earlier suites left cached
+      // a catalog root that is a regular file: the edges write throws
+      // after the DAG has persisted its signatures and stage outputs
+      val root = Files.createTempFile("graft-ckpt-root", ".file").toString
+      val (docs, cfg) = overCapFixture
+      intercept[Exception] {
+        DedupPipeline.runCheckpointed(docs, new Catalog(root, spark), cfg, inputLineage = "fail",
+          localBelow = gate)
+      }
+      assert(cacheManager.isEmpty, "a frame the edge DAG persisted is still cached")
+    }
   }
 
   test("deduped corpus stage uses the (days(warc_ts), lang) layout (north rule)") {
