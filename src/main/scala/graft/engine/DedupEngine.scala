@@ -1,9 +1,11 @@
 package graft.engine
 
+import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.BinaryType
+import org.apache.spark.unsafe.types.UTF8String
 import graft.model.DigestSpec
 
 /** Result of a dedup-engine run.
@@ -107,21 +109,37 @@ final class DedupResult(
   */
 object DedupEngine {
 
-  /** Stringify a digest column the way the reference stringifies keys
-    * for hashing (Engine.pm:340) — but collision-safely: raw binary
-    * digests go through hex() (a binary→string CAST would UTF-8-mangle
-    * distinct byte strings into identical replacement-char strings =
-    * false merges).
+  /** The cascade's key columns over `df`, `__k0..__kn`: the ONE key
+    * rule, shared by [[run]] and the driver twin's callers
+    * ([[assignmentsLocal]]). Each digest is stringified the way the
+    * reference stringifies keys for hashing (Engine.pm:340), but
+    * collision-safely: raw binary digests go through hex() (a
+    * binary→string CAST would UTF-8-mangle distinct byte strings into
+    * identical replacement-char strings = false merges).
     */
-  private def stringify(df: DataFrame, cascade: Seq[DigestSpec]): DataFrame = {
-    val tmp = df.select(cascade.zipWithIndex.map { case (d, i) => d.expr.as(s"__k$i") }: _*)
-    val types = tmp.schema.fields.map(_.dataType)
-    val keyCols = cascade.zipWithIndex.map { case (d, i) =>
-      val c = d.expr
-      val s = if (types(i) == BinaryType) hex(c) else c.cast("string")
-      s.as(s"__k$i")
-    }
-    df.select(col("__id") +: keyCols: _*)
+  private[graft] def keyColumns(df: DataFrame, cascade: Seq[DigestSpec]): Seq[Column] = {
+    val types = df.select(cascade.zipWithIndex.map { case (d, i) => d.expr.as(s"__k$i") }: _*)
+      .schema.fields.map(_.dataType)
+    cascade.zip(types).zipWithIndex.map { case ((d, t), i) =>
+      (if (t == BinaryType) hex(d.expr) else d.expr.cast("string")).as(s"__k$i") }
+  }
+
+  /** The driver twin of `run(...).assignments` over rows of (id, full
+    * key from [[keyColumns]]): one (id, block_id) per row, in row
+    * order, block_id being the least non-null id (UTF-8 byte order, as
+    * Spark's `min`) among the rows with an equal full key, null digests
+    * included (the null-safe key join); null when every such id is
+    * null. An empty cascade is one block of everything.
+    */
+  private[graft] def assignmentsLocal(
+      rows: Seq[(UTF8String, Seq[UTF8String])]): Seq[(UTF8String, UTF8String)] = {
+    val blockId = mutable.HashMap.empty[Seq[UTF8String], UTF8String]
+    for ((id, keys) <- rows if id != null)
+      blockId.updateWith(keys) {
+        case Some(b) if b.binaryCompare(id) <= 0 => Some(b)
+        case _ => Some(id)
+      }
+    rows.map { case (id, keys) => (id, blockId.getOrElse(keys, null)) }
   }
 
   private def keyCols(n: Int): Seq[Column] = (0 until n).map(i => col(s"__k$i"))
@@ -145,7 +163,7 @@ object DedupEngine {
         .crossJoin(broadcast(blockMeta.select(col("block_id"))))
       return new DedupResult(blockMeta, assignments, 0)
     }
-    val narrow0 = stringify(withId, cascade)
+    val narrow0 = withId.select(col("__id") +: keyColumns(withId, cascade): _*)
     // the single-object degenerate (keys=[], Engine.pm:351-364) only
     // needs to know whether ≥2 rows exist — a limit(2) probe, not a
     // full count scan of the corpus. DEFERRED (r6): the probe result

@@ -5,10 +5,11 @@ import scala.collection.mutable
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.unsafe.types.UTF8String
 
-/** The bounded driver collect behind the near-dup driver finishers
-  * (the batch pipeline's MinHash/SimHash stages and the incremental
-  * near-snapshot verdicts): one job that brings a frame's rows to the
+/** The bounded driver collect behind the driver finishers of the
+  * batch pipeline's edge DAG and the incremental near-snapshot
+  * verdicts: one job that brings a frame's rows to the
   * driver only while they fit a weight budget ("To Partition, or Not
   * to Partition", SIGMOD'21: choose the local plan from the measured
   * input size). SCALE.md invariant 4: at most the budget reaches the
@@ -16,11 +17,13 @@ import org.apache.spark.sql.catalyst.InternalRow
   */
 object DriverCollect {
 
-  /** Default budget of the near-dup driver finishers: 2^19 rows plus
-    * shingle hashes, a few MB of driver heap. A doc weighs one plus
-    * its band count plus its shingle count. A 1,000-doc batch of
-    * 120-360 token pages (about 280k) fits; a batch of some thousands
-    * of pages does not.
+  /** Default budget of the driver finishers: 2^19 rows plus shingle
+    * hashes plus key bytes, a few MB of driver heap. A text doc weighs
+    * one plus its band count plus its shingle count; in the batch
+    * pipeline's edge DAG, every doc also weighs its cascade keys'
+    * bytes (about 60 under the default cascade, twice the page size
+    * under `--byte-verify`). A 1,000-doc batch of 120-360 token pages
+    * (about 300k) fits; a batch of some thousands of pages does not.
     */
   val NearDupBound: Int = 1 << 19
 
@@ -60,6 +63,14 @@ object DriverCollect {
 
   def stringAt(r: InternalRow, i: Int): String =
     if (r.isNullAt(i)) null else r.getUTF8String(i).toString
+
+  /** A driver copy of the string at `i` (the row's buffer is reused). */
+  def utf8At(r: InternalRow, i: Int): UTF8String =
+    if (r.isNullAt(i)) null else r.getUTF8String(i).copy()
+
+  /** The UTF-8 byte length of the string at `i`, 0 when null. */
+  def bytesAt(r: InternalRow, i: Int): Long =
+    if (r.isNullAt(i)) 0L else r.getUTF8String(i).numBytes()
 
   def longsAt(r: InternalRow, i: Int): Array[Long] =
     if (r.isNullAt(i)) null else r.getArray(i).toLongArray()

@@ -313,12 +313,17 @@ object MinHashLSH {
   def bandHashes(sig: Column, cfg: Config): Column =
     bandsUdf(sig, lit(cfg.bands), lit(cfg.rowsPerBand))
 
+  /** The shingle-hash array Column of a text Column under `cfg`: the
+    * shingling rule of [[signatures]], for callers that ship shingles
+    * beside other columns.
+    */
+  private[graft] def shingles(text: Column, cfg: Config): Column =
+    shinglesUdf(text, lit(cfg.shingleK))
+
   /** (url, shingles, sig) — one scan, all map-side. */
   def signatures(docs: DataFrame, cfg: Config = Config(), textCol: String = "text",
       idCol: String = "url"): DataFrame =
-    docs.select(
-        col(idCol).as("id"),
-        shinglesUdf(col(textCol), lit(cfg.shingleK)).as("shingles"))
+    docs.select(col(idCol).as("id"), shingles(col(textCol), cfg).as("shingles"))
       .withColumn("sig", udf((sh: Array[Long]) => signatureOf(sh, cfg)).apply(col("shingles")))
 
   /** The signature of one shingle set under `cfg` (null when empty):

@@ -4,6 +4,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.checkpoint.Catalog
 import graft.cluster.ConnectedComponents
 import graft.engine.{DedupEngine, DedupResult}
@@ -31,15 +32,19 @@ import graft.substring.SubstringDedup
   * rows with a `localCheckpoint`; `runCheckpointed` is `run`'s stages
   * wrapped in `Catalog.stage` (edges, clusters, deduped corpus).
   *
-  * The MinHash and SimHash stages pick their plan from the measured
-  * input size ("To Partition, or Not to Partition", SIGMOD'21), as
-  * `ConnectedComponents` and `IncrementalNearDup` do: when the text
-  * docs' signature pass fits `DriverCollect.NearDupBound`, one bounded
-  * collect brings it to the driver, which bands, drains, verifies and
-  * fingerprints in plain Scala with the distributed stages' own rules
-  * and returns their edge and skip rows as one local frame; above the
-  * bound they are the distributed drains. Both plans yield the same
-  * rows (NearDupGateSpec).
+  * The edge DAG picks its plan from the measured input size ("To
+  * Partition, or Not to Partition", SIGMOD'21), as
+  * `ConnectedComponents` and `IncrementalNearDup` do: when the valid
+  * docs' urls, cascade keys and shingles fit
+  * `DriverCollect.NearDupBound`, one bounded collect brings them to the
+  * driver, which runs the identity pass, the exact assignments, MinHash
+  * banding, drain and verify, and SimHash fingerprints and probes in
+  * plain Scala with the distributed stages' own rules, and returns the
+  * alias, exact, near-dup and skip rows as one local frame; above the
+  * bound the identity checkpoint, the exact cascade and the near-dup
+  * drains run distributed. Both plans yield the same rows
+  * (NearDupGateSpec); the opt-in substring and long-run stages are
+  * distributed under both.
   */
 object DedupPipeline {
 
@@ -98,7 +103,7 @@ object DedupPipeline {
     */
   final class Result(
       val clusters: DataFrame, // (url, cluster_id) — every input url
-      val exact: DedupResult,
+      exact0: => DedupResult,
       val edges: DataFrame, // (src, dst, kind)
       val quarantined: DataFrame,
       docsInThunk: () => Long,
@@ -113,6 +118,11 @@ object DedupPipeline {
         * (days(warc_ts), lang) physical layout
         */
       val dedupedDocs: Option[DataFrame] = None) {
+    /** The distributed exact cascade (digest and collision counts),
+      * built on first use: a run whose edge rows were decided on the
+      * driver plans it only for a consumer that asks.
+      */
+    lazy val exact: DedupResult = exact0
     lazy val docsIn: Long = docsInThunk()
     lazy val quarantinedCount: Long = quarantined.count()
     /** duplicates-only tab report over final clusters (reference P2). */
@@ -163,10 +173,9 @@ object DedupPipeline {
 
   /** The edge DAG that `run` and `runCheckpointed` share. Nothing runs
     * until `rows` is materialized: a resumed `runCheckpointed` never
-    * builds the near-dup stages, and `exact` costs only what its
-    * consumers force. `localBelow` is the MinHash/SimHash driver gate
-    * (`rows`); 0 forces the distributed stages for any input with a
-    * text doc.
+    * builds it, and `exact` costs only what its consumers force.
+    * `localBelow` is the driver gate of `rows`; 0 forces the
+    * distributed plan for any non-empty input.
     */
   private[pipeline] final class EdgeDag(docsRaw: DataFrame, cfg: Config,
       localBelow: Int = DriverCollect.NearDupBound) {
@@ -177,10 +186,12 @@ object DedupPipeline {
       val v = docsRaw.filter(col("text").isNotNull)
       if (cfg.ignoreEmpty) v.filter(octet_length(col("html")) > 0) else v
     }
+    private val cascade = Digests.cascade(col("html"), cfg.algs)
     private lazy val (aliasEdges, canon) = identityPass(valid)
-    // stage 1: exact content-hash cascade (reference semantics)
-    lazy val exact: DedupResult =
-      DedupEngine.run(canon, "url", Digests.cascade(col("html"), cfg.algs))
+    // stage 1: exact content-hash cascade (reference semantics); the
+    // distributed plan, which report consumers (digest and collision
+    // counts) force even when `rows` was decided on the driver
+    lazy val exact: DedupResult = DedupEngine.run(canon, "url", cascade)
 
     private val persisted = mutable.ArrayBuffer.empty[DataFrame]
     private def held(df: DataFrame): DataFrame = { val p = df.persist(); persisted += p; p }
@@ -197,36 +208,39 @@ object DedupPipeline {
       * in `skipped`. The skip metric is part of the materialized output,
       * so a RESUME reads it back instead of re-shingling the corpus.
       *
-      * The MinHash and SimHash stages take one of two plans, chosen
-      * from the measured input size, with the same rows: when the text
-      * docs' signature pass fits `localBelow` (a doc weighs one plus
-      * its band count plus its shingle count), building `rows` runs ONE
-      * bounded collect of (id, shingles, sig) and both stages, their
-      * skip totals included, are decided on the driver into one local
-      * frame; above it, they are distributed drains over one held
-      * signature pass.
+      * The alias, exact, MinHash and SimHash rows take one of two
+      * plans, chosen from the measured input size, with the same rows:
+      * when the valid docs fit `localBelow` (a doc weighs one plus its
+      * key bytes, plus its band count and shingle count when it is a
+      * text doc with a url and a near-dup stage is on), building `rows`
+      * runs ONE bounded collect of (url, identity, cascade keys,
+      * text flag, shingles, signature) and the driver decides the
+      * identity pass, the exact assignments and both near-dup stages,
+      * their skip totals included, into one local frame; above it they
+      * are the distributed identity checkpoint, exact cascade and
+      * near-dup drains over one held signature pass. The opt-in
+      * substring and long-run stages are distributed under either plan.
       */
     lazy val rows: DataFrame = {
+      val local = edgesLocally()
+      val distributed = local.isEmpty
+      // [EXT] near-dup stages over the canonical docs with a url and
+      // non-empty text (a null id can be no edge end, and the in-bucket
+      // emits order ids). ONE shingling/signature pass feeds MinHash
+      // banding, verification, SimHash fingerprints AND the skip
+      // metrics (tokenize+hash is the dominant map-side cost); `Config`
+      // pins SimHash to MinHash's shingleK, so both stages read the
+      // same feature universe.
+      lazy val textDocs = canon.filter(trim(col("text")) =!= "" && col("url").isNotNull)
+      lazy val sigs = held(MinHashLSH.signatures(textDocs, cfg.minhash))
       // null-tolerant on purpose: from a bare `id =!= block_id`,
       // constraint inference derives `isnotnull(id)` and pushes it under
       // the assignments' probe side only, which splits the shared digest
       // exchange in two (every page digested twice). A null id still
       // yields no edge.
-      val exactEdges = exact.assignments
+      def exactEdges = exact.assignments
         .filter(coalesce(col("id") =!= col("block_id"), lit(false)))
         .select(col("id").as("src"), col("block_id").as("dst"), lit("exact").as("kind"))
-
-      // [EXT] near-dup stages over non-empty canonical text. ONE
-      // shingling/signature pass feeds MinHash banding, verification,
-      // SimHash fingerprints AND the skip metrics (tokenize+hash is the
-      // dominant map-side cost); `Config` pins SimHash to MinHash's
-      // shingleK, so both stages read the same feature universe.
-      val textDocs = canon.filter(trim(col("text")) =!= "")
-      val local =
-        if (cfg.useMinHash || cfg.useSimHash)
-          nearDupLocally(MinHashLSH.signatures(textDocs, cfg.minhash).select("id", "shingles"))
-        else None
-      lazy val sigs = held(MinHashLSH.signatures(textDocs, cfg.minhash))
 
       // per stage: candidate pairs + over-cap skip rows (src null) from
       // one streamed pass, held so its edges and its skip row share it,
@@ -236,11 +250,11 @@ object DedupPipeline {
       // long-run stage (Lee et al. policy): one exact shared run
       // ≥ minLen chars links the pair, verified by LCS.
       val stages: Seq[(String, DataFrame, DataFrame => DataFrame)] = Seq(
-        Option.when(cfg.useMinHash && local.isEmpty)(("minhash",
+        Option.when(cfg.useMinHash && distributed)(("minhash",
           MinHashLSH.candidatesAndSkips(sigs, cfg.minhash),
           (c: DataFrame) =>
             MinHashLSH.verifyCandidates(c.distinct(), sigs, cfg.minhash).drop("jaccard"))),
-        Option.when(cfg.useSimHash && local.isEmpty)(("simhash",
+        Option.when(cfg.useSimHash && distributed)(("simhash",
           SimHash.edgesAndSkips(SimHash.fingerprintsFromShingles(sigs, cfg.simhash), cfg.simhash),
           (c: DataFrame) => c.distinct())),
         Option.when(cfg.useSubstring)(("substring",
@@ -254,48 +268,98 @@ object DedupPipeline {
           (c: DataFrame) => c))
       ).flatten.map { case (k, out, toEdges) => (k, held(out), toEdges) }
 
-      val edgeRows = (Seq(aliasEdges, exactEdges) ++ stages.map { case (k, out, toEdges) =>
-          toEdges(out.filter(col("src").isNotNull).select("src", "dst"))
-            .withColumn("kind", lit(k)) })
+      val edgeRows = ((if (distributed) Seq(aliasEdges, exactEdges) else Nil) ++
+          stages.map { case (k, out, toEdges) =>
+            toEdges(out.filter(col("src").isNotNull).select("src", "dst"))
+              .withColumn("kind", lit(k)) })
         .map(_.select("src", "dst", "kind").withColumn("skipped", lit(0L)))
-        .reduce(_ unionByName _)
       val skipRows = stages.map { case (k, out, _) => out
         .filter(col("src").isNull)
         .agg(coalesce(sum(col("skipped")), lit(0L)).as("skipped"))
         .select(lit(null).cast("string").as("src"), lit(null).cast("string").as("dst"),
           lit(s"skip:$k").as("kind"), col("skipped")) }
-      (edgeRows +: skipRows ++: local.toSeq).reduce(_ unionByName _)
+      (edgeRows ++ skipRows ++ local).reduce(_ unionByName _)
     }
 
-    /** The MinHash/SimHash driver finisher (see `rows`) over the text
-      * docs' (id, shingles): the enabled stages' edge and skip rows as
-      * one local frame, or None when the signature pass is over
-      * `localBelow`. A row is weighed by its shingle count and only a
-      * row that ships is signed, in the collect's task, so a pass over
-      * the bound costs shingling, not MinHash. Plain Scala on the
-      * driver: the op plans no operator for these stages.
+    /** The edge DAG's driver finisher (see `rows`): the alias, exact,
+      * MinHash and SimHash edge and skip rows as one local frame, or
+      * None when the valid docs are over `localBelow`. One bounded
+      * collect over `valid` ships each doc's url, its identity key
+      * (`Urls.normalize`), its cascade keys (`DedupEngine.keyColumns`,
+      * the distributed plan's key rule), whether it is a text doc with
+      * a url and, for such a doc while a near-dup stage is on, its
+      * shingles; only a row that ships is signed, in the collect's
+      * task, so a pass over the bound costs digests and shingling, not
+      * MinHash. Plain Scala on the driver: the op plans no operator for
+      * these stages.
       */
-    private def nearDupLocally(shingled: DataFrame): Option[DataFrame] = {
-      val mh = cfg.minhash // the task closures capture no EdgeDag
-      DriverCollect.collectWithin(shingled, localBelow)(
-          r => 1L + mh.bands + DriverCollect.sizeAt(r, 1),
-          r => {
-            val sh = DriverCollect.longsAt(r, 1)
-            (DriverCollect.stringAt(r, 0), sh, MinHashLSH.signatureOf(sh, mh))
-          })
+    private def edgesLocally(): Option[DataFrame] = {
+      // the task closures capture no EdgeDag
+      val (mh, n, signed) = (cfg.minhash, cascade.length, cfg.useMinHash)
+      val textDoc = trim(col("text")) =!= "" && col("url").isNotNull
+      val shingles =
+        if (cfg.useMinHash || cfg.useSimHash) when(textDoc, MinHashLSH.shingles(col("text"), mh))
+        else lit(null).cast("array<bigint>")
+      val shipped = valid.select(Seq(col("url"), Urls.normalize(col("url")), textDoc) ++
+        DedupEngine.keyColumns(valid, cascade) :+ shingles: _*)
+      DriverCollect.collectWithin(shipped, localBelow)(
+        r => 1L + (3 until 3 + n).iterator.map(DriverCollect.bytesAt(r, _)).sum +
+          (if (r.isNullAt(3 + n)) 0L else mh.bands + DriverCollect.sizeAt(r, 3 + n)),
+        r => {
+          val sh = DriverCollect.longsAt(r, 3 + n)
+          Shipped(DriverCollect.utf8At(r, 0), DriverCollect.utf8At(r, 1),
+            (3 until 3 + n).map(DriverCollect.utf8At(r, _)), r.getBoolean(2), sh,
+            if (signed && sh != null) MinHashLSH.signatureOf(sh, mh) else null)
+        })
         .map { case (docs, _) =>
-          val decided = Seq(
-            Option.when(cfg.useMinHash)(
-              "minhash" -> MinHashLSH.edgesAndSkippedLocal(docs, cfg.minhash)),
-            Option.when(cfg.useSimHash)(
-              "simhash" -> SimHash.edgesAndSkippedLocal(docs.map(d => (d._1, d._2)), cfg.simhash))
-          ).flatten
-          val out = decided.flatMap { case (k, (edges, skipped)) =>
-            edges.map { case (src, dst) => Row(src, dst, k, 0L) } :+
-              Row(null, null, s"skip:$k", skipped) }
-          docsRaw.sparkSession.createDataFrame(java.util.Arrays.asList(out: _*), EdgeRowSchema)
+          docsRaw.sparkSession.createDataFrame(
+            java.util.Arrays.asList(decideLocally(docs, cfg): _*), EdgeRowSchema)
         }
     }
+  }
+
+  /** One valid doc as the edge DAG's driver finisher ships it: url,
+    * identity key, cascade keys, whether it is a text doc (a url and
+    * non-empty trimmed text), shingles (text docs while a near-dup
+    * stage is on, else null) and MinHash signature (null unless MinHash
+    * is on and it has shingles).
+    */
+  private final case class Shipped(url: UTF8String, identity: UTF8String,
+      keys: Seq[UTF8String], text: Boolean, shingles: Array[Long], sig: Array[Long])
+
+  /** The driver finisher's rows over every shipped valid doc, each step
+    * the plain-Scala twin of a distributed one: the identity pass (one
+    * alias row per doc whose url is not the least url, in UTF-8 byte
+    * order as Spark's `min`, of its identity key; a null url has none),
+    * the canonical docs (the rest, null urls kept, as the `left_anti`
+    * join keeps them), their exact assignments
+    * (`DedupEngine.assignmentsLocal`: one edge per canonical doc whose
+    * non-null id is not its block's), then the enabled near-dup stages
+    * over the canonical text docs with their skip totals.
+    */
+  private def decideLocally(docs: Seq[Shipped], cfg: Config): Seq[Row] = {
+    val canonical = mutable.HashMap.empty[UTF8String, UTF8String]
+    for (d <- docs if d.url != null)
+      canonical.updateWith(d.identity) {
+        case Some(c) if c.binaryCompare(d.url) <= 0 => Some(c)
+        case _ => Some(d.url)
+      }
+    val (canon, aliases) = docs.partition(d => d.url == null || canonical(d.identity) == d.url)
+    val alias = aliases.map(d => Row(d.url.toString, canonical(d.identity).toString, "alias", 0L))
+    val exact = DedupEngine.assignmentsLocal(canon.map(d => (d.url, d.keys))).collect {
+      case (id, block) if id != null && block != null && id != block =>
+        Row(id.toString, block.toString, "exact", 0L)
+    }
+    val text = canon.filter(_.text).map(d => (d.url.toString, d.shingles, d.sig))
+    val near = Seq(
+      Option.when(cfg.useMinHash)(
+        "minhash" -> MinHashLSH.edgesAndSkippedLocal(text, cfg.minhash)),
+      Option.when(cfg.useSimHash)(
+        "simhash" -> SimHash.edgesAndSkippedLocal(text.map(d => (d._1, d._2)), cfg.simhash))
+    ).flatten.flatMap { case (k, (edges, skipped)) =>
+      edges.map { case (src, dst) => Row(src, dst, k, 0L) } :+ Row(null, null, s"skip:$k", skipped)
+    }
+    alias ++ exact ++ near
   }
 
   /** The schema of `EdgeDag.rows`. */
@@ -319,8 +383,8 @@ object DedupPipeline {
       .join(cc, valid("url") === cc("id"), "left")
       .select(col("url"), coalesce(col("component"), col("url")).as("cluster_id"))
 
-  /** `localBelow` is the MinHash/SimHash driver gate (`EdgeDag.rows`);
-    * 0 forces the distributed stages.
+  /** `localBelow` is the edge DAG's driver gate (`EdgeDag.rows`); 0
+    * forces the distributed plan.
     */
   def run(docsRaw: DataFrame, cfg: Config = Config(),
       localBelow: Int = DriverCollect.NearDupBound): Result = {

@@ -1,8 +1,10 @@
 package graft.engine
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, rng}
 import graft.SparkSpec
+import graft.functions.Digests
 import graft.model.{DigestSpec, KV}
 
 /** Properties the reference only implies (SURVEY §5), checked over
@@ -12,7 +14,9 @@ import graft.model.{DigestSpec, KV}
   *      digest (Engine.pm:490-495);
   *  (ii) intermediate-digest choice/order does not change final groups;
   *  (iii) digest counts are monotonically non-increasing per level;
-  *  (iv) last-level collision count is 0 on exact grouping.
+  *  (iv) last-level collision count is 0 on exact grouping;
+  *  (v) the driver twin `assignmentsLocal` over `keyColumns` rows
+  *      equals `run(...).assignments`.
   */
 class EnginePropertySpec extends SparkSpec {
   import spark.implicits._
@@ -75,6 +79,50 @@ class EnginePropertySpec extends SparkSpec {
       val dc = r.digestCounts
       assert(dc.zip(dc.tail).forall { case (x, y) => x >= y }, s"non-monotonic $dc")
       assert(r.collisionCounts.last == 0L)
+    }
+  }
+
+  /** Random byte pages with planted collisions at each level of the
+    * default cascade: exact copies, the same size with other bytes
+    * (split by initial_xxhash), the same first cluster and size with
+    * another last byte (split only by sha), zero-byte pages, a null
+    * page, a null id and a repeated id.
+    */
+  private def collidingPages(seed: Long): Seq[(String, Array[Byte])] = {
+    val rnd = new scala.util.Random(seed)
+    def bytes(n: Int) = { val b = new Array[Byte](n); rnd.nextBytes(b); b }
+    val base = (0 until 8).map(_ => bytes(1 + rnd.nextInt(2 * Digests.ClusterSize)))
+    val planted = base.flatMap { b =>
+      Seq(b.clone(), bytes(b.length)) ++ Option.when(b.length > Digests.ClusterSize) {
+        val t = b.clone(); t(t.length - 1) = (t.last ^ 1).toByte; t }
+    }
+    val pages = rnd.shuffle(base ++ planted ++ Seq(Array.emptyByteArray, Array.emptyByteArray, null))
+    val ids = pages.indices.map(i => f"p${rnd.nextInt(1000)}%03d-$i").toArray
+    ids(1) = ids(0)
+    ids(2) = null
+    ids.toSeq.zip(pages)
+  }
+
+  test("(v) the driver twin equals the distributed assignments on colliding byte pages") {
+    def utf8(s: String) = if (s == null) null else UTF8String.fromString(s)
+    def str(u: UTF8String) = if (u == null) null else u.toString
+    def multiset[T](xs: Seq[T]) = xs.groupBy(identity).view.mapValues(_.size).toMap
+    for {
+      seed <- 1L to 5L
+      algs <- Seq(Digests.DefaultAlgs, Seq("sha"), Digests.DefaultAlgs :+ "bytes", Nil)
+    } {
+      val df = collidingPages(seed).toDF("id", "html")
+      val cascade = Digests.cascade(col("html"), algs)
+      val keyed = df.select(col("id") +: DedupEngine.keyColumns(df, cascade): _*).collect()
+        .map(r => (utf8(r.getString(0)), cascade.indices.map(i => utf8(r.getString(i + 1)))))
+      val local = DedupEngine.assignmentsLocal(keyed.toSeq).map { case (a, b) => (str(a), str(b)) }
+      val distributed = DedupEngine.run(df, "id", cascade).assignments.collect()
+        .map(r => (r.getString(0), r.getString(1))).toSeq
+      assert(multiset(local) == multiset(distributed), s"seed $seed, cascade $algs")
+      // the planted copies share blocks; the size and prefix
+      // collisions do not
+      val blocks = local.filter(_._2 != null).map(_._2).distinct.size
+      assert(blocks < local.size && (algs.isEmpty || blocks > 8), s"seed $seed, cascade $algs")
     }
   }
 }

@@ -7,13 +7,14 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.checkpoint.Catalog
 import graft.corpus.Corpus
-import graft.functions.DriverCollect
+import graft.functions.{Digests, DriverCollect}
 import graft.near.{MinHashLSH, SimHash}
 
-/** The MinHash/SimHash driver gate of `DedupPipeline.EdgeDag.rows`:
-  * under the bound the driver finisher yields the same rows, skip rows
-  * included, as the distributed stages (`localBelow = 0`), and it
-  * costs one collect job and no shuffle write.
+/** The driver gate of `DedupPipeline.EdgeDag.rows`: under the bound
+  * the driver finisher yields the same alias, exact, MinHash and
+  * SimHash rows, skip rows included, as the distributed plan
+  * (`localBelow = 0`), and it costs one collect job, no broadcast and
+  * no shuffle write.
   */
 class NearDupGateSpec extends SparkSpec {
   import NearDupGateSpec.Shape
@@ -28,15 +29,17 @@ class NearDupGateSpec extends SparkSpec {
     (0 until n).map(i => if (edit > 0 && i % edit == 0) s"alt$i" else s"$tag$i").mkString(" ")
 
   /** `EdgeDag.rows` at `gate` as a multiset, and whether the driver
-    * finisher's local frame is in its plan.
+    * finisher decided them: the whole plan is its local frame (no
+    * opt-in stage is on in these cases).
     */
   private def rowsAt(docs: DataFrame, cfg: DedupPipeline.Config,
       gate: Int): (Map[Row, Int], Boolean) = {
     val dag = new DedupPipeline.EdgeDag(docs, cfg, gate)
     try {
-      val local = dag.rows.queryExecution.analyzed.collectFirst {
-        case l: LocalRelation if l.output.map(_.name) == Seq("src", "dst", "kind", "skipped") => l
-      }.nonEmpty
+      val local = dag.rows.queryExecution.analyzed match {
+        case l: LocalRelation => l.output.map(_.name) == Seq("src", "dst", "kind", "skipped")
+        case _ => false
+      }
       (dag.rows.collect().toSeq.groupBy(identity).view.mapValues(_.size).toMap, local)
     } finally dag.release()
   }
@@ -118,11 +121,112 @@ class NearDupGateSpec extends SparkSpec {
     assert(skipped(rows, "minhash") == 0L && skipped(rows, "simhash") == 0L)
   }
 
+  /** Alias variants of one page (`/`, `?utm_source=feed`, `#top`: the
+    * same page, a near-dup page, an unrelated page) whose canonical
+    * also has an exact dup under another url.
+    */
+  private def aliasVariants = pages(Seq(
+    ("https://a.example/p", words("page", 120)),
+    ("https://a.example/p/", words("page", 120)),
+    ("https://a.example/p?utm_source=feed", words("page", 120, 40)),
+    ("https://a.example/p#top", words("other", 120)),
+    ("https://b.example/q", words("page", 120)),
+    ("https://c.example/r", words("page", 120, 60))))
+
+  /** Urls held more than once: x twice with one page, y with x's page
+    * and with its own, and x's alias x/ twice, once with x's page.
+    */
+  private def repeatedUrls = pages(Seq(
+    ("https://d.example/x", words("page", 120)),
+    ("https://d.example/x", words("page", 120)),
+    ("https://d.example/y", words("page", 120)),
+    ("https://d.example/y", words("else", 120)),
+    ("https://d.example/x/", words("page", 120)),
+    ("https://d.example/x/", words("third", 120, 50))))
+
+  /** Zero-byte pages, one of them under an alias url, beside text pages. */
+  private def zeroBytePages = pages(Seq(
+    ("https://e.example/1", ""), ("https://e.example/2", ""), ("https://e.example/3", ""),
+    ("https://e.example/3/", ""), ("https://e.example/4", words("page", 60)),
+    ("https://e.example/5", words("page", 60, 30))))
+
+  /** A null url holding a named page's text, and one with a page of its own. */
+  private def nullUrls = pages(Seq(
+    (null, words("page", 120)), (null, words("lone", 120)),
+    ("https://n.example/1", words("page", 120)),
+    ("https://n.example/2", words("page", 120, 40))))
+
+  private val cascades = Seq(
+    "default cascade" -> DedupPipeline.Config(),
+    "sha only" -> DedupPipeline.Config(algs = Seq("sha")),
+    "exact only" -> DedupPipeline.Config(useMinHash = false, useSimHash = false))
+
+  private def stagesOf(rows: Map[Row, Int]): Set[String] =
+    rows.keys.map(_.getString(2)).filter(_.startsWith("skip:")).map(_.stripPrefix("skip:")).toSet
+
+  private def nearDupStages(cfg: DedupPipeline.Config): Set[String] =
+    Set("minhash" -> cfg.useMinHash, "simhash" -> cfg.useSimHash).collect { case (k, true) => k }
+
+  for ((what, cfg) <- cascades) {
+    test(s"whole edge DAG on the driver ≡ distributed with alias variants [$what]") {
+      val rows = sameUnderBothGates(aliasVariants, cfg)
+      assert(edgeCount(rows, "alias") == 3)
+      assert(rows.get(Row("https://b.example/q", "https://a.example/p", "exact", 0L)).contains(1))
+      assert(edgeCount(rows, "exact") == 1)
+      assert(stagesOf(rows) == nearDupStages(cfg))
+      if (cfg.useMinHash) assert(edgeCount(rows, "minhash") > 0)
+    }
+
+    test(s"whole edge DAG on the driver ≡ distributed with repeated urls [$what]") {
+      val rows = sameUnderBothGates(repeatedUrls, cfg)
+      // one alias row per losing row: x/ keeps its multiplicity
+      assert(rows.get(Row("https://d.example/x/", "https://d.example/x", "alias", 0L)).contains(2))
+      assert(edgeCount(rows, "alias") == 2)
+      assert(rows.get(Row("https://d.example/y", "https://d.example/x", "exact", 0L)).contains(1))
+      assert(edgeCount(rows, "exact") == 1)
+    }
+
+    test(s"whole edge DAG on the driver ≡ distributed with null urls [$what]") {
+      val rows = sameUnderBothGates(nullUrls, cfg)
+      // a null url is canonical and never an edge end: the near-dup
+      // stages read only the docs with a url
+      assert(rows.keys.forall(r => r.getString(2).startsWith("skip:") ||
+        (r.getString(0) != null && r.getString(1) != null)))
+      assert(edgeCount(rows, "alias") == 0 && edgeCount(rows, "exact") == 0)
+      assert(stagesOf(rows) == nearDupStages(cfg))
+    }
+
+    for (ignoreEmpty <- Seq(false, true))
+      test(s"whole edge DAG on the driver ≡ distributed with zero-byte pages, " +
+          s"ignoreEmpty = $ignoreEmpty [$what]") {
+        val rows = sameUnderBothGates(zeroBytePages, cfg.copy(ignoreEmpty = ignoreEmpty))
+        assert(edgeCount(rows, "alias") == (if (ignoreEmpty) 0 else 1))
+        assert(edgeCount(rows, "exact") == (if (ignoreEmpty) 0 else 2))
+      }
+  }
+
+  test("--byte-verify keys weigh their bytes: pages past the bound take the distributed plan") {
+    val bytes = DedupPipeline.Config(algs = Digests.DefaultAlgs :+ "bytes")
+    // 40 pages of about 8 KB in 8 exact groups: their hex keys weigh
+    // about 670k, over the bound, and their shingles about 48k
+    val big = pages((0 until 40).map(i => (s"https://big.example/$i", words(s"w${i % 8}-", 1200))))
+    val (distributed, bytesLocal) = rowsAt(big, bytes, DriverCollect.NearDupBound)
+    val (local, ranLocally) = rowsAt(big, DedupPipeline.Config(), DriverCollect.NearDupBound)
+    assert(!bytesLocal && ranLocally)
+    // the bytes level splits no block the hashes keep together here
+    assert(distributed == local && edgeCount(local, "exact") == 32)
+    // a small corpus stays on the driver with the bytes level too
+    val small = sameUnderBothGates(aliasVariants, bytes)
+    assert(edgeCount(small, "exact") == 1)
+  }
+
   private def shapeOf[T](body: => T): (T, Shape) = {
     val sc = spark.sparkContext
     val group = s"near-dup-gate-${System.nanoTime()}"
     var jobs = 0
     var collects = 0
+    var broadcasts = 0
+    var aliasBroadcasts = 0
     var records = 0L
     var bytes = 0L
     val stages = scala.collection.mutable.Set.empty[Int]
@@ -133,6 +237,15 @@ class NearDupGateSpec extends SparkSpec {
             jobs += 1
             stages ++= e.stageIds
             if (e.stageInfos.exists(_.name.contains("DriverCollect.scala"))) collects += 1
+            if (Option(e.properties.getProperty("spark.job.tags"))
+                .exists(_.contains("broadcast exchange"))) {
+              broadcasts += 1
+              // the identity pass's loser set is the one checkpoint the
+              // edge DAG's broadcasts read
+              if (e.stageInfos.exists(_.rddInfos.exists(
+                  _.callSite.startsWith("localCheckpoint at DedupPipeline.scala"))))
+                aliasBroadcasts += 1
+            }
           }
       override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
         synchronized {
@@ -151,24 +264,42 @@ class NearDupGateSpec extends SparkSpec {
       org.apache.spark.ListenerBusDrain(sc)
       sc.removeSparkListener(listener)
     }
-    (out, listener.synchronized(Shape(jobs, collects, records, bytes)))
+    (out, listener.synchronized(
+      Shape(jobs, collects, broadcasts, aliasBroadcasts, records, bytes)))
   }
 
+  private def edgeRowsOf(docs: DataFrame, cfg: DedupPipeline.Config, gate: Int): Array[Row] = {
+    val dag = new DedupPipeline.EdgeDag(docs, cfg, gate)
+    try dag.rows.collect() finally dag.release()
+  }
+
+  // pins the shape of the whole edge DAG, not only of its near-dup stages
   test("a 300-doc run decides MinHash and SimHash in one collect job with no shuffle write") {
     val dir = Files.createTempDirectory("graft-gate-shape").toString + "/docs"
     Corpus.docs(spark, 300L).toDF().write.parquet(dir)
     val docs = spark.read.parquet(dir)
+    val cfg = DedupPipeline.Config()
+    // the edge rows: the collect alone, no broadcast, no shuffle row
+    val (local, edges) = shapeOf(edgeRowsOf(docs, cfg, DriverCollect.NearDupBound))
+    assert(edges == Shape(1, 1, 0, 0, 0L, 0L), s"$edges")
+    // the distributed plan, same rows: the collect stops past the
+    // bound and broadcasts nothing; the loser set is broadcast to the
+    // exact cascade's canonical docs and to the held signature pass
+    // (a cached plan of its own), nowhere else
+    val (distributed, at0) = shapeOf(edgeRowsOf(docs, cfg, 0))
+    assert(at0.collects == 1 && at0.aliasBroadcasts == 2 && at0.shuffleRecords > 0, s"$at0")
+    assert(local.toSeq.groupBy(identity).view.mapValues(_.size).toMap ==
+      distributed.toSeq.groupBy(identity).view.mapValues(_.size).toMap)
+
+    // a whole run: the collect, the edge rows' localCheckpoint, the
+    // skip-row collect and connected components' driver finisher; with
+    // the near-dup stages off, the same four jobs
     val off = DedupPipeline.Config(useMinHash = false, useSimHash = false)
     val (_, without) = shapeOf(DedupPipeline.run(docs, off))
-    val (r, on) = shapeOf(DedupPipeline.run(docs))
-    info(s"near-dup stages off: $without; on: $on")
+    val (r, on) = shapeOf(DedupPipeline.run(docs, cfg))
+    info(s"near-dup stages off: $without; on: $on; edge rows at localBelow = 0: $at0")
     assert(r.skippedBucketRows.keySet == Set("minhash", "simhash"))
-    assert(without.collects == 0 && on.collects == 1)
-    // the rest of the run is the same plan: the stages add the collect,
-    // whose query broadcasts the identity pass's alias urls once more
-    // for its canonical docs, and not one shuffled row
-    assert(on.jobs == without.jobs + 2, s"$on vs $without")
-    assert(on.shuffleRecords == without.shuffleRecords, s"$on vs $without")
+    assert(on == Shape(4, 1, 0, 0, 0L, 0L) && without == on, s"$on vs $without")
 
     // a resume reads the edge rows, skip rows included, back from the
     // catalog and never reaches the collect
@@ -176,12 +307,16 @@ class NearDupGateSpec extends SparkSpec {
     val (fresh, staged) = shapeOf(DedupPipeline.runCheckpointed(docs, cat, inputLineage = "g"))
     val (resumed, again) = shapeOf(DedupPipeline.runCheckpointed(docs, cat, inputLineage = "g"))
     assert(staged.collects == 1 && again.collects == 0, s"$staged, then $again")
+    assert(staged.aliasBroadcasts == 0 && again.aliasBroadcasts == 0, s"$staged, then $again")
     assert(resumed.skippedBucketRows == fresh.skippedBucketRows &&
       fresh.skippedBucketRows == r.skippedBucketRows)
   }
 }
 
 object NearDupGateSpec {
-  /** Jobs, driver-collect jobs and shuffle writes of a measured body. */
-  final case class Shape(jobs: Int, collects: Int, shuffleRecords: Long, shuffleBytes: Long)
+  /** Jobs, driver-collect jobs, broadcast jobs (all, and those of the
+    * identity pass's loser set) and shuffle writes of a measured body.
+    */
+  final case class Shape(jobs: Int, collects: Int, broadcasts: Int, aliasBroadcasts: Int,
+      shuffleRecords: Long, shuffleBytes: Long)
 }

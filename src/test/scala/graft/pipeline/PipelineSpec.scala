@@ -187,7 +187,10 @@ class PipelineSpec extends SparkSpec {
   test("the edge plan digests every page once: one digest exchange, initial and final plan") {
     val dir = java.nio.file.Files.createTempDirectory("graft-digest-xchg").toString + "/docs"
     Corpus.docs(spark, 300L).toDF().write.parquet(dir)
-    val dag = new DedupPipeline.EdgeDag(spark.read.parquet(dir), DedupPipeline.Config())
+    // 300 docs fit the driver gate, whose edge rows plan no exchange at
+    // all: localBelow = 0 keeps this on the distributed plan
+    val dag = new DedupPipeline.EdgeDag(spark.read.parquet(dir), DedupPipeline.Config(),
+      localBelow = 0)
     try {
       val rows = dag.rows
       val initial = rows.queryExecution.executedPlan match {
