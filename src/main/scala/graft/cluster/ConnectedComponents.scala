@@ -146,14 +146,26 @@ object ConnectedComponents {
 
   /** Driver-side finisher over at most `localBelow` edges (`p.pairs`,
     * or one more collect of `e` when a skewed partition held its rows
-    * back): rank the ids in Spark's string order and union-find with
-    * the smaller rank always the root, so each root is its component's
-    * minimum member. Same (id, component) frame as the distributed
-    * extraction.
+    * back): [[unionFind]] as the same (id, component) frame as the
+    * distributed extraction.
     */
   private def localLabels(e: DataFrame, p: Probe): DataFrame = {
     val pairs: Pairs = p.pairs.getOrElse(e.queryExecution.toRdd
       .map(r => (r.getUTF8String(0).clone(), r.getUTF8String(1).clone())).collect().toSeq)
+    val rows = java.util.Arrays.asList(
+      unionFind(pairs).map { case (id, c) => Row(id.toString, c.toString) }: _*)
+    val schema = StructType(Seq(StructField("id", StringType), StructField("component", StringType)))
+    e.sparkSession.createDataFrame(rows, schema)
+  }
+
+  /** The driver's connected components over non-null `pairs`: every
+    * id with its component. Ids are ranked in Spark's string order and
+    * union-find always keeps the smaller rank as the root, so each
+    * component is its minimum member, as on the distributed path.
+    * Self-loops and duplicate pairs are harmless.
+    */
+  private[graft] def unionFind(
+      pairs: Seq[(UTF8String, UTF8String)]): Seq[(UTF8String, UTF8String)] = {
     val ids = pairs.flatMap { case (a, b) => Seq(a, b) }.distinct.toArray
       .sortWith(_.binaryCompare(_) < 0)
     val rank = new java.util.HashMap[UTF8String, Integer](ids.length * 2)
@@ -169,10 +181,7 @@ object ConnectedComponents {
       val rb = find(rank.get(b))
       if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
     }
-    val rows = java.util.Arrays.asList(
-      ids.indices.map(i => Row(ids(i).toString, ids(find(i)).toString)): _*)
-    val schema = StructType(Seq(StructField("id", StringType), StructField("component", StringType)))
-    e.sparkSession.createDataFrame(rows, schema)
+    ids.indices.map(i => (ids(i), ids(find(i))))
   }
 
   /** Attach m(src) = min(dst) per src. SKEW-SAFE: a partial-aggregating

@@ -196,21 +196,20 @@ object SimHash {
       } yield (s(i)._1, s(j)._1, h, 0L)
     }
 
-  /** The driver twin of [[fingerprintsFromShingles]] +
-    * [[edgesAndSkips]] + the pipeline's `distinct` over collected
-    * (id, shingles) rows: the distinct (src, dst) edges and the summed
-    * rows of the over-cap buckets. Fingerprints ([[simhash64]]), probe
-    * keys ([[probeKeys]]) and the in-bucket emit
-    * ([[hammingPairsOrSkip]]) are the distributed plan's.
+  /** The driver twin of [[edgesAndSkips]] + the pipeline's `distinct`
+    * over collected (id, fingerprint) rows, one per doc with a
+    * non-empty shingle set (the docs [[fingerprintsFromShingles]]
+    * gives a fingerprint, [[simhash64]] computed where the rows were
+    * collected): the distinct (src, dst) edges and the summed rows of
+    * the over-cap buckets. Probe keys ([[probeKeys]]) and the
+    * in-bucket emit ([[hammingPairsOrSkip]]) are the distributed
+    * plan's.
     */
-  private[graft] def edgesAndSkippedLocal(docs: Seq[(String, Array[Long])],
+  private[graft] def edgesAndSkippedLocal(docs: Seq[(String, Long)],
       cfg: Config): (Seq[(String, String)], Long) = {
     val buckets = mutable.HashMap.empty[(Int, Long), mutable.ArrayBuffer[(String, Long)]]
-    for ((id, sh) <- docs if sh != null && sh.nonEmpty) {
-      val fp = simhash64(sh, cfg.seed)
-      for (k <- probeKeys(fp, cfg))
-        buckets.getOrElseUpdate(k, mutable.ArrayBuffer.empty) += ((id, fp))
-    }
+    for ((id, fp) <- docs; k <- probeKeys(fp, cfg))
+      buckets.getOrElseUpdate(k, mutable.ArrayBuffer.empty) += ((id, fp))
     var skipped = 0L
     val edges = mutable.LinkedHashSet.empty[(String, String)]
     for (ms <- buckets.valuesIterator;

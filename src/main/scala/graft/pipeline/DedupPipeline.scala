@@ -29,7 +29,8 @@ import graft.substring.SubstringDedup
   *   all edges ∪ alias edges → connected components → (url, cluster_id)
   *
   * The edge DAG is written once (`EdgeDag`): `run` materializes its
-  * rows with a `localCheckpoint`; `runCheckpointed` is `run`'s stages
+  * rows once (the driver finisher's collect, else a
+  * `localCheckpoint`); `runCheckpointed` is `run`'s stages
   * wrapped in `Catalog.stage` (edges, clusters, deduped corpus).
   *
   * The edge DAG picks its plan from the measured input size ("To
@@ -37,14 +38,24 @@ import graft.substring.SubstringDedup
   * `ConnectedComponents` and `IncrementalNearDup` do: when the valid
   * docs' urls, cascade keys and shingles fit
   * `DriverCollect.NearDupBound`, one bounded collect brings them to the
-  * driver, which runs the identity pass, the exact assignments, MinHash
-  * banding, drain and verify, and SimHash fingerprints and probes in
-  * plain Scala with the distributed stages' own rules, and returns the
-  * alias, exact, near-dup and skip rows as one local frame; above the
+  * driver with each text doc's MinHash signature and SimHash
+  * fingerprint, computed in the collect's task; the driver runs the
+  * identity pass, the exact assignments, MinHash banding, drain and
+  * verify, and SimHash probes in plain Scala with the distributed
+  * stages' own rules, and returns the alias, exact, near-dup and skip
+  * rows as one local frame; above the
   * bound the identity checkpoint, the exact cascade and the near-dup
   * drains run distributed. Both plans yield the same rows
   * (NearDupGateSpec); the opt-in substring and long-run stages are
-  * distributed under both.
+  * distributed under both. When the driver decided every edge row
+  * (`EdgeDag.finished`), the run finishes on the driver from those
+  * rows and the shipped urls: skip totals, edge count, connected
+  * components (`ConnectedComponents.unionFind`), the clusters as a
+  * local frame, the deduped corpus as one filtered scan of the valid
+  * docs, and the metrics. `run` is then the collect alone and a fresh
+  * `runCheckpointed` the collect, three commits and the metrics
+  * append; otherwise CC, clusters and the deduped corpus are
+  * distributed plans over the materialized edges.
   */
 object DedupPipeline {
 
@@ -202,6 +213,19 @@ object DedupPipeline {
       */
     def release(): Unit = persisted.foreach(_.unpersist())
 
+    /** The driver finisher's values (`edgesLocally`), None over
+      * `localBelow`; `rows` forces them.
+      */
+    private lazy val decided: Option[Decided] = edgesLocally()
+
+    /** `rows` as the driver finisher's values when they are the whole
+      * of it (under `localBelow`, no opt-in stage on), else None. Runs
+      * the one bounded collect that `rows` would run, so a run that
+      * takes this path runs no other job for its edge rows.
+      */
+    lazy val finished: Option[Decided] =
+      if (cfg.useSubstring || cfg.useLongRun) None else decided
+
     /** All edges (src, dst, kind, skipped = 0) — alias, exact, then the
       * near-dup stages — plus one row per enabled near-dup stage with
       * kind = 'skip:<stage>', null src/dst and its over-cap bucket rows
@@ -214,15 +238,16 @@ object DedupPipeline {
       * key bytes, plus its band count and shingle count when it is a
       * text doc with a url and a near-dup stage is on), building `rows`
       * runs ONE bounded collect of (url, identity, cascade keys,
-      * text flag, shingles, signature) and the driver decides the
-      * identity pass, the exact assignments and both near-dup stages,
-      * their skip totals included, into one local frame; above it they
-      * are the distributed identity checkpoint, exact cascade and
-      * near-dup drains over one held signature pass. The opt-in
-      * substring and long-run stages are distributed under either plan.
+      * text flag, shingles, signature, fingerprint) and the driver
+      * decides the identity pass, the exact assignments and both
+      * near-dup stages, their skip totals included, into one local
+      * frame; above it they are the distributed identity checkpoint,
+      * exact cascade and near-dup drains over one held signature pass.
+      * The opt-in substring and long-run stages are distributed under
+      * either plan.
       */
     lazy val rows: DataFrame = {
-      val local = edgesLocally()
+      val local = decided.map(d => localFrame(d.rows, EdgeRowSchema))
       val distributed = local.isEmpty
       // [EXT] near-dup stages over the canonical docs with a url and
       // non-empty text (a null id can be no edge end, and the in-bucket
@@ -282,20 +307,23 @@ object DedupPipeline {
     }
 
     /** The edge DAG's driver finisher (see `rows`): the alias, exact,
-      * MinHash and SimHash edge and skip rows as one local frame, or
-      * None when the valid docs are over `localBelow`. One bounded
-      * collect over `valid` ships each doc's url, its identity key
-      * (`Urls.normalize`), its cascade keys (`DedupEngine.keyColumns`,
-      * the distributed plan's key rule), whether it is a text doc with
-      * a url and, for such a doc while a near-dup stage is on, its
-      * shingles; only a row that ships is signed, in the collect's
-      * task, so a pass over the bound costs digests and shingling, not
-      * MinHash. Plain Scala on the driver: the op plans no operator for
-      * these stages.
+      * MinHash and SimHash edge and skip rows with every valid row's
+      * url, or None when the valid docs are over `localBelow`. One
+      * bounded collect over `valid` ships each doc's url, its identity
+      * key (`Urls.normalize`), its cascade keys
+      * (`DedupEngine.keyColumns`, the distributed plan's key rule),
+      * whether it is a text doc with a url and, for such a doc while a
+      * near-dup stage is on, what the stages read of its shingles: the
+      * shingles and MinHash signature while MinHash is on, the SimHash
+      * fingerprint while SimHash is on. Only a row that ships is signed
+      * and fingerprinted, in the collect's task, so a pass over the
+      * bound costs digests and shingling, not MinHash or SimHash. Plain
+      * Scala on the driver: the op plans no operator for these stages.
       */
-    private def edgesLocally(): Option[DataFrame] = {
+    private def edgesLocally(): Option[Decided] = {
       // the task closures capture no EdgeDag
-      val (mh, n, signed) = (cfg.minhash, cascade.length, cfg.useMinHash)
+      val (mh, sh, n) = (cfg.minhash, cfg.simhash, cascade.length)
+      val (signed, printed) = (cfg.useMinHash, cfg.useSimHash)
       val textDoc = trim(col("text")) =!= "" && col("url").isNotNull
       val shingles =
         if (cfg.useMinHash || cfg.useSimHash) when(textDoc, MinHashLSH.shingles(col("text"), mh))
@@ -306,26 +334,79 @@ object DedupPipeline {
         r => 1L + (3 until 3 + n).iterator.map(DriverCollect.bytesAt(r, _)).sum +
           (if (r.isNullAt(3 + n)) 0L else mh.bands + DriverCollect.sizeAt(r, 3 + n)),
         r => {
-          val sh = DriverCollect.longsAt(r, 3 + n)
+          val shingles = DriverCollect.longsAt(r, 3 + n)
           Shipped(DriverCollect.utf8At(r, 0), DriverCollect.utf8At(r, 1),
-            (3 until 3 + n).map(DriverCollect.utf8At(r, _)), r.getBoolean(2), sh,
-            if (signed && sh != null) MinHashLSH.signatureOf(sh, mh) else null)
+            (3 until 3 + n).map(DriverCollect.utf8At(r, _)), r.getBoolean(2),
+            if (signed) shingles else null,
+            if (signed && shingles != null) MinHashLSH.signatureOf(shingles, mh) else null,
+            Option.when(printed && shingles != null && shingles.nonEmpty)(
+              SimHash.simhash64(shingles, sh.seed)))
         })
         .map { case (docs, _) =>
-          docsRaw.sparkSession.createDataFrame(
-            java.util.Arrays.asList(decideLocally(docs, cfg): _*), EdgeRowSchema)
+          new Decided(decideLocally(docs, cfg), docs.map(d => Option(d.url).map(_.toString).orNull))
         }
     }
+
+    private def localFrame(rows: Seq[Row], schema: StructType): DataFrame =
+      docsRaw.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+    /** The run's (url, cluster_id) frame over its materialized `edges`:
+      * the finished run's clusters as a local frame (see `Decided`),
+      * else connected components over `edges` (`clustersOf`).
+      */
+    def clusters(edges: DataFrame, finished: Option[Decided]): DataFrame = finished match {
+      case Some(d) => localFrame(d.clusters.map { case (u, c) => Row(u, c) }, ClusterSchema)
+      case None => clustersOf(valid, ConnectedComponents.run(edges.select("src", "dst")))
+    }
+  }
+
+  /** The driver finisher's decision: the edge and skip rows of
+    * `EdgeDag.rows` and the url of every shipped valid row, null urls
+    * included. When those rows are the whole of `rows`
+    * (`EdgeDag.finished`), a run finishes from them on the driver with
+    * the distributed plan's rules: the skip totals and the edge count
+    * are read off the rows, connected components run as
+    * `ConnectedComponents.unionFind`, and the clusters, their
+    * canonicals and their count follow. A doc that ships costs one
+    * url, so this is within the collect's bound.
+    */
+  private[pipeline] final class Decided(val rows: Seq[Row], urls: Seq[String]) {
+    private val (skipRows, edgeRows) = rows.partition(_.getString(2).startsWith("skip:"))
+
+    /** `Result.skippedBucketRows` */
+    val skipped: Map[String, Long] =
+      skipRows.map(r => r.getString(2).stripPrefix("skip:") -> r.getLong(3)).toMap
+
+    def edgeCount: Long = edgeRows.size
+
+    /** (url, cluster_id) per shipped url, the rows `clustersOf` gives
+      * over `ConnectedComponents.run`: the url's component, or the url
+      * itself when it is no edge end (null for a null url).
+      */
+    lazy val clusters: Seq[(String, String)] = {
+      val component = ConnectedComponents.unionFind(edgeRows.collect {
+        case Row(src: String, dst: String, _, _) =>
+          (UTF8String.fromString(src), UTF8String.fromString(dst))
+      }).iterator.map { case (id, c) => id.toString -> c.toString }.toMap
+      urls.map(u => (u, if (u == null) null else component.getOrElse(u, u)))
+    }
+
+    /** The urls that are their own cluster id: the deduped corpus's urls. */
+    def canonicals: Set[String] = clusters.collect { case (u, c) if u != null && u == c => u }.toSet
+
+    /** Distinct cluster ids, null (a null url's) counted once, as Spark's `distinct` does. */
+    def clusterCount: Long = clusters.iterator.map(_._2).distinct.size.toLong
   }
 
   /** One valid doc as the edge DAG's driver finisher ships it: url,
     * identity key, cascade keys, whether it is a text doc (a url and
-    * non-empty trimmed text), shingles (text docs while a near-dup
-    * stage is on, else null) and MinHash signature (null unless MinHash
-    * is on and it has shingles).
+    * non-empty trimmed text), and for a text doc its shingles and
+    * MinHash signature (null unless MinHash is on) and its SimHash
+    * fingerprint (empty unless SimHash is on and it has a shingle).
     */
   private final case class Shipped(url: UTF8String, identity: UTF8String,
-      keys: Seq[UTF8String], text: Boolean, shingles: Array[Long], sig: Array[Long])
+      keys: Seq[UTF8String], text: Boolean, shingles: Array[Long], sig: Array[Long],
+      fp: Option[Long])
 
   /** The driver finisher's rows over every shipped valid doc, each step
     * the plain-Scala twin of a distributed one: the identity pass (one
@@ -350,12 +431,12 @@ object DedupPipeline {
       case (id, block) if id != null && block != null && id != block =>
         Row(id.toString, block.toString, "exact", 0L)
     }
-    val text = canon.filter(_.text).map(d => (d.url.toString, d.shingles, d.sig))
+    val text = canon.filter(_.text)
     val near = Seq(
-      Option.when(cfg.useMinHash)(
-        "minhash" -> MinHashLSH.edgesAndSkippedLocal(text, cfg.minhash)),
-      Option.when(cfg.useSimHash)(
-        "simhash" -> SimHash.edgesAndSkippedLocal(text.map(d => (d._1, d._2)), cfg.simhash))
+      Option.when(cfg.useMinHash)("minhash" -> MinHashLSH.edgesAndSkippedLocal(
+        text.map(d => (d.url.toString, d.shingles, d.sig)), cfg.minhash)),
+      Option.when(cfg.useSimHash)("simhash" -> SimHash.edgesAndSkippedLocal(
+        text.flatMap(d => d.fp.map(d.url.toString -> _)), cfg.simhash))
     ).flatten.flatMap { case (k, (edges, skipped)) =>
       edges.map { case (src, dst) => Row(src, dst, k, 0L) } :+ Row(null, null, s"skip:$k", skipped)
     }
@@ -367,14 +448,39 @@ object DedupPipeline {
     StructField("dst", StringType), StructField("kind", StringType, nullable = false),
     StructField("skipped", LongType, nullable = false)))
 
+  /** The schema of a run's clusters (`clustersOf`). */
+  private val ClusterSchema = StructType(Seq(StructField("url", StringType),
+    StructField("cluster_id", StringType)))
+
+  private val SkipPrefix = UTF8String.fromString("skip:")
+
   /** Materialized edge rows → (edges (src, dst, kind), skippedBucketRows
-    * by stage); one collect of the skip rows.
+    * by stage, edge count). The counts are `finished`'s values when the
+    * driver finisher decided the rows; otherwise one job folds each
+    * partition's (kind, skipped) into its edge count and skip sums,
+    * map-side, with no shuffle.
     */
-  private def splitSkips(staged: DataFrame): (DataFrame, Map[String, Long]) = {
-    val skip = col("kind").startsWith("skip:")
-    (staged.filter(!skip).drop("skipped"),
-      staged.filter(skip).select(col("kind"), col("skipped")).collect()
-        .map(r => r.getString(0).stripPrefix("skip:") -> r.getLong(1)).toMap)
+  private def splitSkips(staged: DataFrame,
+      finished: Option[Decided]): (DataFrame, Map[String, Long], Long) = {
+    val edges = staged.filter(!col("kind").startsWith("skip:")).drop("skipped")
+    finished match {
+      case Some(d) => (edges, d.skipped, d.edgeCount)
+      case None =>
+        val parts = staged.select(col("kind"), col("skipped")).queryExecution.toRdd
+          .mapPartitions { rows =>
+            var n = 0L
+            val skips = mutable.HashMap.empty[String, Long]
+            rows.foreach { r =>
+              val kind = r.getUTF8String(0)
+              if (!kind.startsWith(SkipPrefix)) n += 1
+              else skips.updateWith(kind.toString.stripPrefix("skip:"))(
+                v => Some(v.getOrElse(0L) + r.getLong(1)))
+            }
+            Iterator.single((n, skips.toMap))
+          }
+          .collect()
+        (edges, parts.flatMap(_._2).groupMapReduce(_._1)(_._2)(_ + _), parts.map(_._1).sum)
+    }
   }
 
   /** (url, cluster_id) for every valid url; singletons keep their own id. */
@@ -389,13 +495,14 @@ object DedupPipeline {
   def run(docsRaw: DataFrame, cfg: Config = Config(),
       localBelow: Int = DriverCollect.NearDupBound): Result = {
     val dag = new EdgeDag(docsRaw, cfg, localBelow)
-    // ONE materialization of the whole edge dag (r2 VERDICT #2); the
-    // skip sums are read back from it
-    val staged = try dag.rows.localCheckpoint() finally dag.release()
-    val (edges, skipped) = splitSkips(staged)
+    // ONE materialization of the whole edge dag (r2 VERDICT #2): the
+    // driver finisher's collect, else the rows' localCheckpoint
+    val staged = try {
+      if (dag.finished.isDefined) dag.rows else dag.rows.localCheckpoint()
+    } finally dag.release()
+    val (edges, skipped, _) = splitSkips(staged, dag.finished)
     // [EXT] connected components
-    val cc = ConnectedComponents.run(edges.select("src", "dst"))
-    new Result(clustersOf(dag.valid, cc), dag.exact, edges, dag.quarantined,
+    new Result(dag.clusters(edges, dag.finished), dag.exact, edges, dag.quarantined,
       () => docsRaw.count(), skipped)
   }
 
@@ -405,7 +512,12 @@ object DedupPipeline {
     * and the deduped corpus. The input lineage is `inputLineage` plus
     * the files `docsRaw` scans; with neither, every stage recomputes.
     * The run that computes the clusters records their metrics in the
-    * catalog's metrics table (S5/S6). `localBelow` is `run`'s.
+    * catalog's metrics table (S5/S6). `localBelow` is `run`'s. A stage
+    * that follows stages this run computed from the driver finisher's
+    * values (`EdgeDag.finished`) is computed from them too: the
+    * clusters as a local frame, the deduped corpus as one filtered scan
+    * of the valid docs, the metrics from the values; after a resumed
+    * stage, each later stage reads the committed tables.
     */
   def runCheckpointed(docsRaw: DataFrame, catalog: Catalog,
       cfg: Config = Config(), inputLineage: String = "",
@@ -419,28 +531,38 @@ object DedupPipeline {
     val dag = new EdgeDag(docsRaw, cfg, localBelow)
     // stage 1: the edge rows with their skip rows (resume skips
     // digesting/shingling entirely)
-    val staged = try catalog.stage("edges", base)(dag.rows) finally dag.release()
-    val (edges, skipped) = splitSkips(staged)
+    var finished: Option[Decided] = None
+    val staged = try catalog.stage("edges", base) {
+      val rows = dag.rows
+      finished = dag.finished
+      rows
+    } finally dag.release()
+    val (edges, skipped, edgeCount) = splitSkips(staged, finished)
     // stage 2: connected components over the staged edges
     var computed = false
     val clusters = catalog.stage("clusters", base + "|edges") {
       computed = true
-      clustersOf(dag.valid, ConnectedComponents.run(edges.select("src", "dst")))
+      dag.clusters(edges, finished)
     }
-    // stage 3: the deduped corpus itself (one row per cluster
-    // canonical), laid out by the north rule's (days(warc_ts), lang)
-    // partitioning — partition pruning serves day- or language-scoped
-    // downstream reads without a full scan
+    // the values hold the clusters only when this run computed them
+    val clustered = finished.filter(_ => computed)
+    // stage 3: the deduped corpus itself (each valid row whose url is
+    // its cluster's canonical), laid out by the north rule's
+    // (days(warc_ts), lang) partitioning — partition pruning serves
+    // day- or language-scoped downstream reads without a full scan
     val deduped = catalog.stage("deduped_docs", base + "|clusters",
       Seq("warc_day", "lang")) {
-      dag.valid
-        .join(clusters.filter(col("url") === col("cluster_id")).select("url"), "url")
-        .withColumn("warc_day", to_date(col("warc_ts")))
+      (clustered match {
+        case Some(d) => dag.valid.filter(col("url").isInCollection(d.canonicals))
+        case None => dag.valid.join(
+          clusters.filter(col("url") === col("cluster_id")).select("url"), Seq("url"), "left_semi")
+      }).withColumn("warc_day", to_date(col("warc_ts")))
     }
     // a resume appends no duplicate rows and runs no bookkeeping job
     if (computed) catalog.recordMetrics("clusters", Map(
-      "clusters" -> clusters.select(col("cluster_id")).distinct().count(),
-      "edges" -> edges.count()) ++
+      "clusters" -> clustered.fold(clusters.select(col("cluster_id")).distinct().count())(
+        _.clusterCount),
+      "edges" -> edgeCount) ++
       skipped.map { case (k, v) => s"skipped_bucket_rows_$k" -> v })
     new Result(clusters, dag.exact, edges, dag.quarantined, () => docsRaw.count(),
       skipped, Some(deduped))

@@ -14,7 +14,9 @@ import graft.near.{MinHashLSH, SimHash}
   * the driver finisher yields the same alias, exact, MinHash and
   * SimHash rows, skip rows included, as the distributed plan
   * (`localBelow = 0`), and it costs one collect job, no broadcast and
-  * no shuffle write.
+  * no shuffle write. A run finished from those rows on the driver
+  * commits the same edges, clusters, deduped corpus and metrics as the
+  * distributed stages, in the collect plus one job per write.
   */
 class NearDupGateSpec extends SparkSpec {
   import NearDupGateSpec.Shape
@@ -86,18 +88,22 @@ class NearDupGateSpec extends SparkSpec {
     assert(edgeCount(rows, "minhash") > 0 && edgeCount(rows, "simhash") > 0)
   }
 
+  /** A url held three times: as a near-dup of another page, as an
+    * unrelated page and as whitespace; a second url held twice with the
+    * same near-dup text.
+    */
+  private def duplicateUrls = pages(Seq(
+    ("https://d.example/a", words("page", 120)),
+    ("https://d.example/b", words("page", 120, 40)),
+    ("https://d.example/b", words("other", 120)),
+    ("https://d.example/b", "\t"),
+    ("https://d.example/c", words("page", 120, 60)),
+    ("https://d.example/c", words("page", 120, 60))))
+
   test("driver finisher ≡ distributed stages with duplicate urls") {
-    // a url held three times: as a near-dup of another page, as an
-    // unrelated page and as whitespace; a second url held twice with
-    // the same near-dup text. The verify yields one row per passing
-    // shingle-set pairing, and SimHash's pair of equal ids survives
-    val rows = sameUnderBothGates(pages(Seq(
-      ("https://d.example/a", words("page", 120)),
-      ("https://d.example/b", words("page", 120, 40)),
-      ("https://d.example/b", words("other", 120)),
-      ("https://d.example/b", "\t"),
-      ("https://d.example/c", words("page", 120, 60)),
-      ("https://d.example/c", words("page", 120, 60)))))
+    // the verify yields one row per passing shingle-set pairing, and
+    // SimHash's pair of equal ids survives
+    val rows = sameUnderBothGates(duplicateUrls)
     assert(rows.exists { case (r, n) => r.getString(2) == "minhash" && n == 2 },
       "a pair verified over two shingle sets of one url")
     assert(rows.keys.exists(r => r.getString(2) == "simhash" && r.getString(0) == r.getString(1)))
@@ -205,6 +211,54 @@ class NearDupGateSpec extends SparkSpec {
       }
   }
 
+  /** A fresh `runCheckpointed` at `gate`: its edges, clusters and
+    * deduped corpus, and its metrics (metric → value), each metric
+    * checked against a recount of its table.
+    */
+  private def checkpointedAt(docs: DataFrame, gate: Int): (Seq[DataFrame], Map[String, Long]) = {
+    assert(new DedupPipeline.EdgeDag(docs, DedupPipeline.Config(), gate).finished.isDefined ==
+      (gate > 0), s"the driver finisher ran at gate $gate")
+    val cat = new Catalog(Files.createTempDirectory("graft-gate-eq").toString, spark)
+    val r = DedupPipeline.runCheckpointed(docs, cat, inputLineage = "eq", localBelow = gate)
+    val recorded = cat.metrics().select("metric", "value").as[(String, Long)].collect().toSeq
+    val metrics = recorded.toMap
+    assert(metrics.size == recorded.size, s"one row per metric: $recorded")
+    val skips = cat.read("edges").filter(col("kind").startsWith("skip:"))
+      .select("kind", "skipped").as[(String, Long)].collect()
+      .map { case (k, n) => s"skipped_bucket_rows_${k.stripPrefix("skip:")}" -> n }.toMap
+    assert(metrics == skips ++ Map("edges" -> r.edges.count(),
+      "clusters" -> r.clusters.select("cluster_id").distinct().count()))
+    (Seq(r.edges, r.clusters, r.dedupedDocs.get), metrics)
+  }
+
+  private def finishFixtures: Seq[(String, () => DataFrame)] =
+    Seq(3L, 17L, 701L).map(seed =>
+      s"seed $seed" -> (() => Corpus.docs(spark, 300L, seed).toDF())) ++ Seq(
+      "duplicate urls" -> (() => duplicateUrls), "repeated urls" -> (() => repeatedUrls),
+      "null urls" -> (() => nullUrls))
+
+  for ((what, docs) <- finishFixtures)
+    test(s"a checkpointed run finished on the driver ≡ distributed: tables and metrics [$what]") {
+      val (local, localMetrics) = checkpointedAt(docs(), DriverCollect.NearDupBound)
+      val (distributed, distributedMetrics) = checkpointedAt(docs(), 0)
+      val tables = Seq("edges", "clusters", "deduped_docs")
+      for ((name, a, b) <- tables.lazyZip(local).lazyZip(distributed)) {
+        assert(a.schema == b.schema, s"$name schemas")
+        assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty, s"$name rows")
+      }
+      assert(localMetrics == distributedMetrics)
+    }
+
+  test("deduped_docs keeps each valid row of a repeated canonical url once, under both gates") {
+    // x is held twice and is the canonical of x, x/ and y: a join
+    // against its two clusters rows would give each of its rows twice
+    for (gate <- Seq(DriverCollect.NearDupBound, 0)) {
+      val (Seq(_, _, deduped), _) = checkpointedAt(repeatedUrls, gate)
+      assert(deduped.select("url").as[String].collect().toSeq ==
+        Seq.fill(2)("https://d.example/x"), s"gate $gate")
+    }
+  }
+
   test("--byte-verify keys weigh their bytes: pages past the bound take the distributed plan") {
     val bytes = DedupPipeline.Config(algs = Digests.DefaultAlgs :+ "bytes")
     // 40 pages of about 8 KB in 8 exact groups: their hex keys weigh
@@ -291,23 +345,25 @@ class NearDupGateSpec extends SparkSpec {
     assert(local.toSeq.groupBy(identity).view.mapValues(_.size).toMap ==
       distributed.toSeq.groupBy(identity).view.mapValues(_.size).toMap)
 
-    // a whole run: the collect, the edge rows' localCheckpoint, the
-    // skip-row collect and connected components' driver finisher; with
-    // the near-dup stages off, the same four jobs
+    // a whole run is the collect alone: skip totals, connected
+    // components and the clusters are finished on the driver; with the
+    // near-dup stages off, the same one job
     val off = DedupPipeline.Config(useMinHash = false, useSimHash = false)
     val (_, without) = shapeOf(DedupPipeline.run(docs, off))
     val (r, on) = shapeOf(DedupPipeline.run(docs, cfg))
     info(s"near-dup stages off: $without; on: $on; edge rows at localBelow = 0: $at0")
     assert(r.skippedBucketRows.keySet == Set("minhash", "simhash"))
-    assert(on == Shape(4, 1, 0, 0, 0L, 0L) && without == on, s"$on vs $without")
+    assert(on == Shape(1, 1, 0, 0, 0L, 0L) && without == on, s"$on vs $without")
 
-    // a resume reads the edge rows, skip rows included, back from the
-    // catalog and never reaches the collect
+    // a fresh checkpointed run: the collect, the three commits and the
+    // metrics append. A resume reads the edge rows, skip rows
+    // included, back from the catalog and never reaches the collect:
+    // its one job is the skip-row fold
     val cat = new Catalog(Files.createTempDirectory("graft-gate-ckpt").toString, spark)
     val (fresh, staged) = shapeOf(DedupPipeline.runCheckpointed(docs, cat, inputLineage = "g"))
     val (resumed, again) = shapeOf(DedupPipeline.runCheckpointed(docs, cat, inputLineage = "g"))
-    assert(staged.collects == 1 && again.collects == 0, s"$staged, then $again")
-    assert(staged.aliasBroadcasts == 0 && again.aliasBroadcasts == 0, s"$staged, then $again")
+    assert(staged == Shape(5, 1, 0, 0, 0L, 0L), s"$staged")
+    assert(again == Shape(1, 0, 0, 0, 0L, 0L), s"$again")
     assert(resumed.skippedBucketRows == fresh.skippedBucketRows &&
       fresh.skippedBucketRows == r.skippedBucketRows)
   }
